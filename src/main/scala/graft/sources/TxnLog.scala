@@ -7,7 +7,8 @@ import java.util.UUID
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Row, SparkSession}
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DataType, DateType, LongType,
+  NumericType, StringType, StructField, StructType, TimestampType}
 
 /** Minimal ACID table format: a parquet directory governed by an ordered
   * commit log — the missing capability the judge flagged when porting the
@@ -331,24 +332,30 @@ object TxnLog {
     * a replay starting from a checkpoint written after a protocol
     * bump must re-enforce the guard, exactly Delta persisting the
     * protocol action in every checkpoint). */
-  private[sources] final case class State(live: Seq[String],
-                                 schemaJson: Option[String],
-                                 checks: Map[String, String],
-                                 txn: Map[String, Long],
-                                 stats: Map[(String, String), (Long, Long)],
+  private[sources] final case class State(live: Seq[String] = Nil,
+                                 schemaJson: Option[String] = None,
+                                 checks: Map[String, String] = Map.empty,
+                                 txn: Map[String, Long] = Map.empty,
+                                 stats: Map[(String, String), (Long, Long)] =
+                                   Map.empty,
                                  blooms: Map[(String, String),
-                                   (Int, Int, Array[Long])],
-                                 rowcounts: Map[String, Long],
-                                 dvFiles: Seq[String],
-                                 dvCounts: Map[String, Long],
-                                 sizes: Map[String, Long],
-                                 props: Map[String, String],
+                                   (Int, Int, Array[Long])] = Map.empty,
+                                 rowcounts: Map[String, Long] = Map.empty,
+                                 dvFiles: Seq[String] = Nil,
+                                 dvCounts: Map[String, Long] = Map.empty,
+                                 sizes: Map[String, Long] = Map.empty,
+                                 props: Map[String, String] = Map.empty,
                                  minReader: Long = 1L,
                                  minWriter: Long = 1L,
                                  idHigh: Map[String, Long] = Map.empty,
                                  rowBases: Map[String, Long] = Map.empty,
                                  rowHigh: Long = 0L,
-                                 copied: Set[String] = Set.empty)
+                                 copied: Set[String] = Set.empty) {
+    /** The declared schema, None for tables created before tracking. */
+    def declared: Option[StructType] =
+      schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+    def mappingOn: Boolean = props.get("columnMapping").contains("name")
+  }
 
   /** Replay state at `upTo`. Starts from the newest checkpoint ≤ upTo
     * when one exists, else from the log's beginning. Memoized — see
@@ -726,16 +733,21 @@ object TxnLog {
     out.toSeq
   }
 
-  /** The file set a reader at `asOf` (default: latest) scans: replay
-    * adds minus removes from the newest checkpoint ≤ asOf (or the log
-    * start), so planning cost is O(commits since checkpoint). */
-  def files(table: String, asOf: Option[Long] = None): Seq[String] = {
+  /** Replay state a reader at `asOf` (default: latest) sees; a
+    * non-table or a version missing from the log refuses. */
+  private def stateAt(table: String, asOf: Option[Long]): State = {
     val vs = versions(table)
     require(vs.nonEmpty, s"not a TxnLog table: $table")
     val upTo = asOf.getOrElse(vs.last)
     require(vs.contains(upTo), s"version $upTo not in log (have $vs)")
-    replayState(table, upTo).live
+    replayState(table, upTo)
   }
+
+  /** The file set a reader at `asOf` (default: latest) scans: replay
+    * adds minus removes from the newest checkpoint ≤ asOf (or the log
+    * start), so planning cost is O(commits since checkpoint). */
+  def files(table: String, asOf: Option[Long] = None): Seq[String] =
+    stateAt(table, asOf).live
 
   /** TIMESTAMP time travel (Delta's `timestampAsOf`): the newest
     * version whose commit time is ≤ `tsMillis`. Commit time is the log
@@ -774,14 +786,8 @@ object TxnLog {
     * travel returns the schema THAT version declared — an evolved
     * column does not exist in pre-evolution snapshots. */
   def declaredSchema(table: String,
-                     asOf: Option[Long] = None): Option[StructType] = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"not a TxnLog table: $table")
-    val upTo = asOf.getOrElse(vs.last)
-    require(vs.contains(upTo), s"version $upTo not in log (have $vs)")
-    replayState(table, upTo).schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-  }
+                     asOf: Option[Long] = None): Option[StructType] =
+    stateAt(table, asOf).declared
 
   // ─── partitioned layout ────────────────────────────────────────────
 
@@ -1033,13 +1039,8 @@ object TxnLog {
   /** Snapshot read, optionally time-traveled to an older version. */
   def snapshot(spark: SparkSession, table: String,
                asOf: Option[Long] = None): DataFrame = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"not a TxnLog table: $table")
-    val upTo = asOf.getOrElse(vs.last)
-    require(vs.contains(upTo), s"version $upTo not in log (have $vs)")
-    val st = replayState(table, upTo)
-    val declared =
-      st.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+    val st = stateAt(table, asOf)
+    val declared = st.declared
     if (st.live.isEmpty)
       // a DDL-first table before its first load (or a table whose
       // contents were fully deleted): an empty relation with the
@@ -1101,16 +1102,11 @@ object TxnLog {
     * committed rowcounts, pure metadata). */
   def snapshotWithRowIds(spark: SparkSession, table: String,
                          asOf: Option[Long] = None): DataFrame = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"not a TxnLog table: $table")
-    val upTo = asOf.getOrElse(vs.last)
-    require(vs.contains(upTo), s"version $upTo not in log (have $vs)")
-    val st = replayState(table, upTo)
+    val st = stateAt(table, asOf)
     require(rowTrackingOn(st),
       s"row tracking is not enabled on $table — ALTER TABLE … SET " +
         s"TBLPROPERTIES ('$RowTrackKey'='true') first")
-    val declared =
-      st.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+    val declared = st.declared
     if (st.live.isEmpty)
       return emptyDf(spark, StructType(
         declared.getOrElse(sys.error(
@@ -1154,15 +1150,10 @@ object TxnLog {
                        intervals: Seq[(String, Long, Long)],
                        asOf: Option[Long] = None): DataFrame = {
     require(intervals.nonEmpty, "need at least one (column, lo, hi)")
-    val vs = versions(table)
-    require(vs.nonEmpty, s"not a TxnLog table: $table")
-    val upTo = asOf.getOrElse(vs.last)
-    // mirror files(): a typo'd time-travel version must FAIL, not
-    // silently replay the floor state and return plausible wrong data
-    require(vs.contains(upTo), s"version $upTo not in log (have $vs)")
-    val st = replayState(table, upTo)
-    val schema =
-      st.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+    // a typo'd time-travel version must FAIL, not silently replay the
+    // floor state and return plausible wrong data
+    val st = stateAt(table, asOf)
+    val schema = st.declared
     val keep = st.live.filter { f =>
       intervals.forall { case (c, lo, hi) =>
         st.stats.get((f, c)) match {
@@ -1288,13 +1279,8 @@ object TxnLog {
   def snapshotWhereEq(spark: SparkSession, table: String, colName: String,
                       value: Any, asOf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val vs = versions(table)
-    require(vs.nonEmpty, s"not a TxnLog table: $table")
-    val upTo = asOf.getOrElse(vs.last)
-    require(vs.contains(upTo), s"version $upTo not in log (have $vs)")
-    val st = replayState(table, upTo)
-    val schema =
-      st.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+    val st = stateAt(table, asOf)
+    val schema = st.declared
     if (st.live.isEmpty)
       // DDL-first table before its first load / fully-deleted table:
       // same empty-relation contract as snapshot/snapshotWhere
@@ -1432,14 +1418,12 @@ object TxnLog {
     * footer is already local after the stage). Every data-writing
     * commit records them, which is what makes [[countRows]] a pure
     * metadata operation. */
-  private def rowcountLines(table: String, named: Seq[String],
-                            foot: Seq[StagedFooter] = null): Seq[String] = {
+  private def rowcountLines(foot: Seq[StagedFooter]): Seq[String] =
     // size rides the same commit (Delta's add.size): read planning
     // then never stats a data file — at 1M files on an object store
     // that is 1M HEAD requests the log already paid for
-    Option(foot).getOrElse(readFooters(table, named)).flatMap(f =>
+    foot.flatMap(f =>
       Seq(s"rowcount\t${f.name}\t${f.rows}", s"fsize\t${f.name}\t${f.bytes}"))
-  }
 
   /** `count(*)` answered from the LOG alone — the sum of the live
     * files' committed rowcounts, zero data I/O (Delta answers
@@ -1448,11 +1432,7 @@ object TxnLog {
     * predates rowcount recording — the caller falls back to counting
     * the snapshot; a metadata count must never guess. */
   def countRows(table: String, asOf: Option[Long] = None): Option[Long] = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"not a TxnLog table: $table")
-    val upTo = asOf.getOrElse(vs.last)
-    require(vs.contains(upTo), s"version $upTo not in log (have $vs)")
-    val st = replayState(table, upTo)
+    val st = stateAt(table, asOf)
     if (st.live.forall(st.rowcounts.contains))
       // deletion vectors subtract exactly: every DV commit journals its
       // per-file victim counts, and a rewritten file drops its entry
@@ -1475,14 +1455,9 @@ object TxnLog {
                     asOf: Option[Long] = None): Option[(Long, Long)] = {
     import org.apache.spark.sql.types.{ByteType, DateType, IntegerType,
       ShortType}
-    val vs = versions(table)
-    require(vs.nonEmpty, s"not a TxnLog table: $table")
-    val upTo = asOf.getOrElse(vs.last)
-    require(vs.contains(upTo), s"version $upTo not in log (have $vs)")
-    val st = replayState(table, upTo)
+    val st = stateAt(table, asOf)
     if (st.dvCounts.nonEmpty) return None
-    val exactType = st.schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    val exactType = st.declared
       .flatMap(_.fields.find(_.name == colName))
       .exists(_.dataType match {
         case ByteType | ShortType | IntegerType | LongType | DateType =>
@@ -1501,11 +1476,7 @@ object TxnLog {
     * no-guessing contract. */
   def partitionRowCounts(table: String, asOf: Option[Long] = None)
       : Option[Map[Seq[(String, String)], Long]] = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"not a TxnLog table: $table")
-    val upTo = asOf.getOrElse(vs.last)
-    require(vs.contains(upTo), s"version $upTo not in log (have $vs)")
-    val st = replayState(table, upTo)
+    val st = stateAt(table, asOf)
     if (!st.live.forall(st.rowcounts.contains)) None
     else Some(st.live.groupBy(partValuesOf)
       .view.mapValues(_.map(f =>
@@ -1517,14 +1488,8 @@ object TxnLog {
     * metadata (SHOW PARTITIONS' payload). */
   def partitionValues(table: String,
                       asOf: Option[Long] = None)
-      : Set[Seq[(String, String)]] = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"not a TxnLog table: $table")
-    val upTo = asOf.getOrElse(vs.last)
-    require(vs.contains(upTo), s"version $upTo not in log (have $vs)")
-    replayState(table, upTo).live
-      .map(partValuesOf).filter(_.nonEmpty).toSet
-  }
+      : Set[Seq[(String, String)]] =
+    stateAt(table, asOf).live.map(partValuesOf).filter(_.nonEmpty).toSet
 
   // ─── staging ───────────────────────────────────────────────────────
 
@@ -1629,7 +1594,6 @@ object TxnLog {
   private def canonicalCol(df: DataFrame, c: String)
       : org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{DateType, LongType, TimestampType}
     df.schema(c).dataType match {
       case DateType | TimestampType =>
         datediff(to_date(col(c)), to_date(lit("1970-01-01")))
@@ -1637,6 +1601,24 @@ object TxnLog {
       case _ => col(c).cast(LongType)
     }
   }
+
+  /** Whether [[canonicalCol]] has a long form for a type: numerics,
+    * booleans (0/1), and dates/timestamps as epoch days. A string has
+    * none — its cast to LONG fails at run time on the first non-numeric
+    * value. */
+  private def statsType(dt: DataType): Boolean = dt match {
+    case _: NumericType | BooleanType | DateType | TimestampType => true
+    case _ => false
+  }
+
+  /** Refuse requested stats columns without a long form, naming the
+    * column and its type — called before a writer stages anything. */
+  private def checkStatsCols(schema: StructType, cols: Seq[String]): Unit =
+    cols.foreach(c => schema.find(_.name == c).foreach(f => require(
+      statsType(f.dataType), s"stats column $c has type " +
+        s"${f.dataType.catalogString}, which has no canonical long form " +
+        "(data skipping needs a numeric, boolean, date or timestamp " +
+        "column)")))
 
   /** One parquet FOOTER read per freshly staged file, shared by every
     * per-commit metadata helper ([[statsLines]], [[idHighLines]],
@@ -1757,13 +1739,10 @@ object TxnLog {
   }
 
   private def statsLines(spark: SparkSession, table: String,
-                         named: Seq[String],
+                         footers: Seq[StagedFooter],
                          statsCols: Seq[String],
-                         phys: Map[String, String] = Map.empty,
-                         foot: Seq[StagedFooter] = null)
-      : Seq[String] = {
-    if (statsCols.isEmpty || named.isEmpty) return Nil
-    val footers = Option(foot).getOrElse(readFooters(table, named))
+                         phys: Map[String, String]): Seq[String] = {
+    if (statsCols.isEmpty || footers.isEmpty) return Nil
     val utc = spark.conf.get("spark.sql.session.timeZone") == "UTC"
     val cols = statsCols.map(c => c -> phys.getOrElse(c, c))
     val fromFooter = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -1781,7 +1760,8 @@ object TxnLog {
         }
       else leftover += ((c, pc))
     }
-    fromFooter.toSeq ++ statsLinesJob(spark, table, named, leftover.toSeq)
+    fromFooter.toSeq ++
+      statsLinesJob(spark, table, footers.map(_.name), leftover.toSeq)
   }
 
   /** The original one-Spark-job stats pass — now only the FALLBACK for
@@ -1797,8 +1777,11 @@ object TxnLog {
     val df = spark.read.parquet(
       named.map(n => new HPath(tablePath(table), n).toString): _*)
     // staged files carry PHYSICAL names; lines are keyed by the LOGICAL
-    // name probes use (same contract as bloomLines)
-    val cols = colPairs.filter { case (_, pc) => df.columns.contains(pc) }
+    // name probes use (same contract as bloomLines). A tracked column
+    // whose type lost its long form (a schema-replacing overwrite) is
+    // skipped — unprunable, never wrong
+    val cols = colPairs.filter { case (_, pc) =>
+      df.columns.contains(pc) && statsType(df.schema(pc).dataType) }
     if (cols.isEmpty) return Nil
     val aggs = cols.flatMap { case (c, pc) => Seq(
       min(canonicalCol(df, pc)).as(s"__mn_$c"),
@@ -1903,18 +1886,22 @@ object TxnLog {
           org.apache.spark.sql.functions
             .expr(f.metadata.getString("CURRENT_DEFAULT"))
             .cast(f.dataType)))
-      // GENERATED columns (Delta's generated-always-as): the declared
-      // expression is the single source of truth — the column is
-      // ALWAYS recomputed from the base columns, whether the batch
-      // omitted it (the normal writer contract) or carried one
-      // (Spark's insert preprocessing pads missing insert-list
-      // columns with NULL, indistinguishable from a user value, so
-      // recompute-always is the only shape that can never drift)
-      d.fields.toSeq.filter(_.metadata.contains(GenKey))
-        .foldLeft(withDefaults)((acc, f) => acc.withColumn(f.name,
-          org.apache.spark.sql.functions
-            .expr(f.metadata.getString(GenKey)).cast(f.dataType)))
+      regenerate(withDefaults, declared)
     }
+
+  /** Recompute GENERATED columns (Delta's generated-always-as): the
+    * declared expression is the single source of truth — the column is
+    * ALWAYS recomputed from the base columns, whether the batch omitted
+    * it (the normal writer contract) or carried one (Spark's insert
+    * preprocessing pads missing insert-list columns with NULL,
+    * indistinguishable from a user value, so recompute-always is the
+    * only shape that can never drift). */
+  private def regenerate(df: DataFrame,
+                         declared: Option[StructType]): DataFrame =
+    declared.toSeq.flatMap(_.fields).filter(_.metadata.contains(GenKey))
+      .foldLeft(df)((acc, f) => acc.withColumn(f.name,
+        org.apache.spark.sql.functions
+          .expr(f.metadata.getString(GenKey)).cast(f.dataType)))
 
   /** Field-metadata key of a GENERATED ALWAYS AS expression. */
   private[sources] val GenKey = "graft.generate"
@@ -1928,14 +1915,12 @@ object TxnLog {
     * statsLines) recording the largest value each identity column now
     * holds, so the NEXT writer reserves beyond it. */
   private def idHighLines(spark: SparkSession, table: String,
-                          named: Seq[String], idCols: Seq[String],
-                          pm: Map[String, String],
-                          foot: Seq[StagedFooter] = null): Seq[String] = {
-    if (idCols.isEmpty || named.isEmpty) return Nil
+                          footers: Seq[StagedFooter], idCols: Seq[String],
+                          pm: Map[String, String]): Seq[String] = {
+    if (idCols.isEmpty || footers.isEmpty) return Nil
     // identity columns are integral (INT32/INT64 plain), so the staged
     // footers' max IS max(col) — zero Spark jobs; anything the footer
     // cannot prove falls back to the original aggregate job
-    val footers = Option(foot).getOrElse(readFooters(table, named))
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     val leftover = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     idCols.map(n => n -> pm.getOrElse(n, n)).foreach { case (c, pc) =>
@@ -1948,7 +1933,8 @@ object TxnLog {
         if (mxs.nonEmpty) out += s"idhigh\t$c\t${mxs.max}"
       } else leftover += ((c, pc))
     }
-    out.toSeq ++ idHighLinesJob(spark, table, named, leftover.toSeq)
+    out.toSeq ++
+      idHighLinesJob(spark, table, footers.map(_.name), leftover.toSeq)
   }
 
   private def idHighLinesJob(spark: SparkSession, table: String,
@@ -2010,26 +1996,21 @@ object TxnLog {
   private def rowTrackingOn(st: State): Boolean =
     st.props.get(RowTrackKey).contains("true")
 
-  /** `rowbase`/`rowhigh` lines for freshly staged data files on a
+  /** `rowbase`/`rowhigh` lines for (file, row count) pairs on a
     * row-tracking table: bases allocated contiguously past the
-    * committed high-water in sorted-name order, counts read straight
-    * off the staged files' parquet FOOTERS on the driver (the same
-    * zero-job read [[rowcountLines]] does). Files that already carry a
-    * materialized [[RidCol]] column (a compaction's output) keep their
-    * rows' ids through that column, but still get a base: the table's
-    * invariant is every live data file has one, and an id is served
-    * from the materialized column FIRST, so the base is only a
-    * fresh-range reservation. Empty for non-tracking tables. */
-  private def rowTrackLines(table: String, named: Seq[String],
-                            st: State,
-                            foot: Seq[StagedFooter] = null): Seq[String] = {
-    if (!rowTrackingOn(st) || named.isEmpty) return Nil
-    val rowsOf = Option(foot).getOrElse(readFooters(table, named))
-      .map(f => f.name -> f.rows).toMap
-    var next = st.rowHigh
-    val lines = named.sorted.map { n =>
+    * committed high-water `high` in sorted-name order. Files that
+    * already carry a materialized [[RidCol]] column (a compaction's
+    * output) keep their rows' ids through that column, but still get
+    * a base: the table's invariant is every live data file has one,
+    * and an id is served from the materialized column FIRST, so the
+    * base is only a fresh-range reservation. */
+  private def rowTrackLines(files: Seq[(String, Long)],
+                            high: Long): Seq[String] = {
+    if (files.isEmpty) return Nil
+    var next = high
+    val lines = files.sortBy(_._1).map { case (n, rows) =>
       val b = next
-      next += rowsOf(n)
+      next += rows
       s"rowbase\t$n\t$b"
     }
     lines :+ s"rowhigh\t$next"
@@ -2045,6 +2026,181 @@ object TxnLog {
       new org.apache.spark.sql.types.MetadataBuilder()
         .withMetadata(f.metadata)
         .putString(PhysKey, s"col-${UUID.randomUUID()}").build())
+
+  // ─── the commit path ───────────────────────────────────────────────
+  //
+  // Every writer PLANS a transaction against a base snapshot — stages
+  // its data/CDC/DV files and lists its removes and metadata lines —
+  // and hands the plan to [[commit]], which derives the per-file
+  // metadata from the staged footers, publishes, and checkpoints.
+  // Writers differ only in how a lost commit race is answered.
+
+  /** A writer's answer to losing the race for its version. */
+  private sealed trait OnConflict
+  /** Compare-and-swap: the plan is only valid against its base. */
+  private case object Fail extends OnConflict
+  /** Valid against any snapshot (a plain append): retry at the head. */
+  private case object Blind extends OnConflict
+  /** Retry iff no intervening commit touched these partitions (Delta's
+    * disjoint-partition conflict rule), else fail. */
+  private final case class Disjoint(touched: Set[Seq[String]])
+      extends OnConflict
+  /** Retry with the schema line re-derived at the new head: replay is
+    * last-schema-wins, so a stale evolution line would clobber columns
+    * a concurrent evolving writer just declared. */
+  private final case class Reschema(at: State => Option[String])
+      extends OnConflict
+  /** Idempotent writers: once `done` holds at the new head a
+    * concurrent writer landed the same batch, so the staged files are
+    * abandoned and [[commit]] returns [[Superseded]]; else retry. */
+  private final case class Idempotent(done: State => Boolean)
+      extends OnConflict
+
+  /** [[commit]]'s result when an [[Idempotent]] plan was superseded. */
+  private val Superseded = -1L
+
+  /** One planned transaction. `base` is the version the plan read
+    * (`st` its state); `meta` carries the writer's own action lines
+    * (protocol, props, checks, DV masks, manifests, …) and `txn` its
+    * idempotent-writer marker; `staged` are the freshly written data
+    * files, whose footers [[commit]] reads for rowcounts, identity
+    * high-water (`idCols`), row-id ranges, and stats/blooms on the
+    * table's tracked columns plus `statsCols` / `bloomCols`. `layout`
+    * is the schema the staged files were written through (physical
+    * names under column mapping). `rowIds` reserves row-id ranges for
+    * already-committed files — by their committed row count, or from
+    * their footer where none was committed (`None`). `feed` mirrors
+    * the staged files into the append stream. */
+  private final case class Plan(op: String, base: Long, st: State,
+                                meta: Seq[String] = Nil,
+                                txn: Option[(String, Long)] = None,
+                                schema: Option[String] = None,
+                                removes: Seq[String] = Nil,
+                                staged: Seq[String] = Nil,
+                                cdc: Seq[String] = Nil,
+                                layout: Option[StructType] = None,
+                                idCols: Seq[String] = Nil,
+                                statsCols: Seq[String] = Nil,
+                                bloomCols: Seq[String] = Nil,
+                                rowIds: Seq[(String, Option[Long])] = Nil,
+                                feed: Boolean = false,
+                                onConflict: OnConflict = Fail)
+
+  /** Publish `p` and return its version. The per-file metadata lines
+    * come from ONE footer read per staged file (plus one Spark job for
+    * blooms, and one only for stats/identity columns the footers cannot
+    * prove). A lost race is answered by the plan's [[OnConflict]]; on
+    * every retry the reservation guard applies: a winner that moved the
+    * identity or row-id high-water this plan reserved past makes the
+    * reservations stale (duplicate ids), so the commit refuses. A
+    * `dvclear` resets masks table-wide, so a retry keeps it only while
+    * the plan still removes every masked file at the new head; else it
+    * is dropped — the winner's masks on files this plan leaves live
+    * stay, and replay already drops the masks of removed files.
+    * `spark` is consulted only when the plan stages or reserves files. */
+  private def commit(spark: => SparkSession, table: String,
+                     p: Plan): Long = {
+    val derived =
+      if (p.staged.isEmpty && p.rowIds.isEmpty) Nil
+      else derivedLines(spark, table, p)
+    val reservesIds = derived.exists(_.startsWith("idhigh\t"))
+    val reservesRows = derived.exists(_.startsWith("rowhigh\t"))
+    def lines(schema: Option[String], meta: Seq[String]): Seq[String] =
+      s"op\t${p.op}" +: (p.removes.map("remove\t" + _) ++ meta ++
+        p.txn.map { case (id, tv) => s"txn\t$id\t$tv" } ++
+        schema.map("schema\t" + _) ++ p.staged.map("add\t" + _) ++
+        p.cdc.map("cdc\t" + _) ++ derived)
+    var schema = p.schema
+    var meta = p.meta
+    var checkedUpTo = p.base
+    var v = p.base + 1
+    while (!publish(table, v, lines(schema, meta))) {
+      if (p.onConflict == Fail) throw new ConcurrentCommitException(v)
+      val head = versions(table).last
+      val hs = replayState(table, head)
+      p.onConflict match {
+        case Idempotent(done) if done(hs) =>
+          val fs = fsOf(tablePath(table))
+          p.staged.foreach(n =>
+            fs.delete(new HPath(tablePath(table), n), false))
+          return Superseded
+        case _ => ()
+      }
+      if ((reservesIds &&
+            p.idCols.exists(c => hs.idHigh.get(c) != p.st.idHigh.get(c))) ||
+          (reservesRows && hs.rowHigh != p.st.rowHigh))
+        throw new ConcurrentCommitException(v)
+      p.onConflict match {
+        case Disjoint(touched) if (checkedUpTo + 1 to head).exists(cv =>
+            actionTouches(actionsOf(table, cv), touched)) =>
+          throw new ConcurrentCommitException(v)
+        case Reschema(at) => schema = at(hs)
+        case _ => ()
+      }
+      if (dvClearIf(hs, p.removes).isEmpty)
+        meta = meta.filterNot(_ == "dvclear")
+      checkedUpTo = head
+      v = head + 1
+    }
+    if (p.feed) feedLink(table, p.staged)
+    maybeCheckpoint(table, v)
+    v
+  }
+
+  /** [[commit]]'s per-file metadata: identity high-water, row-id
+    * ranges, stats and blooms, rowcount/fsize. Skipping metadata is
+    * re-recorded for every column the base state tracks (still in the
+    * layout, so a renamed-away name is never re-keyed onto another
+    * column's values) — a rewrite never silently stops pruning. */
+  private def derivedLines(spark: SparkSession, table: String,
+                           p: Plan): Seq[String] = {
+    // committed files re-reserved without a committed row count (a
+    // CONVERT's) are counted from their footers, in the same pass
+    val uncounted = p.rowIds.collect { case (f, None) => f }
+    val read = readFooters(table, p.staged ++ uncounted)
+    val foot = read.take(p.staged.size)
+    val pm = physMapOf(p.layout)
+    def tracked(keys: Iterable[(String, String)], asked: Seq[String]) =
+      (asked ++ keys.map(_._2).toSeq.distinct.sorted.filter(c =>
+        p.layout.forall(_.fieldNames.contains(c)))).distinct
+    val counted = read.map(f => f.name -> f.rows).toMap
+    val rows = foot.map(f => f.name -> f.rows) ++
+      p.rowIds.map { case (f, n) => f -> n.getOrElse(counted(f)) }
+    idHighLines(spark, table, foot, p.idCols, pm) ++
+      (if (rowTrackingOn(p.st) || p.rowIds.nonEmpty)
+        rowTrackLines(rows, p.st.rowHigh) else Nil) ++
+      statsLines(spark, table, foot, tracked(p.st.stats.keys, p.statsCols),
+        pm) ++
+      bloomLines(spark, table, p.staged,
+        tracked(p.st.blooms.keys, p.bloomCols), pm) ++
+      rowcountLines(read)
+  }
+
+  /** The version a writer plans against — the head unless pinned — and
+    * its replay state. */
+  private def baseOf(table: String,
+                     pinned: Option[Long] = None): (Long, State) = {
+    val vs = versions(table)
+    require(vs.nonEmpty, s"not a TxnLog table: $table")
+    val base = pinned.getOrElse(vs.last)
+    (base, replayState(table, base))
+  }
+
+  /** `dvclear` when a commit rewrites every DV-masked file: the rewrite
+    * materialized the deletions, so the mask state resets. */
+  private def dvClearIf(st: State, rewritten: Seq[String]): Seq[String] =
+    if (st.dvCounts.nonEmpty && st.dvCounts.keySet.subsetOf(rewritten.toSet))
+      Seq("dvclear")
+    else Nil
+
+  /** Identity (GENERATED ALWAYS AS IDENTITY) columns of a schema. */
+  private def idColsOf(s: Option[StructType]): Seq[String] =
+    s.toSeq.flatMap(_.fields).filter(_.metadata.contains(IdKey)).map(_.name)
+
+  /** Stage change-feed rows under `_change_data/`. */
+  private def stageCdc(spark: SparkSession, table: String,
+                       rows: DataFrame): Seq[String] =
+    stage(spark, table, rows, subdir = Some("_change_data"))
 
   // ─── writers ───────────────────────────────────────────────────────
 
@@ -2065,21 +2221,17 @@ object TxnLog {
     checks.foreach { case (n, e) =>
       require(!n.contains('\t') && !e.contains('\t'),
         "constraint names/expressions must be tab-free") }
+    checkStatsCols(df.schema, statsCols)
     val named = stageChecked(spark, table, df, checks.toMap, partitionBy)
-    val foot = readFooters(table, named)
-    val actions = "op\tcreate" +: (protocolLines(df.schema) :+
-      s"schema\t${df.schema.json}") ++:
-      (txn.map { case (id, tv) => s"txn\t$id\t$tv" }.toSeq ++
-        checks.map { case (n, e) => s"check\t$n\t$e" } ++
-        named.map("add\t" + _) ++
-        statsLines(spark, table, named, statsCols, foot = foot)
-        ++ bloomLines(spark, table, named, bloomCols)
-        ++ rowcountLines(table, named, foot))
-    if (!publish(table, 1L, actions))
-      throw new ConcurrentCommitException(1L)
-    feedLink(table, named)
-    1L
+    commit(spark, table, Plan("create", 0L, State(),
+      meta = protocolLines(df.schema) ++ checkLines(checks), txn = txn,
+      schema = Some(df.schema.json), staged = named, statsCols = statsCols,
+      bloomCols = bloomCols, feed = true))
   }
+
+  /** `check` action lines declaring CHECK constraints. */
+  private def checkLines(checks: Seq[(String, String)]): Seq[String] =
+    checks.map { case (n, e) => s"check\t$n\t$e" }
 
   /** DDL-first creation: an EMPTY table born from a declared schema
     * alone (the reference bootstraps its tables exactly this way —
@@ -2170,15 +2322,10 @@ object TxnLog {
                   checks: Seq[(String, String)] = Nil): Long = {
     require(!exists(table), s"table already exists: $table")
     validateDdl(spark, schema, partitionBy, checks)
-    val actions = Seq("op\tcreate") ++ protocolLines(schema) ++
-      Seq(s"schema\t${schema.json}") ++
-      (if (partitionBy.nonEmpty)
+    commit(spark, table, Plan("create", 0L, State(),
+      meta = protocolLines(schema) ++ (if (partitionBy.nonEmpty)
         Seq(s"prop\tgraft.partitionBy\t${partitionBy.mkString(",")}")
-      else Nil) ++
-      checks.map { case (n, e) => s"check\t$n\t$e" }
-    if (!publish(table, 1L, actions))
-      throw new ConcurrentCommitException(1L)
-    1L
+      else Nil) ++ checkLines(checks), schema = Some(schema.json)))
   }
 
   /** TRUNCATE TABLE as one transactional commit: every live file
@@ -2197,17 +2344,9 @@ object TxnLog {
     * like every commit. CAS-pinned. */
   def truncate(spark: SparkSession, table: String,
                expectedVersion: Option[Long] = None): Long = {
-    require(exists(table), s"not a TxnLog table: $table")
-    val base = expectedVersion.getOrElse(versions(table).last)
-    val st = replayState(table, base)
-    val dvLine = if (st.dvCounts.nonEmpty) Seq("dvclear") else Nil
-    val actions = "op\ttruncate" +: (dvLine ++
-      st.live.map("remove\t" + _))
-    val v = base + 1
-    if (!publish(table, v, actions))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    val (base, st) = baseOf(table, expectedVersion)
+    commit(spark, table, Plan("truncate", base, st,
+      meta = dvClearIf(st, st.live), removes = st.live))
   }
 
   /** CREATE OR REPLACE TABLE as ONE transactional commit (Delta's
@@ -2227,27 +2366,26 @@ object TxnLog {
     require(exists(table), s"not a TxnLog table: $table " +
       "(CREATE OR REPLACE on a fresh path is just CREATE)")
     validateDdl(spark, schema, partitionBy, checks)
-    val base = versions(table).last
-    val st = replayState(table, base)
-    val dvLine = if (st.dvCounts.nonEmpty) Seq("dvclear") else Nil
-    // `graft.partitionBy` must be OVERWRITTEN even when the new table
-    // is unpartitioned — a bare "," parses to zero partition columns
-    // (split/filter), clearing the sticky property without a new
-    // action kind
-    val partLine = s"prop\tgraft.partitionBy\t" +
-      (if (partitionBy.nonEmpty) partitionBy.mkString(",") else ",")
-    val actions = Seq("op\treplaceTable") ++ protocolLines(schema) ++
-      dvLine ++
-      st.live.map("remove\t" + _) ++
-      st.checks.keys.toSeq.sorted.map("checkdrop\t" + _) ++
-      Seq(s"schema\t${schema.json}", partLine) ++
-      checks.map { case (n, e) => s"check\t$n\t$e" }
-    val v = base + 1
-    if (!publish(table, v, actions))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    val (base, st) = baseOf(table)
+    commit(spark, table, Plan("replaceTable", base, st,
+      meta = redefineLines(st, schema, partitionBy, checks),
+      schema = Some(schema.json), removes = st.live))
   }
+
+  /** The definition swap [[replaceTable]] / [[replaceTableAs]] commit:
+    * protocol stamp, DV reset, old CHECKs dropped, new ones declared,
+    * and `graft.partitionBy` OVERWRITTEN even when the new table is
+    * unpartitioned — a bare "," parses to zero partition columns
+    * (split/filter), clearing the sticky property without a new
+    * action kind. */
+  private def redefineLines(st: State, schema: StructType,
+                            partitionBy: Seq[String],
+                            checks: Seq[(String, String)]): Seq[String] =
+    protocolLines(schema) ++ dvClearIf(st, st.live) ++
+      st.checks.keys.toSeq.sorted.map("checkdrop\t" + _) ++
+      Seq(s"prop\tgraft.partitionBy\t" +
+        (if (partitionBy.nonEmpty) partitionBy.mkString(",") else ",")) ++
+      checkLines(checks)
 
   /** CREATE OR REPLACE TABLE … AS SELECT as ONE transactional commit:
     * [[replaceTable]]'s definition swap and the new data land together
@@ -2260,8 +2398,7 @@ object TxnLog {
     require(exists(table), s"not a TxnLog table: $table " +
       "(CREATE OR REPLACE … AS on a fresh path is just CTAS)")
     validateDdl(spark, df.schema, partitionBy, checks)
-    val base = versions(table).last
-    val st = replayState(table, base)
+    val (base, st) = baseOf(table)
     // identity columns in the NEW declaration: GENERATED ALWAYS — the
     // SELECT's values are overwritten with fresh ones past the logged
     // high-water (replay keeps idhigh across a replace, so a same-name
@@ -2269,29 +2406,10 @@ object TxnLog {
     val df1 = fillIdentity(df, Some(df.schema), st.idHigh)
     val named = stageChecked(spark, table, df1, checks.toMap, partitionBy,
       Some(df.schema))
-    val idCols = df.schema.fields.toSeq
-      .filter(_.metadata.contains(IdKey)).map(_.name)
-    val dvLine = if (st.dvCounts.nonEmpty) Seq("dvclear") else Nil
-    val partLine = s"prop\tgraft.partitionBy\t" +
-      (if (partitionBy.nonEmpty) partitionBy.mkString(",") else ",")
-    val actions = Seq("op\treplaceTable") ++
-      protocolLines(df.schema) ++ dvLine ++
-      st.live.map("remove\t" + _) ++
-      st.checks.keys.toSeq.sorted.map("checkdrop\t" + _) ++
-      Seq(s"schema\t${df.schema.json}", partLine) ++
-      checks.map { case (n, e) => s"check\t$n\t$e" } ++
-      named.map("add\t" + _) ++ {
-        val foot = readFooters(table, named)
-        idHighLines(spark, table, named, idCols,
-          physMapOf(Some(df.schema)), foot) ++
-          rowTrackLines(table, named, st, foot) ++
-          rowcountLines(table, named, foot)
-      }
-    val v = base + 1
-    if (!publish(table, v, actions))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    commit(spark, table, Plan("replaceTable", base, st,
+      meta = redefineLines(st, df.schema, partitionBy, checks),
+      schema = Some(df.schema.json), removes = st.live, staged = named,
+      layout = Some(df.schema), idCols = idColsOf(Some(df.schema))))
   }
 
   /** `ALTER TABLE … ALTER COLUMN c SET DEFAULT <expr>` / `DROP
@@ -2303,11 +2421,8 @@ object TxnLog {
     * and identity columns refuse (they own their value channel). */
   def setColumnDefault(spark: SparkSession, table: String,
                        colName: String, default: Option[String]): Long = {
-    require(exists(table), s"not a TxnLog table: $table")
-    val base = versions(table).last
-    val st = replayState(table, base)
-    val declared = st.schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    val (base, st) = baseOf(table)
+    val declared = st.declared
       .getOrElse(sys.error(s"no declared schema in the log: $table"))
     val f = declared.fields.find(_.name.equalsIgnoreCase(colName))
       .getOrElse(sys.error(s"no such column: $colName"))
@@ -2340,12 +2455,8 @@ object TxnLog {
         g.copy(metadata = mb.build())
       }
     }
-    val v = base + 1
-    if (!publish(table, v, Seq("op\talterColumn",
-        s"schema\t${StructType(newFields).json}")))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    commit(spark, table, Plan("alterColumn", base, st,
+      schema = Some(StructType(newFields).json)))
   }
 
   /** `ALTER TABLE … ALTER COLUMN c SET NOT NULL` / `DROP NOT NULL`:
@@ -2357,11 +2468,8 @@ object TxnLog {
   def setColumnNullability(spark: SparkSession, table: String,
                            colName: String, nullable: Boolean): Long = {
     import org.apache.spark.sql.functions.col
-    require(exists(table), s"not a TxnLog table: $table")
-    val base = versions(table).last
-    val st = replayState(table, base)
-    val declared = st.schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    val (base, st) = baseOf(table)
+    val declared = st.declared
       .getOrElse(sys.error(s"no declared schema in the log: $table"))
     val f = declared.fields.find(_.name.equalsIgnoreCase(colName))
       .getOrElse(sys.error(s"no such column: $colName"))
@@ -2377,12 +2485,8 @@ object TxnLog {
     val checkLine =
       if (nullable) s"checkdrop\tnn_${f.name}"
       else s"check\tnn_${f.name}\t${f.name} IS NOT NULL"
-    val v = base + 1
-    if (!publish(table, v, Seq("op\talterColumn",
-        s"schema\t${StructType(newFields).json}", checkLine)))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    commit(spark, table, Plan("alterColumn", base, st, meta = Seq(checkLine),
+      schema = Some(StructType(newFields).json)))
   }
 
   /** Idempotent init (SURVEY D4): create iff absent — the reference's
@@ -2410,74 +2514,25 @@ object TxnLog {
              statsCols: Seq[String] = Nil,
              mergeSchema: Boolean = false,
              bloomCols: Seq[String] = Nil): Long = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"not a TxnLog table: $table")
-    val st = replayState(table, vs.last)
-    val declared =
-      st.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+    val (base, st) = baseOf(table)
+    val declared = st.declared
     val df = fillIdentity(fillDefaults(df0, declared), declared,
       st.idHigh)
-    val mappingOn = st.props.get("columnMapping").contains("name")
-    val evolvedJson =
-      declared.flatMap(validateAgainst(_, df.schema, mergeSchema, mappingOn))
-    val schemaLine = evolvedJson.map("schema\t" + _)
+    checkStatsCols(df.schema, statsCols)
+    // an evolving append re-derives its schema line at whatever head it
+    // lands on: two appends adding DIFFERENT columns compose, the same
+    // column re-validates to a no-op line
+    def evolve(at: State): Option[String] = at.declared
+      .flatMap(validateAgainst(_, df.schema, mergeSchema, at.mappingOn))
+    val evolvedJson = evolve(st)
     val physOf = evolvedJson
       .map(DataType.fromJson(_).asInstanceOf[StructType]).orElse(declared)
     val named = stageChecked(spark, table, df, st.checks,
       partitionColsOf(st).getOrElse(Nil), physOf)
-    val pm = physMapOf(physOf)
-    // identity high-water lines: ONE column-pruned job over the just-
-    // staged files records the largest value each identity column
-    // reserved, so the next writer starts beyond it
-    val idCols = declared.toSeq.flatMap(_.fields)
-      .filter(_.metadata.contains(IdKey)).map(_.name)
-    val foot = readFooters(table, named)
-    val idLines = idHighLines(spark, table, named, idCols, pm, foot)
-    val rtLines = rowTrackLines(table, named, st, foot)
-    val rest = named.map("add\t" + _) ++ idLines ++ rtLines ++
-      statsLines(spark, table, named, statsCols, pm, foot) ++
-      bloomLines(spark, table, named, bloomCols, pm) ++
-      rowcountLines(table, named, foot)
-    var actions = "op\tappend" +: (schemaLine.toSeq ++ rest)
-    var v = vs.last + 1
-    while (!publish(table, v, actions)) {
-      // identity guard: a lost race against ANOTHER identity-assigning
-      // writer means our reserved range may collide with the winner's
-      // — the blind retry is only safe when the high-water is where we
-      // left it (replay keeps the max, so equal high ⇒ no one moved it)
-      if (idLines.nonEmpty) {
-        val hs = replayState(table, versions(table).last)
-        if (idCols.exists(cn => hs.idHigh.getOrElse(cn, Long.MinValue) !=
-            st.idHigh.getOrElse(cn, Long.MinValue)))
-          throw new ConcurrentCommitException(v)
-      }
-      // row-id base guard: same reservation-collision shape — retry
-      // only if no intervening commit moved the row-id high-water
-      if (rtLines.nonEmpty &&
-          replayState(table, versions(table).last).rowHigh != st.rowHigh)
-        throw new ConcurrentCommitException(v)
-      if (schemaLine.isDefined) {
-        // a schema-carrying commit is NOT valid against arbitrary
-        // snapshots: replay is last-schema-wins, so re-publishing a
-        // stale evolution line would clobber columns a concurrent
-        // evolving writer just declared. Re-derive the evolved schema
-        // from the new head before retrying (two appends adding
-        // DIFFERENT columns then compose; the same column re-validates
-        // to a no-op line).
-        val head = versions(table).last
-        val hs = replayState(table, head)
-        val d2 = hs.schemaJson
-          .map(DataType.fromJson(_).asInstanceOf[StructType])
-        val sl2 = d2.flatMap(validateAgainst(_, df.schema, mergeSchema,
-          hs.props.get("columnMapping").contains("name")))
-          .map("schema\t" + _)
-        actions = "op\tappend" +: (sl2.toSeq ++ rest)
-        v = head + 1
-      } else v += 1
-    }
-    feedLink(table, named)
-    maybeCheckpoint(table, v)
-    v
+    commit(spark, table, Plan("append", base, st, schema = evolvedJson,
+      staged = named, layout = physOf, idCols = idColsOf(declared),
+      statsCols = statsCols, bloomCols = bloomCols, feed = true,
+      onConflict = if (evolvedJson.isDefined) Reschema(evolve) else Blind))
   }
 
   /** `COPY INTO` — IDEMPOTENT file ingestion (Delta's COPY INTO): load
@@ -2504,11 +2559,8 @@ object TxnLog {
                format: String,
                options: Map[String, String] = Map.empty,
                force: Boolean = false): (Long, Long, Long) = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"not a TxnLog table: $table")
-    val st = replayState(table, vs.last)
-    val declared = st.schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    val (base, st) = baseOf(table)
+    val declared = st.declared
       .getOrElse(sys.error(
         s"COPY INTO needs a declared schema on $table"))
     // driver-side LIST of the source: glob patterns expand, a bare
@@ -2533,7 +2585,7 @@ object TxnLog {
       s"source path must be tab-free: $p"))
     val fresh =
       if (force) candidates else candidates.filterNot(st.copied.contains)
-    if (fresh.isEmpty) return (vs.last, 0L, 0L)
+    if (fresh.isEmpty) return (base, 0L, 0L)
     val r = spark.read.options(options).schema(declared)
     val df0 = format.toLowerCase match {
       case "csv" => r.csv(fresh: _*)
@@ -2546,15 +2598,6 @@ object TxnLog {
       Some(declared), st.idHigh)
     val named = stageChecked(spark, table, df, st.checks,
       partitionColsOf(st).getOrElse(Nil), Some(declared))
-    val pm = physMapOf(Some(declared))
-    val idCols = declared.fields.toSeq
-      .filter(_.metadata.contains(IdKey)).map(_.name)
-    val foot = readFooters(table, named)
-    val idLines = idHighLines(spark, table, named, idCols, pm, foot)
-    val rtLines = rowTrackLines(table, named, st, foot)
-    val rcLines = rowcountLines(table, named, foot)
-    val rows = rcLines.filter(_.startsWith("rowcount\t"))
-      .map(_.split('\t')(2).toLong).sum
     // first COPY INTO on this table raises the protocol floors: an
     // older checkpointer would DROP the manifest (see
     // [[SupportedWriterVersion]]); the bump turns that into an
@@ -2562,32 +2605,18 @@ object TxnLog {
     val floors =
       (if (st.minReader < 4L) Seq("minreader\t4") else Nil) ++
         (if (st.minWriter < 4L) Seq("minwriter\t4") else Nil)
-    val actions = "op\tcopyInto" +: (floors ++
-      named.map("add\t" + _) ++ idLines ++ rtLines ++
-      fresh.map("copied\t" + _) ++ rcLines)
-    var v = vs.last + 1
-    while (!publish(table, v, actions)) {
-      val hs = replayState(table, versions(table).last)
-      if (fresh.exists(hs.copied.contains)) {
-        // a concurrent COPY of (some of) the same files won: abandon
-        // our staged files and re-dedup from the new head — the retry
-        // loads only what is still fresh, usually nothing
-        val fs = fsOf(tablePath(table))
-        named.foreach(n => fs.delete(new HPath(tablePath(table), n), false))
-        return copyInto(spark, table, source, format, options, force)
-      }
-      // identity / row-id reservations are stale if any winner moved
-      // a high-water (same guards as append)
-      if ((idLines.nonEmpty && idCols.exists(cn =>
-            hs.idHigh.getOrElse(cn, Long.MinValue) !=
-              st.idHigh.getOrElse(cn, Long.MinValue))) ||
-          (rtLines.nonEmpty && hs.rowHigh != st.rowHigh))
-        throw new ConcurrentCommitException(v)
-      v = versions(table).last + 1
+    // a concurrent COPY of (some of) the same files winning the race
+    // supersedes this one: re-dedup from the new head — the retry
+    // loads only what is still fresh, usually nothing
+    val v = commit(spark, table, Plan("copyInto", base, st,
+      meta = floors ++ fresh.map("copied\t" + _), staged = named,
+      layout = Some(declared), idCols = idColsOf(Some(declared)),
+      feed = true, onConflict = Idempotent(hs => fresh.exists(hs.copied))))
+    if (v == Superseded) copyInto(spark, table, source, format, options, force)
+    else {
+      val counts = replayState(table, v).rowcounts
+      (v, fresh.size.toLong, named.map(counts).sum)
     }
-    feedLink(table, named)
-    maybeCheckpoint(table, v)
-    (v, fresh.size.toLong, rows)
   }
 
   /** `FSCK REPAIR TABLE` (Delta's fsck): drop log entries for live
@@ -2604,9 +2633,7 @@ object TxnLog {
     * RESTORE to a version before those DVs is. Returns the removed
     * (or, dry, the missing) relative paths. */
   def fsck(table: String, dryRun: Boolean = false): Seq[String] = {
-    require(exists(table), s"not a TxnLog table: $table")
-    val base = versions(table).last
-    val st = replayState(table, base)
+    val (base, st) = baseOf(table)
     val t = tablePath(table)
     val fs = fsOf(t)
     val missingDv = st.dvFiles.filterNot(f => fs.exists(new HPath(t, f)))
@@ -2616,10 +2643,8 @@ object TxnLog {
         "version before them")
     val missing = st.live.filterNot(f => fs.exists(new HPath(t, f)))
     if (missing.isEmpty || dryRun) return missing
-    val v = base + 1
-    if (!publish(table, v, "op\tfsck" +: missing.map("remove\t" + _)))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
+    commit(SparkSession.active, table,
+      Plan("fsck", base, st, removes = missing))
     missing
   }
 
@@ -2634,8 +2659,7 @@ object TxnLog {
     * deleted data; `compact()` materializes the deletes away first.
     * Returns the manifest-relative paths written. */
   def generateManifest(table: String): Seq[String] = {
-    require(exists(table), s"not a TxnLog table: $table")
-    val st = replayState(table, versions(table).last)
+    val (_, st) = baseOf(table)
     require(st.dvCounts.isEmpty,
       "symlink manifests cannot represent DV-masked reads — run " +
         "compact() (REORG PURGE) first")
@@ -2702,11 +2726,12 @@ object TxnLog {
     * re-check finds the winner's marker. */
   def idempotentAppend(spark: SparkSession, table: String, df: DataFrame,
                        appId: String, txnVersion: Long): Long = {
-    require(exists(table), s"not a TxnLog table: $table")
-    if (lastTxnVersion(table, appId) >= txnVersion)
-      return txnCommitVersion(table, appId, txnVersion)
-        .getOrElse(versions(table).last) // batch skipped upstream: latest
-    val st = replayState(table, versions(table).last)
+    val (base, st) = baseOf(table)
+    // the batch already landed (or was skipped upstream): the version
+    // that holds it, else the latest
+    def landed: Long = txnCommitVersion(table, appId, txnVersion)
+      .getOrElse(versions(table).last)
+    if (st.txn.getOrElse(appId, -1L) >= txnVersion) return landed
     // same contract as append: a schema-drifted micro-batch must FAIL at
     // write time, not land as silent nulls — and a partitioned table's
     // batches stage through the hive layout like every other writer (a
@@ -2714,36 +2739,17 @@ object TxnLog {
     // readFiles/partitionColsOf depend on). No mergeSchema path: an
     // evolving commit is not valid against arbitrary snapshots, which is
     // exactly what this writer's blind publish retry assumes.
-    val declared =
-      st.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+    val declared = st.declared
     declared.foreach(validateAgainst(_, df.schema, mergeSchema = false))
     val named = stageChecked(spark, table, df, st.checks,
       partitionColsOf(st).getOrElse(Nil), declared)
-    val foot = readFooters(table, named)
-    val rtLines = rowTrackLines(table, named, st, foot)
-    val actions = "op\tappend" +: s"txn\t$appId\t$txnVersion" +:
-      (named.map("add\t" + _) ++ rtLines ++ rowcountLines(table, named, foot))
-    var v = versions(table).last + 1
-    while (!publish(table, v, actions)) {
-      if (lastTxnVersion(table, appId) >= txnVersion) {
-        // a concurrent replayer of the SAME batch won: abandon our
-        // staged files (log-invisible; next vacuum sweeps them)
-        val fs = fsOf(tablePath(table))
-        named.foreach(n => fs.delete(new HPath(tablePath(table), n), false))
-        return txnCommitVersion(table, appId, txnVersion)
-          .getOrElse(versions(table).last)
-      }
-      // row-id reservations were computed against `st`: a concurrent
-      // winner that moved the high-water makes them stale — refuse
-      // rather than publish duplicate ids (caller retries the batch)
-      if (rtLines.nonEmpty &&
-          replayState(table, versions(table).last).rowHigh != st.rowHigh)
-        throw new ConcurrentCommitException(v)
-      v = versions(table).last + 1
-    }
-    feedLink(table, named)
-    maybeCheckpoint(table, v)
-    v
+    // a concurrent replayer of the SAME batch winning the race
+    // supersedes this commit (our staged files are abandoned)
+    val v = commit(spark, table, Plan("append", base, st,
+      txn = Some((appId, txnVersion)), staged = named, layout = declared,
+      feed = true, onConflict =
+        Idempotent(_.txn.getOrElse(appId, -1L) >= txnVersion)))
+    if (v == Superseded) landed else v
   }
 
   /** Replace the table contents in one commit (adds the new files AND
@@ -2765,17 +2771,15 @@ object TxnLog {
                 bloomCols: Seq[String] = Nil,
                 txn: Option[(String, Long)] = None,
                 assignIdentity: Boolean = true): Long = {
-    require(exists(table), s"not a TxnLog table: $table")
-    val base = expectedVersion.getOrElse(versions(table).last)
-    val st = replayState(table, base)
-    val declared =
-      st.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+    val (base, st) = baseOf(table, expectedVersion)
+    val declared = st.declared
+    checkStatsCols(df.schema, statsCols)
     val schemaLine = declared match {
       case Some(d) if canonCols(d) == canonCols(df.schema) => None
       case Some(_) if !overwriteSchema =>
         throw new SchemaMismatchException(
           "overwrite changes the declared schema; pass overwriteSchema = true")
-      case _ => Some("schema\t" + df.schema.json)
+      case _ => Some(df.schema.json)
     }
     // a same-schema overwrite keeps the declared mapping (and stages
     // through it); a re-declaration resets physical = logical — it
@@ -2791,29 +2795,14 @@ object TxnLog {
     val governing = if (schemaLine.isEmpty) declared else Some(df.schema)
     val df1 = if (assignIdentity) fillIdentity(df, governing, st.idHigh)
       else df
-    val idCols = if (!assignIdentity) Nil
-      else governing.toSeq.flatMap(_.fields)
-        .filter(_.metadata.contains(IdKey)).map(_.name)
     val named = stageChecked(spark, table, df1, st.checks,
       partitionColsOf(st).getOrElse(Nil), physOf)
-    val pm = physMapOf(physOf)
-    val cdcNames = cdcRows.toSeq.flatMap(
-      stage(spark, table, _, subdir = Some("_change_data")))
-    val v = base + 1
-    if (!publish(table, v, s"op\t$opName" +: "dvclear" +: (schemaLine.toSeq ++
-        txn.map { case (id, tv) => s"txn\t$id\t$tv" }.toSeq ++
-        st.live.map("remove\t" + _) ++ named.map("add\t" + _) ++
-        cdcNames.map("cdc\t" + _) ++ {
-          val foot = readFooters(table, named)
-          idHighLines(spark, table, named, idCols, pm, foot) ++
-            rowTrackLines(table, named, st, foot) ++
-            statsLines(spark, table, named, statsCols, pm, foot) ++
-            bloomLines(spark, table, named, bloomCols, pm) ++
-            rowcountLines(table, named, foot)
-        })))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    commit(spark, table, Plan(opName, base, st, meta = Seq("dvclear"),
+      txn = txn, schema = schemaLine, removes = st.live, staged = named,
+      cdc = cdcRows.toSeq.flatMap(stageCdc(spark, table, _)),
+      layout = physOf,
+      idCols = if (assignIdentity) idColsOf(governing) else Nil,
+      statsCols = statsCols, bloomCols = bloomCols))
   }
 
   /** The change-feed rows an upsert commits (Delta CDF's write path):
@@ -2954,11 +2943,8 @@ object TxnLog {
              mergeSchema: Boolean = false,
              txn: Option[(String, Long)] = None): Long = {
     import org.apache.spark.sql.functions.{col, lit}
-    require(exists(table), s"not a TxnLog table: $table")
-    val base = expectedVersion.getOrElse(versions(table).last)
-    val st = replayState(table, base)
-    val declared =
-      st.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+    val (base, st) = baseOf(table, expectedVersion)
+    val declared = st.declared
     // identity tables refuse the key-rewrite upsert: its merged plan
     // replaces matched rows with BATCH rows wholesale, which would
     // either overwrite stored ids with user values (GENERATED ALWAYS
@@ -2977,7 +2963,6 @@ object TxnLog {
     // schema, and surface as null on pre-evolution rows. Unlike append,
     // type differences on DECLARED columns are not drift here — the
     // store-assignment projection below casts them to the target types.
-    val mappingOn = st.props.get("columnMapping").contains("name")
     val evolvedJson = declared.flatMap { d =>
       val have = canonCols(d)
       val extra = updates.schema.fields.filterNot(f => have.contains(f.name))
@@ -2986,7 +2971,7 @@ object TxnLog {
         s"upsert adds undeclared columns: ${extra.map(_.name).mkString(", ")} " +
           "(pass mergeSchema = true to evolve the table schema)")
       else Some(StructType(d.fields ++
-        extra.map(guidPhys(_, mappingOn))).json)
+        extra.map(guidPhys(_, st.mappingOn))).json)
     }
     val target = evolvedJson
       .map(DataType.fromJson(_).asInstanceOf[StructType]).orElse(declared)
@@ -3008,7 +2993,8 @@ object TxnLog {
             d.withColumn(f.name, lit(null).cast(f.dataType)))
       case None => base0
     }
-    partitionColsOf(st) match {
+    val pcols = partitionColsOf(st)
+    val (touchedFiles, onConflict) = pcols match {
       case None =>
         // file-level pruned merge (Delta MERGE's touched-file scoping):
         // the log's per-file stats and blooms on the merge keys split
@@ -3017,115 +3003,37 @@ object TxnLog {
         // and rewritten; untouched files stay live with their exact
         // names, stats, and blooms. An unpartitioned 100 TB table whose
         // daily batch hits a narrow key range rewrites ∝ that range,
-        // not the table. Falls back to the whole-table rewrite when
-        // nothing is prunable (no stats/blooms on the keys).
-        val touchedFiles = touchedByKeys(spark, st, u, keys)
-        // empty table (DDL-first before its first load): 0 == 0 must
-        // NOT mean "whole-table rewrite" (readFiles on zero paths
-        // throws) — fall through to the pure-insert path below
-        if (st.live.nonEmpty && touchedFiles.size == st.live.size) {
-          val snap = withNewCols(readFiles(spark, table, st.live, declared,
-            dvOf(spark, table, st)))
-          val merged = graft.ops.Merge.upsert(snap, u, keys)
-          overwrite(spark, table, merged, Some(base),
-            overwriteSchema = evolvedJson.isDefined,
-            cdcRows = Some(upsertCdc(snap, u, keys)), opName = "upsert",
-            statsCols = st.stats.keys.map(_._2).toSeq.distinct.sorted,
-            bloomCols = st.blooms.keys.map(_._2).toSeq.distinct.sorted,
-            txn = txn)
-        } else {
-          val (merged, cdc) = if (touchedFiles.isEmpty) {
-            // no file can match: pure insert
-            (u, u.withColumn("_change_type", lit("insert")))
-          } else {
-            val baseDf =
-              withNewCols(readFiles(spark, table, touchedFiles, declared,
-                dvOf(spark, table, st)))
-            (graft.ops.Merge.upsert(baseDf, u, keys),
-              upsertCdc(baseDf, u, keys))
-          }
-          val named =
-            stageChecked(spark, table, merged, st.checks, Nil, target)
-          val cdcNames =
-            stage(spark, table, cdc, subdir = Some("_change_data"))
-          // keep the skipping metadata self-perpetuating: re-record
-          // stats/blooms for every column the table already tracks, so
-          // the files this merge writes are prunable by the next one
-          val trackedStats = st.stats.keys.map(_._2).toSeq.distinct.sorted
-          val trackedBlooms = st.blooms.keys.map(_._2).toSeq.distinct.sorted
-          val pm = physMapOf(target)
-          val actions = "op\tupsert" +:
-            (evolvedJson.map("schema\t" + _).toSeq ++
-              txn.map { case (id, tv) => s"txn\t$id\t$tv" }.toSeq ++
-              touchedFiles.map("remove\t" + _) ++
-              named.map("add\t" + _) ++ cdcNames.map("cdc\t" + _) ++ {
-                val foot = readFooters(table, named)
-                rowTrackLines(table, named, st, foot) ++
-                  statsLines(spark, table, named, trackedStats, pm, foot) ++
-                  bloomLines(spark, table, named, trackedBlooms, pm) ++
-                  rowcountLines(table, named, foot)
-              })
-          val v = base + 1
-          if (!publish(table, v, actions))
-            throw new ConcurrentCommitException(v)
-          maybeCheckpoint(table, v)
-          v
-        }
-      case Some(pcols) =>
+        // not the table; with nothing prunable (no stats/blooms on the
+        // keys) every file is touched — the whole-table rewrite.
+        (touchedByKeys(spark, st, u, keys), Fail)
+      case Some(pc) =>
         // touched partitions: the updates' own partition values — a
         // bounded collect (#distinct partitions a batch touches), the
-        // same plan parameter Delta's replaceWhere derives
+        // same plan parameter Delta's replaceWhere derives. A lost race
+        // against commits on OTHER partitions retries (our removes are
+        // still live); an overlap means the merge read stale rows
         val touched: Set[Seq[String]] = u
-          .select(pcols.map(c => col(c).cast("string")): _*)
+          .select(pc.map(c => col(c).cast("string")): _*)
           .distinct().collect()
-          .map(r => pcols.indices.map(r.getString)).toSet
-        val touchedFiles =
-          st.live.filter(f => touched.contains(partValuesOf(f).map(_._2)))
-        val (merged, cdc) = if (touchedFiles.isEmpty) {
-          // all-new partitions: pure insert
-          (u, u.withColumn("_change_type", lit("insert")))
-        } else {
-          val baseDf =
-            withNewCols(readFiles(spark, table, touchedFiles, declared,
-              dvOf(spark, table, st)))
-          (graft.ops.Merge.upsert(baseDf, u, keys),
-            upsertCdc(baseDf, u, keys))
-        }
-        val named =
-          stageChecked(spark, table, merged, st.checks, pcols, target)
-        val cdcNames = stage(spark, table, cdc, subdir = Some("_change_data"))
-        val actions = "op\tupsert" +:
-          (evolvedJson.map("schema\t" + _).toSeq ++
-          txn.map { case (id, tv) => s"txn\t$id\t$tv" }.toSeq ++
-          touchedFiles.map("remove\t" + _) ++
-          named.map("add\t" + _) ++ cdcNames.map("cdc\t" + _) ++
-          {
-            val foot = readFooters(table, named)
-            rowTrackLines(table, named, st, foot) ++
-              rowcountLines(table, named, foot)
-          })
-        // partition-conflict-aware publish: a lost race re-checks the
-        // commits that beat us; disjoint partitions → retry at the new
-        // head (our removes are still live), overlap → stale merge
-        var checkedUpTo = base
-        var v = base + 1
-        while (!publish(table, v, actions)) {
-          val head = versions(table).last
-          val conflict = (checkedUpTo + 1 to head).exists(cv =>
-            actionTouches(actionsOf(table, cv), touched))
-          // row-id/identity reservations were computed against `st`: a
-          // disjoint-partition winner that moved either high-water
-          // makes them stale — duplicates, not a safe retry
-          if (conflict ||
-              (rowTrackingOn(st) &&
-                replayState(table, head).rowHigh != st.rowHigh))
-            throw new ConcurrentCommitException(v)
-          checkedUpTo = head
-          v = head + 1
-        }
-        maybeCheckpoint(table, v)
-        v
+          .map(r => pc.indices.map(r.getString)).toSet
+        (st.live.filter(f => touched.contains(partValuesOf(f).map(_._2))),
+          Disjoint(touched))
     }
+    val (merged, cdc) = if (touchedFiles.isEmpty) {
+      // no file can match (or all-new partitions): pure insert
+      (u, u.withColumn("_change_type", lit("insert")))
+    } else {
+      val baseDf = withNewCols(readFiles(spark, table, touchedFiles,
+        declared, dvOf(spark, table, st)))
+      (graft.ops.Merge.upsert(baseDf, u, keys), upsertCdc(baseDf, u, keys))
+    }
+    val named = stageChecked(spark, table, merged, st.checks,
+      pcols.getOrElse(Nil), target)
+    commit(spark, table, Plan("upsert", base, st,
+      meta = dvClearIf(st, touchedFiles), txn = txn, schema = evolvedJson,
+      removes = touchedFiles, staged = named,
+      cdc = stageCdc(spark, table, cdc), layout = target,
+      onConflict = onConflict))
   }
 
   /** One WHEN clause of a general [[merge]]. `condition` and every
@@ -3172,7 +3080,6 @@ object TxnLog {
             sourceKeys: Seq[String] = Nil,
             expectedVersion: Option[Long] = None,
             mergeSchema: Boolean = false): Long = {
-    require(exists(table), s"not a TxnLog table: $table")
     import org.apache.spark.sql.functions.{col, count, lit, raise_error,
       struct, when}
     require(keys.nonEmpty, "merge needs at least one key column")
@@ -3186,10 +3093,8 @@ object TxnLog {
       notMatchedBySource.nonEmpty, "merge needs at least one WHEN clause")
     matched.foreach(c => require(c.isDelete || c.assignments.nonEmpty,
       "a matched UPDATE clause needs assignments"))
-    val base = expectedVersion.getOrElse(versions(table).last)
-    val st = replayState(table, base)
-    val schema = st.schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    val (base, st) = baseOf(table, expectedVersion)
+    val schema = st.declared
       .getOrElse(sys.error(s"merge requires a declared schema: $table"))
     val fieldLc = schema.fields.map(f => f.name.toLowerCase).toSet
     // schema evolution (Delta's MERGE WITH SCHEMA EVOLUTION): an
@@ -3280,13 +3185,12 @@ object TxnLog {
     // analysis of its first assignment over the joined row — no job,
     // just plan resolution; unmatched target rows surface null (the
     // same additive-evolution contract append/upsert follow)
-    val mappingOn = st.props.get("columnMapping").contains("name")
     val newFields = newNames.map { n =>
       val a = (matched ++ notMatchedBySource ++ notMatched)
         .flatMap(_.assignments).find(_._1.equalsIgnoreCase(n)).get._2
       guidPhys(StructField(n,
         joined.select(a.as(n)).schema.head.dataType, nullable = true),
-        mappingOn)
+        st.mappingOn)
     }
     val evolved = StructType(schema.fields ++ newFields)
     val oldLc = schema.fields.map(_.name.toLowerCase).toSet
@@ -3341,16 +3245,6 @@ object TxnLog {
     val tAll = evolved.fields.toSeq.map(f =>
       (if (oldLc.contains(f.name.toLowerCase)) col(s"__t.${f.name}")
       else lit(null).cast(f.dataType)).as(f.name))
-    // GENERATED columns are ALWAYS recomputed from the merged row —
-    // an UPDATE that moves a base column cannot leave the generated
-    // (often partition) column stale, and an INSERT clause that omits
-    // it cannot land a null partition; same recompute-always contract
-    // as fillDefaults on append
-    def regen(df: DataFrame): DataFrame =
-      schema.fields.toSeq.filter(_.metadata.contains(GenKey))
-        .foldLeft(df)((acc, f) => acc.withColumn(f.name,
-          org.apache.spark.sql.functions
-            .expr(f.metadata.getString(GenKey)).cast(f.dataType)))
     val updRow = (isM && mi.isNotNull && !isIn(mi, mDel)) ||
       (isT && ti.isNotNull && !isIn(ti, tDel))
     val delRow = (isM && isIn(mi, mDel)) || (isT && isIn(ti, tDel))
@@ -3379,8 +3273,12 @@ object TxnLog {
     val needsPin = idFieldsM.nonEmpty ||
       outCols.exists(c =>
         drifts(org.apache.spark.sql.GraftShim.expression(c)))
-    val mergedAll0 = regen(joined.filter(survives)
-      .select(outCols :+ branchTag: _*))
+    // GENERATED columns are ALWAYS recomputed from the merged row —
+    // an UPDATE that moves a base column cannot leave the generated
+    // (often partition) column stale, and an INSERT clause that omits
+    // it cannot land a null partition
+    val mergedAll0 = regenerate(joined.filter(survives)
+      .select(outCols :+ branchTag: _*), Some(schema))
     val mergedAll =
       if (needsPin) mergedAll0.localCheckpoint(true) else mergedAll0
     val merged = mergedAll.drop("__branch")
@@ -3399,33 +3297,12 @@ object TxnLog {
         .withColumn("_change_type", lit("insert")))
     val named = stageChecked(spark, table, merged, st.checks, pcols,
       Some(evolved))
-    val cdcNames = stage(spark, table, cdc, subdir = Some("_change_data"))
-    val trackedStats = st.stats.keys.map(_._2).toSeq.distinct.sorted
-    val trackedBlooms = st.blooms.keys.map(_._2).toSeq.distinct.sorted
-    val pm = physMapOf(Some(evolved))
-    // when every DV-masked file is rewritten here, clear the mask state
-    // (the rewrite materialized the deletions — same as overwrite)
-    val dvLine =
-      if (st.dvCounts.nonEmpty &&
-        st.dvCounts.keySet.subsetOf(touchedFiles.toSet)) Seq("dvclear")
-      else Nil
-    val actions = "op\tmerge" +: (dvLine ++
-      (if (newFields.nonEmpty) Seq(s"schema\t${evolved.json}") else Nil) ++
-      touchedFiles.map("remove\t" + _) ++ named.map("add\t" + _) ++
-      cdcNames.map("cdc\t" + _) ++ {
-        val foot = readFooters(table, named)
-        rowTrackLines(table, named, st, foot) ++
-          idHighLines(spark, table, named,
-            idFieldsM.map(_.name).toSeq, pm, foot) ++
-          statsLines(spark, table, named, trackedStats, pm, foot)
-      } ++
-      bloomLines(spark, table, named, trackedBlooms, pm) ++
-      rowcountLines(table, named))
-    val v = base + 1
-    if (!publish(table, v, actions))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    commit(spark, table, Plan("merge", base, st,
+      meta = dvClearIf(st, touchedFiles),
+      schema = if (newFields.nonEmpty) Some(evolved.json) else None,
+      removes = touchedFiles, staged = named,
+      cdc = stageCdc(spark, table, cdc), layout = Some(evolved),
+      idCols = idFieldsM.map(_.name).toSeq))
   }
 
   /** DYNAMIC PARTITION OVERWRITE (Spark's INSERT OVERWRITE dynamic
@@ -3450,13 +3327,10 @@ object TxnLog {
                           explicitParts: Set[Seq[String]] = Set.empty)
       : Long = {
     import org.apache.spark.sql.functions.lit
-    require(exists(table), s"not a TxnLog table: $table")
-    val base = expectedVersion.getOrElse(versions(table).last)
-    val st = replayState(table, base)
+    val (base, st) = baseOf(table, expectedVersion)
     val pcols = partitionColsOf(st).getOrElse(sys.error(
       s"overwritePartitions requires a hive-partitioned table: $table"))
-    val declared =
-      st.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+    val declared = st.declared
     declared.foreach(validateAgainst(_, df.schema, mergeSchema = false))
     // identity columns (never partition columns, by DDL rule): the
     // swapped-in rows are new rows — fresh values past the committed
@@ -3487,46 +3361,10 @@ object TxnLog {
       case (Some(o), Some(n)) => Some(o.unionByName(n))
       case (o, n) => o.orElse(n)
     }
-    val cdcNames = cdc.fold(Seq.empty[String])(c =>
-      stage(spark, table, c, subdir = Some("_change_data")))
-    val trackedStats = st.stats.keys.map(_._2).toSeq.distinct.sorted
-    val trackedBlooms = st.blooms.keys.map(_._2).toSeq.distinct.sorted
-    val idColsOp = declared.toSeq.flatMap(_.fields)
-      .filter(_.metadata.contains(IdKey)).map(_.name)
-    val foot = readFooters(table, named)
-    val idLines = idHighLines(spark, table, named, idColsOp,
-      physMapOf(declared), foot)
-    val rtLines = rowTrackLines(table, named, st, foot)
-    val actions = "op\treplacePartitions" +:
-      (removes.map("remove\t" + _) ++ named.map("add\t" + _) ++
-        cdcNames.map("cdc\t" + _) ++ idLines ++ rtLines ++
-        statsLines(spark, table, named, trackedStats,
-          physMapOf(declared), foot) ++
-        bloomLines(spark, table, named, trackedBlooms,
-          physMapOf(declared)) ++
-        rowcountLines(table, named, foot))
-    var checkedUpTo = base
-    var v = base + 1
-    while (!publish(table, v, actions)) {
-      val head = versions(table).last
-      // identity guard (same as append's): a lost race is only safely
-      // retried when no intervening commit moved the high-water our
-      // reserved range was computed from
-      if (idLines.nonEmpty) {
-        val hs = replayState(table, head)
-        if (idColsOp.exists(cn =>
-            hs.idHigh.getOrElse(cn, Long.MinValue) !=
-            st.idHigh.getOrElse(cn, Long.MinValue)))
-          throw new ConcurrentCommitException(v)
-      }
-      val conflict = (checkedUpTo + 1 to head).exists(cv =>
-        actionTouches(actionsOf(table, cv), touched))
-      if (conflict) throw new ConcurrentCommitException(v)
-      checkedUpTo = head
-      v = head + 1
-    }
-    maybeCheckpoint(table, v)
-    v
+    commit(spark, table, Plan("replacePartitions", base, st,
+      removes = removes, staged = named,
+      cdc = cdc.toSeq.flatMap(stageCdc(spark, table, _)), layout = declared,
+      idCols = idColsOf(declared), onConflict = Disjoint(touched)))
   }
 
   /** Stats-interval candidate files for an ARBITRARY predicate:
@@ -3634,11 +3472,8 @@ object TxnLog {
                    expectedVersion: Option[Long] = None): Long = {
     import org.apache.spark.sql.functions.{coalesce, expr,
       input_file_name, lit}
-    require(exists(table), s"not a TxnLog table: $table")
-    val base = expectedVersion.getOrElse(versions(table).last)
-    val st = replayState(table, base)
-    val declared =
-      st.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+    val (base, st) = baseOf(table, expectedVersion)
+    val declared = st.declared
     val pcols = partitionColsOf(st).getOrElse(Nil)
     // identity columns: the batch's rows are NEW rows — GENERATED
     // ALWAYS overwrites any supplied values with fresh ones past the
@@ -3681,33 +3516,14 @@ object TxnLog {
       case (Some(d), Some(i)) => Some(d.unionByName(i))
       case (d, i) => d.orElse(i)
     }
-    val cdcNames = cdc.fold(Seq.empty[String])(c =>
-      stage(spark, table, c, subdir = Some("_change_data")))
-    val named = namedSurv ++ namedNew
-    val trackedStats = st.stats.keys.map(_._2).toSeq.distinct.sorted
-    val trackedBlooms = st.blooms.keys.map(_._2).toSeq.distinct.sorted
-    val pm = physMapOf(declared)
-    val dvLine =
-      if (st.dvCounts.nonEmpty &&
-        st.dvCounts.keySet.subsetOf(victims.toSet)) Seq("dvclear")
-      else Nil
-    val idColsRw = declared.toSeq.flatMap(_.fields)
-      .filter(_.metadata.contains(IdKey)).map(_.name)
-    val actions = "op\treplaceWhere" +: (dvLine ++
-      victims.map("remove\t" + _) ++ named.map("add\t" + _) ++
-      cdcNames.map("cdc\t" + _) ++
-      idHighLines(spark, table, namedNew, idColsRw, pm) ++ {
-        val foot = readFooters(table, named)
-        rowTrackLines(table, named, st, foot) ++
-          statsLines(spark, table, named, trackedStats, pm, foot) ++
-          bloomLines(spark, table, named, trackedBlooms, pm) ++
-          rowcountLines(table, named, foot)
-      })
-    val v = base + 1
-    if (!publish(table, v, actions))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    // survivors keep their stored identity values, all at or below the
+    // committed high-water, so one high-water over every staged file is
+    // the new rows' high-water
+    commit(spark, table, Plan("replaceWhere", base, st,
+      meta = dvClearIf(st, victims), removes = victims,
+      staged = namedSurv ++ namedNew,
+      cdc = cdc.toSeq.flatMap(stageCdc(spark, table, _)), layout = declared,
+      idCols = idColsOf(declared)))
   }
 
   /** Exactly-once streaming MERGE sink: [[upsert]] guarded by the same
@@ -3774,11 +3590,8 @@ object TxnLog {
               incremental: Boolean = false): Long = {
     import org.apache.spark.sql.functions.{col, greatest, least, lit,
       max, min}
-    require(exists(table), s"not a TxnLog table: $table")
-    val base = expectedVersion.getOrElse(versions(table).last)
-    val st = replayState(table, base)
-    val declared =
-      st.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+    val (base, st) = baseOf(table, expectedVersion)
+    val declared = st.declared
     // PARTITION-SCOPED compaction (Delta's `OPTIMIZE … WHERE`): only
     // the files of the named partitions are read and re-laid — the
     // daily pattern at 100 TB is "compact yesterday's partition", and
@@ -3843,6 +3656,8 @@ object TxnLog {
         readFilesWithRid(spark, table, scope, declared, st)
       else readFiles(spark, table, scope, declared,
         dvOf(spark, table, st))
+    val sc = if (statsCols.nonEmpty) statsCols else clusterBy
+    checkStatsCols(snap0.schema, sc)
     // clusterBy = Delta's OPTIMIZE ZORDER in its range-cluster form:
     // the rewrite range-lays rows on the cluster columns, so each new
     // file owns a narrow value interval and the fresh per-file stats
@@ -3909,32 +3724,20 @@ object TxnLog {
       }
     val named = stage(spark, table, toPhys(snap, declared),
       partitionColsOf(st).getOrElse(Nil))
-    val sc = if (statsCols.nonEmpty) statsCols else clusterBy
     // scoped rewrites (partition / incremental) leave untouched files'
     // DV masks live; only a FULL compaction materializes all deletes
     val dvLine =
       if (partitions.isEmpty && !incremental) Seq("dvclear") else Nil
-    val v = base + 1
     // every clustering commit advances the clustered-through marker —
-    // the baseline the next incremental pass diffs against
+    // the baseline the next incremental pass diffs against (the commit
+    // is CAS-pinned, so it lands at exactly base + 1)
     val ctLine =
-      if (clusterBy.nonEmpty) Seq(s"prop\t$clusteredThroughKey\t$v")
+      if (clusterBy.nonEmpty) Seq(s"prop\t$clusteredThroughKey\t${base + 1}")
       else Nil
-    if (!publish(table, v, "op\tcompact" +: "nochange" +: (dvLine ++
-        ctLine ++
-        scope.map("remove\t" + _) ++ named.map("add\t" + _) ++
-          {
-            val foot = readFooters(table, named)
-            rowTrackLines(table, named, st, foot) ++
-              statsLines(spark, table, named, sc, physMapOf(declared),
-                foot) ++
-              bloomLines(spark, table, named, bloomCols,
-                physMapOf(declared)) ++
-              rowcountLines(table, named, foot)
-          })))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    commit(spark, table, Plan("compact", base, st,
+      meta = "nochange" +: (dvLine ++ ctLine), removes = scope,
+      staged = named, layout = declared, statsCols = sc,
+      bloomCols = bloomCols))
   }
 
   /** Copy-on-write DELETE: remove the rows matching `cond` in one
@@ -3945,8 +3748,7 @@ object TxnLog {
   def deleteWhere(spark: SparkSession, table: String, cond: Column,
                   expectedVersion: Option[Long] = None): Long = {
     import org.apache.spark.sql.functions.lit
-    require(exists(table), s"not a TxnLog table: $table")
-    val base = expectedVersion.getOrElse(versions(table).last)
+    val (base, _) = baseOf(table, expectedVersion)
     val snap = snapshot(spark, table, Some(base))
     // SQL/Delta DELETE semantics: only cond === TRUE rows are deleted; a
     // NULL predicate KEEPS the row. Splitting on raw cond/!cond would
@@ -3972,11 +3774,9 @@ object TxnLog {
   def updateWhere(spark: SparkSession, table: String, cond: Column,
                   set: Seq[(String, Column)],
                   expectedVersion: Option[Long] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    require(exists(table), s"not a TxnLog table: $table")
+    import org.apache.spark.sql.functions.{coalesce, lit}
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
-    val base = expectedVersion.getOrElse(versions(table).last)
-    val st = replayState(table, base)
+    val (base, st) = baseOf(table, expectedVersion)
     // merge-on-read routing: a table that already pays the DV read tax
     // (live DVs) or opted in (`graft.dvUpdate` = true) takes the
     // masked-positions path — zero victim files rewritten; explicit
@@ -3986,42 +3786,47 @@ object TxnLog {
         !set.exists { case (c, _) =>
           partitionColsOf(st).exists(_.contains(c)) })
       return updateWhereDV(spark, table, cond, set, Some(base))
-    val declared =
-      st.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
-    val byName = set.toMap
+    val declared = st.declared
+    checkSet(set, declared)
+    val snap = snapshot(spark, table, Some(base))
+    val hit = coalesce(cond, lit(false))
+    val pre = snap.filter(hit)
+    val post = assign(pre, pre.columns.toSeq, set, declared)
+    val cdc = pre.withColumn("_change_type", lit("update_preimage"))
+      .unionByName(post.withColumn("_change_type",
+        lit("update_postimage")))
+    overwrite(spark, table, snap.filter(!hit).unionByName(post), Some(base),
+      cdcRows = Some(cdc), opName = "update", assignIdentity = false)
+  }
+
+  /** UPDATE's SET targets must be declared, non-generated columns. */
+  private def checkSet(set: Seq[(String, Column)],
+                       declared: Option[StructType]): Unit =
     declared.foreach { d =>
-      val missing = byName.keySet -- d.fieldNames.toSet
+      val missing = set.map(_._1).toSet -- d.fieldNames.toSet
       require(missing.isEmpty,
         s"UPDATE sets undeclared column(s): ${missing.mkString(", ")}")
       d.fields.filter(f => f.metadata.contains(GenKey) ||
           f.metadata.contains(IdKey)).foreach(f => require(
-        !byName.keySet.exists(_.equalsIgnoreCase(f.name)),
-        s"cannot SET generated column ${f.name} — " +
-          "its value channel is the table's (GENERATED ALWAYS)"))
+        !set.exists(_._1.equalsIgnoreCase(f.name)),
+        s"cannot SET generated column ${f.name} — it is recomputed " +
+          "(GENERATED ALWAYS)"))
     }
-    val snap = snapshot(spark, table, Some(base))
-    val hit = coalesce(cond, lit(false))
-    val untouched = snap.filter(!hit)
-    val pre = snap.filter(hit)
-    def assigned(df: DataFrame): DataFrame =
-      df.select(df.columns.toSeq.map { c =>
-        byName.get(c).fold(col(c)) { v =>
-          declared.map(_(c).dataType).fold(v)(v.cast).as(c)
-        }
-      }: _*)
-    // generated columns follow their base columns (recompute-always,
-    // same contract as the DV path): a SET that moves a base column
-    // cannot leave its generated (often partition) column stale
-    val post = declared.fold(assigned(pre))(d =>
-      d.fields.filter(_.metadata.contains(GenKey))
-        .foldLeft(assigned(pre))((acc, f) => acc.withColumn(f.name,
-          org.apache.spark.sql.functions
-            .expr(f.metadata.getString(GenKey)).cast(f.dataType))))
-    val cdc = pre.withColumn("_change_type", lit("update_preimage"))
-      .unionByName(post.withColumn("_change_type",
-        lit("update_postimage")))
-    overwrite(spark, table, untouched.unionByName(post), Some(base),
-      cdcRows = Some(cdc), opName = "update", assignIdentity = false)
+
+  /** The post-image of an UPDATE: `cols` of `rows` with the SET values
+    * applied — each store-assignment cast to its declared type, SQL's
+    * contract — and GENERATED columns recomputed from it (a SET that
+    * moves a base column cannot leave its generated, often partition,
+    * column stale). */
+  private def assign(rows: DataFrame, cols: Seq[String],
+                     set: Seq[(String, Column)],
+                     declared: Option[StructType]): DataFrame = {
+    val byName = set.toMap
+    regenerate(rows.select(cols.map { c =>
+      byName.get(c).fold(org.apache.spark.sql.functions.col(c)) { v =>
+        declared.map(_(c).dataType).fold(v)(v.cast).as(c)
+      }
+    }: _*), declared)
   }
 
   /** MERGE-ON-READ DELETE via deletion vectors (Delta's DV feature /
@@ -4044,71 +3849,8 @@ object TxnLog {
     * semantics match [[deleteWhere]]: only cond === TRUE rows die.
     * CAS-pinned like every snapshot-derived commit. */
   def deleteWhereDV(spark: SparkSession, table: String, cond: Column,
-                    expectedVersion: Option[Long] = None): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
-    require(exists(table), s"not a TxnLog table: $table")
-    val base = expectedVersion.getOrElse(versions(table).last)
-    val st = replayState(table, base)
-    val declared =
-      st.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
-    // DV-aware victim scan: rows already deleted by earlier DVs cannot
-    // be victimized twice, so per-file counts stay exact under repeated
-    // deletes. Positions are captured in the scan pass (keepDvPos) —
-    // _metadata does not resolve through the anti join. The DECLARED
-    // schema pins the scan like every other reader: on a schema-evolved
-    // table a single-footer inference may lack evolved columns, so the
-    // predicate (or the CDC projection) would fail or see the column on
-    // only some files — inconsistent with deleteWhere's behavior.
-    // On a row-tracking table the scan also surfaces `_row_id`, so the
-    // predicate can address rows PHYSICALLY (`_row_id IN (…)` from an
-    // external system — a labeling job, an audit — that captured ids
-    // from [[snapshotWithRowIds]]): row-id DML without user keys, the
-    // point of row tracking.
-    val raw =
-      if (rowTrackingOn(st))
-        readFilesWithRid(spark, table, st.live, declared, st,
-          keepPos = true).withColumn("_row_id", col(RidCol))
-      else readFiles(spark, table, st.live, declared,
-        dvOf(spark, table, st), keepDvPos = true)
-    val hit = org.apache.spark.sql.functions.coalesce(cond, lit(false))
-    val victims = raw.filter(hit)
-      .localCheckpoint(true) // one scan feeds DV stage + counts + cdc
-    val perFile = victims.groupBy("__dv_f")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-      .collect() // ≤ |live files| rows
-      .map(r => r.getString(0) -> r.getLong(1))
-    if (perFile.isEmpty) {
-      // nothing matched: a marker-only commit (still a version — the
-      // caller observes the delete happened), zero DV read tax added
-      val v0 = base + 1
-      if (!publish(table, v0, Seq("op\tdeleteDV")))
-        throw new ConcurrentCommitException(v0)
-      maybeCheckpoint(table, v0)
-      return v0
-    }
-    val dvNamed = stage(spark, table,
-      victims.select(col("__dv_f"), col("__dv_r")),
-      subdir = Some("_deletion_vectors"))
-    // leaf name → committed relative path (partitioned files live in
-    // col=val dirs; the DV keys use the leaf, counts key the log path)
-    val byLeaf = st.live.map(f => f.split('/').last -> f).toMap
-    val dataCols = declared.map(_.fieldNames.toSeq)
-      .getOrElse(raw.columns.toSeq.filterNot(c =>
-        c.startsWith("__dv_") || c == RidCol || c == "_row_id"))
-    val cdc = victims
-      .select(dataCols.map(col): _*)
-      .withColumn("_change_type", lit("delete"))
-    val cdcNames = stage(spark, table, cdc, subdir = Some("_change_data"))
-    val actions = "op\tdeleteDV" +: (dvNamed.map("dv\t" + _) ++
-      perFile.toSeq.sortBy(_._1).map { case (leaf, n) =>
-        s"dvcount\t${byLeaf(leaf)}\t$n" } ++
-      cdcNames.map("cdc\t" + _))
-    val v = base + 1
-    if (!publish(table, v, actions))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
-  }
+                    expectedVersion: Option[Long] = None): Long =
+    maskWhere(spark, table, cond, None, expectedVersion)
 
   /** MERGE-ON-READ UPDATE via deletion vectors (the UPDATE twin of
     * [[deleteWhereDV]], Delta's DV-update): instead of rewriting every
@@ -4129,100 +3871,77 @@ object TxnLog {
   def updateWhereDV(spark: SparkSession, table: String, cond: Column,
                     set: Seq[(String, Column)],
                     expectedVersion: Option[Long] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit}
-    require(exists(table), s"not a TxnLog table: $table")
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
-    val base = expectedVersion.getOrElse(versions(table).last)
-    val st = replayState(table, base)
-    val declared =
-      st.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
-    val byName = set.toMap
-    declared.foreach { d =>
-      val missing = byName.keySet -- d.fieldNames.toSet
-      require(missing.isEmpty,
-        s"UPDATE sets undeclared column(s): ${missing.mkString(", ")}")
-      d.fields.filter(f => f.metadata.contains(GenKey) ||
-          f.metadata.contains(IdKey)).foreach(f => require(
-        !byName.keySet.exists(_.equalsIgnoreCase(f.name)),
-        s"cannot SET generated column ${f.name} — it is recomputed"))
-    }
+    maskWhere(spark, table, cond, Some(set), expectedVersion)
+  }
+
+  /** The merge-on-read DML both DV writers share — a delete is an
+    * update with no post-image: ONE DV-aware victim scan (rows an
+    * earlier DV already deleted cannot be victimized twice, so per-file
+    * counts stay exact; positions are captured in the scan pass —
+    * `_metadata` does not resolve through the anti join) pinned once to
+    * feed the DV file, the per-file counts, the CDF and, for an update,
+    * the touch-up file. The DECLARED schema pins the scan like every
+    * other reader. On a row-tracking table the scan also surfaces
+    * `_row_id`, so the predicate can address rows PHYSICALLY (`_row_id
+    * IN (…)` captured from [[snapshotWithRowIds]]), and the touch-up
+    * rows MATERIALIZE their victims' ids — an updated row keeps its
+    * identity (Delta's preserved-row-ids contract). Nothing matched: a
+    * marker-only commit (still a version), zero DV read tax added. */
+  private def maskWhere(spark: SparkSession, table: String, cond: Column,
+                        set: Option[Seq[(String, Column)]],
+                        expectedVersion: Option[Long]): Long = {
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit}
+    val op = if (set.isEmpty) "deleteDV" else "updateDV"
+    val (base, st) = baseOf(table, expectedVersion)
+    val declared = st.declared
+    set.foreach(checkSet(_, declared))
     val pcols = partitionColsOf(st).getOrElse(Nil)
-    require(!pcols.exists(byName.keySet.contains),
+    require(!set.exists(_.exists { case (c, _) => pcols.contains(c) }),
       "DV update cannot move rows across partitions — SET of a " +
         "partition column needs the copy-on-write updateWhere")
     val tracking = rowTrackingOn(st)
-    // ROW TRACKING: the victim scan also resolves each row's stable id
-    // so the touch-up file can MATERIALIZE it — an updated row keeps
-    // its identity across the update (Delta's preserved-row-ids MERGE
-    // contract, in the one DML path where it costs nothing extra: the
-    // positions are already in hand for the DV mask)
     val raw =
       if (tracking)
         readFilesWithRid(spark, table, st.live, declared, st,
           keepPos = true).withColumn("_row_id", col(RidCol))
       else readFiles(spark, table, st.live, declared,
         dvOf(spark, table, st), keepDvPos = true)
-    val hit = coalesce(cond, lit(false))
-    val victims = raw.filter(hit)
-      .localCheckpoint(true) // one scan feeds DV stage + post + cdc
+    val victims = raw.filter(coalesce(cond, lit(false)))
+      .localCheckpoint(true)
     val perFile = victims.groupBy("__dv_f")
       .agg(count(lit(1)).as("n"))
       .collect() // ≤ |live files| rows
       .map(r => r.getString(0) -> r.getLong(1))
-    if (perFile.isEmpty) {
-      val v0 = base + 1
-      if (!publish(table, v0, Seq("op\tupdateDV")))
-        throw new ConcurrentCommitException(v0)
-      maybeCheckpoint(table, v0)
-      return v0
-    }
+    if (perFile.isEmpty) return commit(spark, table, Plan(op, base, st))
     val dvNamed = stage(spark, table,
       victims.select(col("__dv_f"), col("__dv_r")),
       subdir = Some("_deletion_vectors"))
+    // leaf name → committed relative path (partitioned files live in
+    // col=val dirs; the DV keys use the leaf, counts key the log path)
     val byLeaf = st.live.map(f => f.split('/').last -> f).toMap
     val dataCols = declared.map(_.fieldNames.toSeq)
       .getOrElse(raw.columns.toSeq.filterNot(c =>
         c.startsWith("__dv_") || c == RidCol || c == "_row_id"))
     val pre = victims.select(dataCols.map(col): _*)
-    // the touch-up rows carry the victims' stable ids (RidCol) on a
-    // tracking table, so the update PRESERVES row identity; the CDF
-    // pre/postimage pairs stay at table schema (no rid column)
-    val post0 = victims.select((dataCols.map { c =>
-      byName.get(c).fold(col(c)) { v =>
-        declared.map(_(c).dataType).fold(v)(v.cast).as(c)
-      }
-    } ++ (if (tracking) Seq(col(RidCol)) else Nil)): _*)
-    // generated columns follow their base columns (recompute-always)
-    val post = declared.fold(post0)(d =>
-      d.fields.filter(_.metadata.contains(GenKey))
-        .foldLeft(post0)((acc, f) => acc.withColumn(f.name,
-          org.apache.spark.sql.functions
-            .expr(f.metadata.getString(GenKey)).cast(f.dataType))))
-    val named = stageChecked(spark, table, post, st.checks, pcols,
-      declared)
-    val postCdc = if (tracking) post.drop(RidCol) else post
-    val cdc = pre.withColumn("_change_type", lit("update_preimage"))
-      .unionByName(postCdc.withColumn("_change_type",
-        lit("update_postimage")))
-    val cdcNames = stage(spark, table, cdc, subdir = Some("_change_data"))
-    val trackedStats = st.stats.keys.map(_._2).toSeq.distinct.sorted
-    val trackedBlooms = st.blooms.keys.map(_._2).toSeq.distinct.sorted
-    val pm = physMapOf(declared)
-    val actions = "op\tupdateDV" +: (dvNamed.map("dv\t" + _) ++
-      perFile.toSeq.sortBy(_._1).map { case (leaf, n) =>
-        s"dvcount\t${byLeaf(leaf)}\t$n" } ++
-      named.map("add\t" + _) ++ cdcNames.map("cdc\t" + _) ++ {
-        val foot = readFooters(table, named)
-        rowTrackLines(table, named, st, foot) ++
-          statsLines(spark, table, named, trackedStats, pm, foot) ++
-          bloomLines(spark, table, named, trackedBlooms, pm) ++
-          rowcountLines(table, named, foot)
-      })
-    val v = base + 1
-    if (!publish(table, v, actions))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    val (named, cdc) = set match {
+      case None => (Nil, pre.withColumn("_change_type", lit("delete")))
+      case Some(s) =>
+        // the touch-up rows carry the victims' stable ids (RidCol) on a
+        // tracking table; the CDF pre/postimage pairs stay at table
+        // schema (no rid column)
+        val post = assign(victims,
+          dataCols ++ (if (tracking) Seq(RidCol) else Nil), s, declared)
+        (stageChecked(spark, table, post, st.checks, pcols, declared),
+          pre.withColumn("_change_type", lit("update_preimage"))
+            .unionByName((if (tracking) post.drop(RidCol) else post)
+              .withColumn("_change_type", lit("update_postimage"))))
+    }
+    commit(spark, table, Plan(op, base, st,
+      meta = dvNamed.map("dv\t" + _) ++
+        perFile.toSeq.sortBy(_._1).map { case (leaf, n) =>
+          s"dvcount\t${byLeaf(leaf)}\t$n" },
+      staged = named, cdc = stageCdc(spark, table, cdc), layout = declared))
   }
 
   /** Row-level change feed (Delta CDF): every change committed in
@@ -4307,8 +4026,7 @@ object TxnLog {
         // DV-carrying SHALLOW CLONE's v1 arrives with adds and masks
         // together — its insert feed must not resurrect deleted rows.
         val stv = replayState(table, v)
-        val sch = stv.schemaJson
-          .map(DataType.fromJson(_).asInstanceOf[StructType])
+        val sch = stv.declared
         Some(readFiles(spark, table, adds, sch,
             dv = dvOf(spark, table, stv))
           .withColumn("_change_type", lit("insert"))
@@ -4340,11 +4058,9 @@ object TxnLog {
     * included, exactly Delta's RESTORE semantics). */
   def restore(spark: SparkSession, table: String, toVersion: Long,
               expectedVersion: Option[Long] = None): Long = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"not a TxnLog table: $table")
-    require(vs.contains(toVersion), s"version $toVersion not in log")
-    val base = expectedVersion.getOrElse(vs.last)
-    val cur = replayState(table, base)
+    val (base, cur) = baseOf(table, expectedVersion)
+    require(versions(table).contains(toVersion),
+      s"version $toVersion not in log")
     val tgt = replayState(table, toVersion)
     val rfs = fsOf(tablePath(table))
     val missing = tgt.live.filterNot(f =>
@@ -4354,15 +4070,6 @@ object TxnLog {
         s"of its files (first: ${missing.headOption.getOrElse("")})")
     val removes = cur.live.filterNot(tgt.live.contains)
     val adds = tgt.live.filterNot(cur.live.contains)
-    val schemaLine = tgt.schemaJson.filter(j => !cur.schemaJson.contains(j))
-      .map("schema\t" + _)
-    val tgtStatsByFile = tgt.stats.groupBy(_._1._1) // O(metadata), not O(adds × stats)
-    val stats = adds.flatMap(f => tgtStatsByFile.getOrElse(f, Map.empty)
-      .toSeq.sortBy(_._1._2).map { case ((_, c), (mn, mx)) =>
-        s"stats\t$f\t$c\t$mn\t$mx" })
-    val rcs = adds.flatMap(f =>
-      tgt.rowcounts.get(f).map(n => s"rowcount\t$f\t$n")) ++
-      adds.flatMap(f => tgt.sizes.get(f).map(n => s"fsize\t$f\t$n"))
     // deletion-vector state rolls back WITH the snapshot: DVs journaled
     // after `toVersion` must not keep masking the restored files, and
     // the target's own DVs come back (their files are vacuum-guarded
@@ -4382,20 +4089,38 @@ object TxnLog {
     // enabled after `toVersion`; its backfill keyed the then-live set)
     // reserve fresh ranges past the current high-water — `rowhigh` is
     // max-merged on replay, so history's reservations never shrink.
-    val rtLines: Seq[String] =
-      if (!rowTrackingOn(cur)) Nil
-      else {
-        val (known, fresh) = adds.partition(tgt.rowBases.contains)
-        known.sorted.map(f => s"rowbase\t$f\t${tgt.rowBases(f)}") ++
-          rowTrackLines(table, fresh, cur)
-      }
-    val v = base + 1
-    if (!publish(table, v, "op\trestore" +: (schemaLine.toSeq ++
-        removes.map("remove\t" + _) ++ adds.map("add\t" + _) ++ stats ++
-        rcs ++ dvLines ++ rtLines)))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    val (known, fresh) =
+      if (rowTrackingOn(cur)) adds.partition(tgt.rowBases.contains)
+      else (Nil, Nil)
+    commit(spark, table, Plan("restore", base, cur,
+      meta = adds.map("add\t" + _) ++ fileMetaLines(tgt, adds) ++ dvLines ++
+        known.sorted.map(f => s"rowbase\t$f\t${tgt.rowBases(f)}"),
+      schema = tgt.schemaJson.filter(j => !cur.schemaJson.contains(j)),
+      removes = removes,
+      rowIds = fresh.map(f => f -> tgt.rowcounts.get(f))))
+  }
+
+  /** The committed per-file skipping and size metadata (stats, blooms,
+    * rowcount, fsize) of `files` in `st`, keyed by `key(file)` — what a
+    * commit re-adding already-committed files (restore, clone) carries
+    * over. The per-(file, column) maps are grouped by file ONCE: a
+    * per-file scan of the whole map would be O(files × entries),
+    * quadratic for wide stats, and these commits must stay
+    * O(metadata). */
+  private def fileMetaLines(st: State, files: Seq[String],
+                            key: String => String = identity)
+      : Seq[String] = {
+    val statsByFile = st.stats.groupBy(_._1._1)
+    val bloomsByFile = st.blooms.groupBy(_._1._1)
+    files.flatMap(f => statsByFile.getOrElse(f, Map.empty).toSeq
+      .sortBy(_._1._2).map { case ((_, c), (mn, mx)) =>
+        s"stats\t${key(f)}\t$c\t$mn\t$mx" }) ++
+      files.flatMap(f => bloomsByFile.getOrElse(f, Map.empty).toSeq
+        .sortBy(_._1._2).map { case ((_, c), (m, k, bits)) =>
+          s"bloom\t${key(f)}\t$c\t$m\t$k\t${bitsToB64(bits)}" }) ++
+      files.flatMap(f =>
+        st.rowcounts.get(f).map(n => s"rowcount\t${key(f)}\t$n")) ++
+      files.flatMap(f => st.sizes.get(f).map(n => s"fsize\t${key(f)}\t$n"))
   }
 
   /** SHALLOW CLONE (Delta's `CREATE TABLE … SHALLOW CLONE`): a new
@@ -4429,32 +4154,15 @@ object TxnLog {
       s"source path must not contain '=' (partition-segment parsing): " +
         srcQ)
     def abs(f: String): String = new HPath(srcQ, f).toString
-    // group the per-(file, column) maps by file ONCE — a per-live-file
-    // scan of the whole stats map would be O(files × stats entries),
-    // quadratic in file count for wide stats, and the clone commit must
-    // stay O(metadata)
-    val statsByFile = st.stats.groupBy(_._1._1)
-    val bloomsByFile = st.blooms.groupBy(_._1._1)
-    val lines = Seq(s"op\tclone\t$srcQ\t$v") ++
+    val lines =
       // the source's protocol floors travel with the semantics they
       // gate (identity reservations, row tracking): an old build must
       // refuse the clone exactly as it would refuse the source
       (if (st.minReader > 1L) Seq(s"minreader\t${st.minReader}") else Nil) ++
       (if (st.minWriter > 1L) Seq(s"minwriter\t${st.minWriter}") else Nil) ++
-      st.schemaJson.map("schema\t" + _) ++
       st.props.toSeq.sortBy(_._1).map { case (k, pv) => s"prop\t$k\t$pv" } ++
-      st.checks.toSeq.sortBy(_._1).map { case (n, e) => s"check\t$n\t$e" } ++
-      st.live.map(f => "add\t" + abs(f)) ++
-      st.live.flatMap(f => statsByFile.getOrElse(f, Map.empty).toSeq
-        .sortBy(_._1._2).map { case ((_, c), (mn, mx)) =>
-          s"stats\t${abs(f)}\t$c\t$mn\t$mx" }) ++
-      st.live.flatMap(f => bloomsByFile.getOrElse(f, Map.empty).toSeq
-        .sortBy(_._1._2).map { case ((_, c), (m, k, bits)) =>
-          s"bloom\t${abs(f)}\t$c\t$m\t$k\t${bitsToB64(bits)}" }) ++
-      st.live.flatMap(f =>
-        st.rowcounts.get(f).map(n => s"rowcount\t${abs(f)}\t$n")) ++
-      st.live.flatMap(f =>
-        st.sizes.get(f).map(n => s"fsize\t${abs(f)}\t$n")) ++
+      checkLines(st.checks.toSeq.sortBy(_._1)) ++
+      st.live.map(f => "add\t" + abs(f)) ++ fileMetaLines(st, st.live, abs) ++
       // live deletion vectors clone as absolute references like data
       // files: skip sets key by LEAF data-file name, so the masked
       // rows stay deleted through every read path
@@ -4467,20 +4175,14 @@ object TxnLog {
       st.live.flatMap(f =>
         st.rowBases.get(f).map(b => s"rowbase\t${abs(f)}\t$b")) ++
       (if (st.rowHigh > 0L) Seq(s"rowhigh\t${st.rowHigh}") else Nil)
-    if (!publish(dest, 1L, lines))
-      throw new ConcurrentCommitException(1L)
-    1L
+    commit(spark, dest, Plan(s"clone\t$srcQ\t$v", 0L, State(), meta = lines,
+      schema = st.schemaJson))
   }
 
   /** The table's CHECK constraints as of `asOf` (name → SQL predicate). */
   def checkConstraints(table: String,
-                       asOf: Option[Long] = None): Map[String, String] = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"not a TxnLog table: $table")
-    val upTo = asOf.getOrElse(vs.last)
-    require(vs.contains(upTo), s"version $upTo not in log (have $vs)")
-    replayState(table, upTo).checks
-  }
+                       asOf: Option[Long] = None): Map[String, String] =
+    stateAt(table, asOf).checks
 
   /** Add a CHECK constraint to an existing table: the CURRENT snapshot
     * must already satisfy it (one validating scan — a constraint that
@@ -4494,17 +4196,13 @@ object TxnLog {
     import org.apache.spark.sql.functions.{coalesce, expr, lit}
     require(!name.contains('\t') && !exprSql.contains('\t'),
       "constraint names/expressions must be tab-free")
-    require(exists(table), s"not a TxnLog table: $table")
-    val base = versions(table).last
+    val (base, st) = baseOf(table)
     val nBad = snapshot(spark, table, Some(base))
       .where(coalesce(expr(exprSql), lit(true)) === false).limit(1).count()
     if (nBad > 0) throw new ConstraintViolationException(
       s"existing rows violate CHECK $name ($exprSql)")
-    val v = base + 1
-    if (!publish(table, v, Seq("op\taddCheck", s"check\t$name\t$exprSql")))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    commit(spark, table, Plan("addCheck", base, st,
+      meta = checkLines(Seq((name, exprSql)))))
   }
 
   /** CONVERT an existing plain-parquet directory (flat or
@@ -4548,13 +4246,11 @@ object TxnLog {
     // footer-inferred schema INCLUDING hive partition columns (the
     // same discovery every later reader applies to the logged paths)
     val schema = spark.read.parquet(table).schema
-    val lines = Seq("op\tconvert", "minreader\t1", "minwriter\t1",
-        s"schema\t${schema.json}") ++
-      found.sortBy(_._1).flatMap { case (f, len) =>
-        Seq("add\t" + f, s"fsize\t$f\t$len") }
-    if (!publish(table, 1L, lines))
-      throw new ConcurrentCommitException(1L)
-    1L
+    commit(spark, table, Plan("convert", 0L, State(),
+      meta = Seq("minreader\t1", "minwriter\t1") ++
+        found.sortBy(_._1).flatMap { case (f, len) =>
+          Seq("add\t" + f, s"fsize\t$f\t$len") },
+      schema = Some(schema.json)))
   }
 
   /** SET TBLPROPERTIES as one metadata commit: sticky key→value pairs
@@ -4562,54 +4258,32 @@ object TxnLog {
     * same channel columnMapping rides. CAS-pinned. */
   def setProperties(spark: SparkSession, table: String,
                     props: Map[String, String]): Long = {
-    require(exists(table), s"not a TxnLog table: $table")
     require(props.nonEmpty, "no properties to set")
     props.foreach { case (k, pv) =>
       require(!k.contains('\t') && !pv.contains('\t'),
         "property keys/values must be tab-free") }
-    val base = versions(table).last
+    val (base, st) = baseOf(table)
     // ROW TRACKING enablement (Delta's property-triggered backfill):
     // the SAME commit that sets the property assigns every existing
     // live file its base from the COMMITTED rowcounts — pure metadata,
     // zero data bytes — and raises the protocol floor so an old build
     // fails with "upgrade", not corrupt-log/missing-ids. Re-setting an
     // already-on property is a plain prop write (bases exist).
-    val enableRt = props.get(RowTrackKey).contains("true") && {
-      val st = replayState(table, base)
-      !rowTrackingOn(st)
-    }
-    val rtLines: Seq[String] =
-      if (!enableRt) Nil
-      else {
-        val st = replayState(table, base)
-        var next = st.rowHigh
-        val bases = st.live.sorted.map { f =>
-          val cnt = st.rowcounts.getOrElse(f, sys.error(
-            s"cannot enable $RowTrackKey: live file $f has no committed " +
-              "rowcount (pre-rowcount log era) — compact the table first"))
-          val b = next
-          next += cnt
-          s"rowbase\t$f\t$b"
-        }
-        Seq("minreader\t3", "minwriter\t3") ++ bases :+ s"rowhigh\t$next"
-      }
-    val v = base + 1
-    if (!publish(table, v, "op\tsetProperties" +: (rtLines ++
-        props.toSeq.sortBy(_._1).map { case (k, pv) => s"prop\t$k\t$pv" })))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    val enableRt =
+      props.get(RowTrackKey).contains("true") && !rowTrackingOn(st)
+    commit(spark, table, Plan("setProperties", base, st,
+      meta = (if (enableRt) Seq("minreader\t3", "minwriter\t3") else Nil) ++
+        props.toSeq.sortBy(_._1).map { case (k, pv) => s"prop\t$k\t$pv" },
+      rowIds = if (!enableRt) Nil else st.live.map(f =>
+        f -> Some(st.rowcounts.getOrElse(f, sys.error(
+          s"cannot enable $RowTrackKey: live file $f has no committed " +
+            "rowcount (pre-rowcount log era) — compact the table first"))))))
   }
 
   /** The table's sticky properties at the head (or `asOf`). */
   def properties(table: String,
-                 asOf: Option[Long] = None): Map[String, String] = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"not a TxnLog table: $table")
-    val upTo = asOf.getOrElse(vs.last)
-    require(vs.contains(upTo), s"version $upTo not in log (have $vs)")
-    replayState(table, upTo).props
-  }
+                 asOf: Option[Long] = None): Map[String, String] =
+    stateAt(table, asOf).props
 
   /** DESCRIBE DETAIL's payload, all from the log (no data file is
     * opened): (version, nFiles, sizeBytes, rowCount, partitionColumns,
@@ -4628,24 +4302,18 @@ object TxnLog {
     * metadata commit (`checkdrop` replay line) — later writers stop
     * validating it; history below the commit still shows it. */
   def dropCheck(spark: SparkSession, table: String, name: String): Long = {
-    require(exists(table), s"not a TxnLog table: $table")
-    val base = versions(table).last
-    val st = replayState(table, base)
+    val (base, st) = baseOf(table)
     require(st.checks.contains(name),
       s"no CHECK constraint named $name on $table " +
         s"(have: ${st.checks.keys.toSeq.sorted.mkString(", ")})")
-    val v = base + 1
-    if (!publish(table, v, Seq("op\tdropCheck", s"checkdrop\t$name")))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    commit(spark, table,
+      Plan("dropCheck", base, st, meta = Seq(s"checkdrop\t$name")))
   }
 
   /** Shared validation for the column-mapping DDL commits. */
   private def mappingPrereqs(table: String, st: State,
                              colName: String): StructType = {
-    val declared = st.schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    val declared = st.declared
       .getOrElse(sys.error(
         s"column mapping requires a declared schema: $table"))
     require(declared.fieldNames.contains(colName),
@@ -4671,9 +4339,7 @@ object TxnLog {
     * rewrite/compact re-records them. CAS-pinned. */
   def renameColumn(spark: SparkSession, table: String,
                    oldName: String, newName: String): Long = {
-    require(exists(table), s"not a TxnLog table: $table")
-    val base = versions(table).last
-    val st = replayState(table, base)
+    val (base, st) = baseOf(table)
     val declared = mappingPrereqs(table, st, oldName)
     require(!declared.fieldNames.contains(newName),
       s"column $newName already exists")
@@ -4686,13 +4352,9 @@ object TxnLog {
           .withMetadata(f.metadata)
           .putString(PhysKey, physName(f)).build())
     }
-    val v = base + 1
-    if (!publish(table, v, Seq("op\trenameColumn",
-        "prop\tcolumnMapping\tname",
-        s"schema\t${StructType(fields).json}")))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    commit(spark, table, Plan("renameColumn", base, st,
+      meta = Seq("prop\tcolumnMapping\tname"),
+      schema = Some(StructType(fields).json)))
   }
 
   /** DROP COLUMN as a METADATA commit: the field leaves the declared
@@ -4713,23 +4375,17 @@ object TxnLog {
     * column; refuses to drop every column. CAS-pinned. */
   def dropColumns(spark: SparkSession, table: String,
                   colNames: Seq[String]): Long = {
-    require(exists(table), s"not a TxnLog table: $table")
     require(colNames.nonEmpty, "DROP COLUMNS needs at least one column")
     require(colNames.distinct.length == colNames.length,
       s"duplicate columns in DROP COLUMNS: ${colNames.mkString(", ")}")
-    val base = versions(table).last
-    val st = replayState(table, base)
+    val (base, st) = baseOf(table)
     val declared = colNames.map(mappingPrereqs(table, st, _)).head
     require(declared.fields.length > colNames.length,
       "cannot drop every column of a table")
     val fields = declared.fields.filterNot(f => colNames.contains(f.name))
-    val v = base + 1
-    if (!publish(table, v, Seq("op\tdropColumn",
-        "prop\tcolumnMapping\tname",
-        s"schema\t${StructType(fields).json}")))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    commit(spark, table, Plan("dropColumn", base, st,
+      meta = Seq("prop\tcolumnMapping\tname"),
+      schema = Some(StructType(fields).json)))
   }
 
   /** ADD COLUMN as a METADATA commit: the nullable field joins the
@@ -4756,14 +4412,11 @@ object TxnLog {
     * new fields get GUID physical names as usual. CAS-pinned. */
   def addColumns(spark: SparkSession, table: String,
                  cols: Seq[(String, DataType, Option[String])]): Long = {
-    require(exists(table), s"not a TxnLog table: $table")
     require(cols.nonEmpty, "ADD COLUMNS needs at least one column")
-    val base = versions(table).last
-    val st = replayState(table, base)
-    val declared = st.schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    val (base, st) = baseOf(table)
+    val declared = st.declared
       .getOrElse(sys.error(s"no declared schema in the log: $table"))
-    val mappingOn = st.props.get("columnMapping").contains("name") ||
+    val mappingOn = st.mappingOn ||
       declared.fields.exists(f => physName(f) != f.name)
     val have = scala.collection.mutable.Set(declared.fieldNames.toSeq: _*)
     val newFields = cols.map { case (colName, dataType, default) =>
@@ -4788,12 +4441,8 @@ object TxnLog {
       guidPhys(StructField(colName, dataType, nullable = true,
         mb.build()), mappingOn)
     }
-    val v = base + 1
-    if (!publish(table, v, Seq("op\taddColumn",
-        s"schema\t${StructType(declared.fields ++ newFields).json}")))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    commit(spark, table, Plan("addColumn", base, st,
+      schema = Some(StructType(declared.fields ++ newFields).json)))
   }
 
   /** TYPE WIDENING as a METADATA commit (Delta's type-widening table
@@ -4808,11 +4457,8 @@ object TxnLog {
     * directory PATHS whose parsing is fixed per file). CAS-pinned. */
   def widenColumn(spark: SparkSession, table: String, colName: String,
                   newType: DataType): Long = {
-    require(exists(table), s"not a TxnLog table: $table")
-    val base = versions(table).last
-    val st = replayState(table, base)
-    val declared = st.schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    val (base, st) = baseOf(table)
+    val declared = st.declared
       .getOrElse(sys.error(s"no declared schema in the log: $table"))
     val f = declared.fields.find(_.name == colName).getOrElse(sys.error(
       s"no such column: $colName (have " +
@@ -4829,12 +4475,8 @@ object TxnLog {
         "metadata-only (rewrite via overwrite for anything else)")
     val fields = declared.fields.map(x =>
       if (x.name == colName) x.copy(dataType = newType) else x)
-    val v = base + 1
-    if (!publish(table, v, Seq("op\twidenColumn",
-        s"schema\t${StructType(fields).json}")))
-      throw new ConcurrentCommitException(v)
-    maybeCheckpoint(table, v)
-    v
+    commit(spark, table, Plan("widenColumn", base, st,
+      schema = Some(StructType(fields).json)))
   }
 
   /** STREAMING change-feed consumer. The `_change_data` directory is an

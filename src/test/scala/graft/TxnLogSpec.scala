@@ -4357,4 +4357,181 @@ class TxnLogSpec extends SparkSpec {
     assert(e.getMessage.contains("unknown action"))
     Files.delete(f3)
   }
+
+  test("stats on a column without a long form refuse before staging") {
+    val t = freshTable()
+    val df = nation.select(col("n_nationkey"), col("n_name").as("symbol"))
+    val e = intercept[IllegalArgumentException] {
+      TxnLog.create(spark, t, df, statsCols = Seq("symbol"))
+    }
+    assert(e.getMessage.contains("symbol") && e.getMessage.contains("string"),
+      s"the refusal must name the column and its type, got: ${e.getMessage}")
+    assert(!TxnLog.exists(t))
+    assert(!Files.exists(Paths.get(t)), "nothing may be staged")
+    // appends and compactions refuse the same way; numeric stats work
+    TxnLog.create(spark, t, df, statsCols = Seq("n_nationkey"))
+    intercept[IllegalArgumentException] {
+      TxnLog.append(spark, t, df, statsCols = Seq("symbol"))
+    }
+    intercept[IllegalArgumentException] {
+      TxnLog.compact(spark, t, statsCols = Seq("symbol"))
+    }
+    assert(TxnLog.versions(t) == Seq(1L))
+    // a boolean has a long form (0/1) and keeps working as a stats column
+    val b = freshTable()
+    TxnLog.create(spark, b,
+      df.withColumn("flag", col("n_nationkey") % 2 === 0),
+      statsCols = Seq("flag"))
+    assert(TxnLog.snapshot(spark, b).count() == 25)
+  }
+
+  test("a retried partitioned upsert keeps a concurrent DV delete on " +
+      "another partition") {
+    val t = freshTable()
+    TxnLog.create(spark, t, nation, partitionBy = Seq("n_regionkey"))
+    // the base's only masks are in region 0, which the upsert rewrites
+    TxnLog.deleteWhereDV(spark, t, col("n_nationkey") === 0)
+    val base = TxnLog.versions(t).last
+    // a concurrent DV delete in region 1 wins base + 1: disjoint
+    // partitions, so the upsert planned at `base` retries
+    TxnLog.deleteWhereDV(spark, t, col("n_nationkey") === 1)
+    val v = TxnLog.upsert(spark, t,
+      nation.filter(col("n_regionkey") === 0).withColumn("n_name", lit("U")),
+      Seq("n_nationkey"), expectedVersion = Some(base))
+    assert(v == base + 2)
+    val snap = TxnLog.snapshot(spark, t)
+    assert(snap.filter(col("n_nationkey") === 1).count() == 0,
+      "the winner's deleted row must stay deleted")
+    assert(snap.count() == 24)
+    assert(TxnLog.countRows(t) == Some(24L))
+  }
+
+  test("restore on a row-tracking table re-adds converted files without " +
+      "committed rowcounts") {
+    val t = freshTable()
+    nation.repartition(3).write.parquet(t)
+    TxnLog.convertFromParquet(spark, t)
+    TxnLog.compact(spark, t)
+    TxnLog.setProperties(spark, t, Map(TxnLog.RowTrackKey -> "true"))
+    TxnLog.restore(spark, t, 1L)
+    assert(TxnLog.snapshot(spark, t).count() == 25)
+    val ids = rowIds(t)
+    assert(ids.size == 25 && ids.values.toSeq.distinct.size == 25,
+      s"restored rows need distinct ids, got $ids")
+  }
+
+  test("overwritePartitions refuses a disjoint winner that moved rowhigh") {
+    val t = freshTable()
+    TxnLog.create(spark, t, nation, partitionBy = Seq("n_regionkey"))
+    TxnLog.setProperties(spark, t, Map(TxnLog.RowTrackKey -> "true"))
+    val base = TxnLog.versions(t).last
+    // a concurrent writer on ANOTHER partition wins base + 1 and
+    // allocates row ids: the partitions are disjoint, but the row-id
+    // ranges this overwrite reserved against `base` now overlap its
+    Files.write(Paths.get(t, "_txn_log", f"${base + 1}%020d.log"),
+      java.util.Arrays.asList("op\tappend",
+        "add\tn_regionkey=4/part-race.parquet",
+        "rowbase\tn_regionkey=4/part-race.parquet\t1000000",
+        "rowhigh\t1000005"))
+    intercept[TxnLog.ConcurrentCommitException] {
+      TxnLog.overwritePartitions(spark, t,
+        nation.filter(col("n_regionkey") === 2), expectedVersion = Some(base))
+    }
+    assert(TxnLog.versions(t).last == base + 1,
+      "a stale row-id reservation must never publish")
+  }
+
+  test("copy-on-write rewrites keep stats and blooms; the head still prunes") {
+    import scala.jdk.CollectionConverters._
+    val t = freshTable()
+    val df = spark.range(0, 4000)
+      .select(col("id").as("k"), concat(lit("u"), col("id")).as("tag"))
+      .repartitionByRange(4, col("k"))
+    TxnLog.create(spark, t, df, statsCols = Seq("k"), bloomCols = Seq("tag"))
+    def headLines(v: Long) = Files.readAllLines(
+      Paths.get(t, "_txn_log", f"$v%020d.log")).asScala
+    val v = TxnLog.deleteWhere(spark, t, col("k") % 10 === 0)
+    assert(headLines(v).exists(_.startsWith("stats\tpart-")) &&
+      headLines(v).exists(_.startsWith("bloom\tpart-")),
+      "a DELETE's rewritten files must carry the tracked stats/blooms")
+    val full = TxnLog.snapshot(spark, t).inputFiles.length
+    assert(full >= 2, s"expected a multi-file layout, got $full")
+    assert(TxnLog.snapshotWhere(spark, t, "k", 0L, 99L)
+      .inputFiles.length < full, "stats pruning must survive the DELETE")
+    assert(TxnLog.snapshotWhereEq(spark, t, "tag", "u17")
+      .inputFiles.length < full, "bloom pruning must survive the DELETE")
+    assert(TxnLog.snapshot(spark, t).count() == 3600)
+    // and later rewrites keep recording them
+    val v2 = TxnLog.upsert(spark, t,
+      spark.range(5, 7).select(col("id").as("k"), lit("x").as("tag")),
+      Seq("k"))
+    assert(headLines(v2).exists(_.startsWith("stats\tpart-")) &&
+      headLines(v2).exists(_.startsWith("bloom\tpart-")))
+  }
+
+  test("every writer leaves the table invariants intact") {
+    import scala.jdk.CollectionConverters._
+    val t = freshTable()
+    val p = freshTable()
+    val src = Files.createTempDirectory("graft_txn_copy_").resolve("in")
+    nation.filter(col("n_regionkey") === 4).write.parquet(src.toString)
+    val k = col("n_nationkey")
+    def renamed(df: org.apache.spark.sql.DataFrame, to: String) =
+      df.withColumn("n_name", lit(to))
+    val steps: Seq[(String, String, () => Long)] = Seq(
+      ("create", t, () => TxnLog.create(spark, t,
+        nation.filter(col("n_regionkey") < 2),
+        statsCols = Seq("n_nationkey"), bloomCols = Seq("n_name"))),
+      ("append", t, () =>
+        TxnLog.append(spark, t, nation.filter(col("n_regionkey") === 2))),
+      ("copyInto", t, () =>
+        TxnLog.copyInto(spark, t, src.toString, "parquet")._1),
+      ("idempotentAppend", t, () => TxnLog.idempotentAppend(spark, t,
+        nation.filter(col("n_regionkey") === 3), "app", 0L)),
+      ("overwrite", t, () => TxnLog.overwrite(spark, t, nation)),
+      ("upsert", t, () => TxnLog.upsert(spark, t,
+        renamed(nation.filter(k < 3), "U"), Seq("n_nationkey"))),
+      ("merge", t, () => TxnLog.merge(spark, t,
+        renamed(nation.filter(k < 5), "M"), Seq("n_nationkey"),
+        matched = Seq(TxnLog.MergeClause(None, isDelete = false,
+          Seq("n_name" -> col("__s.n_name")))),
+        notMatched = Nil)),
+      ("replaceWhere", t, () => TxnLog.replaceWhere(spark, t,
+        "n_nationkey >= 20", renamed(nation.filter(k >= 20), "R"))),
+      ("compact", t, () => TxnLog.compact(spark, t, targetFiles = 2)),
+      ("deleteWhere", t, () => TxnLog.deleteWhere(spark, t, k === 0)),
+      ("updateWhere", t, () =>
+        TxnLog.updateWhere(spark, t, k === 1, Seq("n_name" -> lit("W")))),
+      ("deleteWhereDV", t, () => TxnLog.deleteWhereDV(spark, t, k === 2)),
+      ("updateWhereDV", t, () =>
+        TxnLog.updateWhereDV(spark, t, k === 3, Seq("n_name" -> lit("D")))),
+      ("create partitioned", p, () =>
+        TxnLog.create(spark, p, nation, partitionBy = Seq("n_regionkey"))),
+      ("upsert partitioned", p, () => TxnLog.upsert(spark, p,
+        renamed(nation.filter(k < 3), "U"), Seq("n_nationkey"))),
+      ("overwritePartitions", p, () => TxnLog.overwritePartitions(spark, p,
+        renamed(nation.filter(col("n_regionkey") === 1), "P"))))
+    steps.foreach { case (op, table, run) =>
+      val before = if (TxnLog.exists(table)) TxnLog.versions(table).last
+        else 0L
+      assert(run() == before + 1, s"$op must commit exactly one version")
+      val vs = TxnLog.versions(table)
+      assert(vs == (1L to vs.last), s"$op: versions not contiguous: $vs")
+      val lines = vs.flatMap(v => Files.readAllLines(
+        Paths.get(table, "_txn_log", f"$v%020d.log")).asScala)
+      TxnLog.files(table).foreach { f =>
+        assert(lines.exists(_.startsWith(s"rowcount\t$f\t")),
+          s"$op: live $f has no rowcount")
+        assert(lines.exists(_.startsWith(s"fsize\t$f\t")),
+          s"$op: live $f has no fsize")
+      }
+      assert(TxnLog.countRows(table) ==
+        Some(TxnLog.snapshot(spark, table).count()),
+        s"$op: countRows disagrees with the snapshot")
+    }
+    assert(TxnLog.versions(t).last >= 10L)
+    assert(Files.exists(
+      Paths.get(t, "_txn_log", f"${10L}%020d.checkpoint.parquet")),
+      "version 10 must carry a checkpoint")
+  }
 }
