@@ -16,10 +16,13 @@ object StreamProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val qname = if (args.nonEmpty) args(0) else "q252_stream_join_agg"
+    // honor SPARK_GRAFT_CPUS like Bench does, so the per-batch phases
+    // come from the same core and partition count as the benchmark's
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

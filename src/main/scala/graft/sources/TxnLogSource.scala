@@ -351,46 +351,47 @@ private[graft] final class TxnLogStreamSource(sqlCtx: SQLContext,
                                               ignoreChanges: Boolean,
                                               maxVersionsPerTrigger:
                                                 Option[Int] = None)
-    extends org.apache.spark.sql.execution.streaming.Source {
+    extends org.apache.spark.sql.execution.streaming.Source
+    with org.apache.spark.sql.connector.read.streaming
+      .SupportsTriggerAvailableNow {
   private def spark = sqlCtx.sparkSession
   override def schema: StructType = declared
 
   private val floor: Long = startingVersion.getOrElse(0L) - 1L
-  // rate-limit bookkeeping (Delta's maxFilesPerTrigger analogue at
-  // version granularity): the highest offset this source has HANDED to
-  // the engine — getBatch re-syncs it on restart (the engine replays
-  // the checkpointed batch before asking for a new offset), so a
-  // recovered stream resumes its capped cadence from the checkpoint,
-  // not from the floor
-  @volatile private var lastEnd: Long = floor
+  // Trigger.AvailableNow: the head at query start; the run drains up to
+  // it in capped batches and leaves later commits to the next run
+  @volatile private var pinnedHead: Option[Long] = None
 
-  private def versionOf(o: org.apache.spark.sql.execution.streaming
+  private def versionOf(o: org.apache.spark.sql.connector.read.streaming
       .Offset): Long = o match {
     case org.apache.spark.sql.execution.streaming.runtime.LongOffset(v) => v
     case other => other.json.trim.toLong
   }
 
-  override def getOffset
-      : Option[org.apache.spark.sql.execution.streaming.Offset] = {
-    val vs = TxnLog.versions(table)
-    if (vs.isEmpty || vs.last <= floor) None
-    else {
-      val lo = math.max(floor, lastEnd)
-      // cap the batch at N versions so a stream starting against a
-      // long-lived table (or catching up after downtime) ingests the
-      // backlog in bounded micro-batches instead of one giant one —
-      // at 100 TB the difference between a restartable catch-up and
-      // an executor-OOM batch
-      val capped = maxVersionsPerTrigger.filter(_ > 0)
-        .fold(vs.last)(n => math.min(vs.last, lo + n))
-      if (capped <= lo) None
-      else {
-        lastEnd = capped
-        Some(org.apache.spark.sql.execution.streaming.runtime
-          .LongOffset(capped))
-      }
-    }
+  override def prepareForTriggerAvailableNow(): Unit =
+    pinnedHead = Some(TxnLog.versions(table).lastOption.getOrElse(floor))
+
+  /** `start` is the previous batch's end offset (read back from the
+    * checkpoint after a restart), and the next batch ends at
+    * min(head, start + N) — at 100 TB the difference between a
+    * restartable catch-up and an executor-OOM batch. */
+  override def latestOffset(
+      start: org.apache.spark.sql.connector.read.streaming.Offset,
+      limit: org.apache.spark.sql.connector.read.streaming.ReadLimit)
+      : org.apache.spark.sql.connector.read.streaming.Offset = {
+    val lo = math.max(Option(start).map(versionOf).getOrElse(floor), floor)
+    val head = pinnedHead.getOrElse(
+      TxnLog.versions(table).lastOption.getOrElse(floor))
+    val end = maxVersionsPerTrigger.filter(_ > 0)
+      .fold(head)(n => math.min(head, lo + n))
+    if (end <= lo) null
+    else org.apache.spark.sql.execution.streaming.runtime.LongOffset(end)
   }
+
+  override def getOffset
+      : Option[org.apache.spark.sql.execution.streaming.Offset] =
+    throw new UnsupportedOperationException(
+      "TxnLogStreamSource serves offsets through latestOffset")
 
   override def getBatch(
       start: Option[org.apache.spark.sql.execution.streaming.Offset],
@@ -398,7 +399,6 @@ private[graft] final class TxnLogStreamSource(sqlCtx: SQLContext,
       : org.apache.spark.sql.DataFrame = {
     val from = math.max(start.map(versionOf).getOrElse(floor), floor)
     val to = versionOf(end)
-    if (to > lastEnd) lastEnd = to // restart replay re-syncs the cap
     val files = scala.collection.mutable.ArrayBuffer.empty[String]
     // a version whose DVs mask only its OWN adds (a DV-carrying shallow
     // clone's v1) is an initial snapshot, not a rewrite: its adds are

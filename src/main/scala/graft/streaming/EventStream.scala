@@ -1,11 +1,14 @@
 package graft.streaming
 
+import graft.TempWork.deleteRecursively
 import graft.ops.Exact
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{DoubleType, LongType}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DoubleType, LongType, TimestampType}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Structured Streaming surface (SURVEY.md §2.9 [ext]).
@@ -14,6 +17,7 @@ import scala.jdk.CollectionConverters._
   * watermark state kept in the destination table. The Spark-native
   * equivalent: a file-source `readStream`, event-time tumbling window
   * aggregation, `Trigger.AvailableNow` for the batch-like daily run.
+  * Every query starts through [[drain]], the one start path.
   *
   * Scale notes: AvailableNow processes the backlog in rate-limited
   * micro-batches with checkpointed state — the 100 TB shape is the same
@@ -25,48 +29,10 @@ import scala.jdk.CollectionConverters._
   */
 object EventStream {
 
-  /** Stateful operators allocate one state store per shuffle partition,
-    * and every micro-batch commits a delta file per store — so a
-    * stream-stream join (4 stores/partition) under the batch session's
-    * 32 shuffle partitions pays 128 state commits per batch for a few
-    * thousand keys of state. The partition count is pinned in the offset
-    * log at query START, so it is a per-query sizing decision, not a
-    * session one: size it to state volume (keys × bytes / target
-    * partition size), independent of the batch default. A 100 TB
-    * deployment sizes UP for the same reason this sizes down. */
-  private def withStatePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-  // env-overridable for A/B probing (state-store commit cost is
-  // per-store-per-batch; see the round-16 README probe note)
-  private val StatePartitions =
-    sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map(_.toInt).getOrElse(4)
-
-  /** Route a streaming query's `file://` I/O — offset/commit WAL,
-    * state-store delta files, foreachBatch table commits — through
-    * [[graft.sources.FastLocalFs]] for the query's duration. A
-    * micro-batch commits offsets + one delta file PER STATE STORE per
-    * batch; without the Hadoop native library each of those local
-    * creates/mkdirs pays a fork+exec `chmod` (see FastLocalFs), and
-    * concurrent store commits serialize on the kernel's fork path —
-    * measured at ~45 ms/store commit before, ~? after (StreamProbe).
-    * SQLConf entries are copied verbatim into
-    * `sessionState.newHadoopConf()`, which is exactly the conf
-    * StreamExecution snapshots at query start, so a scoped
-    * set/restore around start+await is sufficient and leaks nothing.
-    * Cluster deployments checkpoint to HDFS/object stores (other
-    * schemes) and are untouched. */
-  private def withFastFs[A](spark: SparkSession)(body: => A): A = {
-    val kvs = Seq(
-      "fs.file.impl" -> classOf[graft.sources.FastLocalFs].getName,
-      "fs.file.impl.disable.cache" -> "true",
-      // the checkpoint layer (WAL + state stores) uses the FileContext
-      // API, which resolves impls through this separate key
-      "fs.AbstractFileSystem.file.impl" ->
-        classOf[graft.sources.FastLocalAbstractFs].getName)
+  /** Set `kvs` on the session for the duration of `body`, then put each
+    * key back to its prior value (or unset it) — on failure too. */
+  private def withConf[A](spark: SparkSession, kvs: Seq[(String, String)])
+                         (body: => A): A = {
     val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
     kvs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally prev.foreach {
@@ -75,35 +41,161 @@ object EventStream {
     }
   }
 
-  /** Best-effort recursive delete of a staging temp dir (every streaming
-    * query stages fixture copies into a landing dir; [[runToResult]]
-    * deletes it once the memory sink is materialized, so /tmp stays
-    * stable across bench passes). */
-  private def deleteRecursively(dir: java.nio.file.Path): Unit =
-    graft.TempWork.deleteRecursively(dir)
+  /** The session settings every streaming query runs under.
+    *
+    * State partitions: stateful operators allocate one state store per
+    * shuffle partition, and every micro-batch commits a delta file per
+    * store — so a stream-stream join (4 stores/partition) under the batch
+    * session's 32 shuffle partitions pays 128 state commits per batch for
+    * a few thousand keys of state. The partition count is pinned in the
+    * offset log at query START, so it is a per-query sizing decision, not
+    * a session one: size it to state volume (keys × bytes / target
+    * partition size), independent of the batch default. A 100 TB
+    * deployment sizes UP for the same reason this sizes down.
+    *
+    * FastLocalFs: the query's `file://` I/O — offset/commit WAL,
+    * state-store delta files, foreachBatch table commits — goes through
+    * [[graft.sources.FastLocalFs]]. A micro-batch commits offsets + one
+    * delta file PER STATE STORE per batch; without the Hadoop native
+    * library each of those local creates/mkdirs pays a fork+exec `chmod`
+    * (see FastLocalFs), and concurrent store commits serialize on the
+    * kernel's fork path — measured at ~45 ms per store commit without
+    * it (StreamProbe). SQLConf entries are copied verbatim into
+    * `sessionState.newHadoopConf()`, which is exactly the conf
+    * StreamExecution snapshots at query start, so a scoped set/restore
+    * around start and await leaks nothing. Cluster deployments
+    * checkpoint to HDFS/object stores (other schemes) and are untouched.
+    *
+    * RocksDB: transformWithState requires the RocksDB state store. */
+  private def streamConf(rocksDb: Boolean): Seq[(String, String)] =
+    Seq("spark.sql.shuffle.partitions" -> "4",
+      "fs.file.impl" -> classOf[graft.sources.FastLocalFs].getName,
+      "fs.file.impl.disable.cache" -> "true",
+      // the checkpoint layer (WAL + state stores) uses the FileContext
+      // API, which resolves impls through this separate key
+      "fs.AbstractFileSystem.file.impl" ->
+        classOf[graft.sources.FastLocalAbstractFs].getName) ++
+      (if (!rocksDb) Nil
+       else Seq("spark.sql.streaming.stateStore.providerClass" ->
+         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+
+  /** Throwaway checkpoint dir (offsets + state store files) on tmpfs
+    * when available: the harness queries commit state + offset files
+    * every micro-batch, and that fsync-bound I/O — not computation —
+    * dominates short stream-stream joins. Production checkpoints
+    * belong on durable storage; a bench/verify harness's throwaway
+    * checkpoints do not. Writable is not enough: containers commonly
+    * mount /dev/shm at 64MB, and a stream-stream join's state store
+    * exhausting it mid-query fails a run that would have succeeded on
+    * disk. Require real headroom (512MB) before choosing tmpfs;
+    * otherwise fall back to a temp dir on disk. */
+  private def tmpfsCheckpoint(): Path = {
+    val shm = Paths.get("/dev/shm")
+    val shmUsable = Files.isWritable(shm) &&
+      (try Files.getFileStore(shm).getUsableSpace >= 512L * 1024 * 1024
+       catch { case _: java.io.IOException => false })
+    if (shmUsable) Files.createTempDirectory(shm, "graft_ckpt_")
+    else Files.createTempDirectory("graft_ckpt_")
+  }
+
+  /** The one start path for every streaming query. `sink` says where
+    * the rows go; this adds the rest: `Trigger.AvailableNow` (the
+    * reference's scheduled daily micro-batch — drain what has landed,
+    * then stop), a throwaway [[tmpfsCheckpoint]] and the scoped
+    * [[streamConf]] (RocksDB when the plan holds a transformWithState).
+    * It starts the query and waits for it to finish. Every setting is
+    * restored and the checkpoint deleted on every exit, failure
+    * included: Bench expects a streaming query to sometimes throw and
+    * keeps going. Returns the terminated query, whose `recentProgress`
+    * is still readable. */
+  private[graft] def drain(df: DataFrame)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    val rocksDb =
+      df.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState])
+    val ckpt = tmpfsCheckpoint()
+    try withConf(df.sparkSession, streamConf(rocksDb)) {
+      val q = sink(df.writeStream).trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt.toString).start()
+      q.awaitTermination()
+      q
+    } finally deleteRecursively(ckpt)
+  }
+
+  /** Run a streaming DataFrame through [[drain]] into a uniquely-named
+    * memory sink, hand the terminated query to `check`, apply `finish`
+    * to the sink table, and eagerly materialize the result so the sink
+    * view can be DROPPED before returning. Without this, repeated bench
+    * passes accumulate full result sets in driver memory (one
+    * never-dropped temp view per invocation). */
+  private def runToResult(df: DataFrame, mode: String,
+                          check: StreamingQuery => Unit = _ => ())
+                         (finish: DataFrame => DataFrame): DataFrame = {
+    val name = s"stream_q_${System.nanoTime()}"
+    try {
+      check(drain(df)(_.outputMode(mode).format("memory").queryName(name)))
+      finish(df.sparkSession.table(name)).localCheckpoint(true)
+    } finally df.sparkSession.catalog.dropTempView(name): Unit
+  }
 
   /** Process-level cache of staged landing dirs, keyed by the exact
-    * (fixture dir, split predicates / copy count) recipe that produced
-    * them. The 17 streaming queries previously EACH re-read the events
-    * fixture, re-filtered, and re-wrote their micro-batch files — two
-    * Spark write jobs of identical bytes per query, ~half the streaming
-    * bench cost. Staging identical inputs once and replaying them is
-    * exactly what a real pipeline's landing zone does; the per-query
-    * parts that matter (fresh source offsets, fresh state store, fresh
-    * memory sink) are untouched because each query still gets its own
-    * temp checkpoint. Cached dirs are deleted at JVM exit, not by
-    * [[runToResult]]. */
+    * (fixture dir, staging recipe) that produced them. The 17 streaming
+    * queries previously EACH re-read the events fixture, re-filtered,
+    * and re-wrote their micro-batch files — two Spark write jobs of
+    * identical bytes per query, ~half the streaming bench cost. Staging
+    * identical inputs once and replaying them is exactly what a real
+    * pipeline's landing zone does; the per-query parts that matter
+    * (fresh source offsets, fresh state store, fresh sink) are untouched
+    * because each query still gets its own checkpoint. Landing dirs are
+    * shared across queries, so they die with the JVM, not with a query;
+    * one staging per recipe, even when first calls race. */
   private object LandingCache {
-    private val dirs =
-      scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
-    private val owned =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+    private val dirs = scala.collection.concurrent.TrieMap.empty[String, Path]
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      owned.forEach(p => graft.TempWork.deleteRecursively(p))))
-    def isCached(p: java.nio.file.Path): Boolean = owned.contains(p)
-    def getOrCreate(key: String)(mk: => java.nio.file.Path)
-        : java.nio.file.Path =
-      dirs.getOrElseUpdate(key, { val p = mk; owned.add(p); p })
+      dirs.values.foreach(deleteRecursively)))
+    def getOrCreate(key: String)(mk: => Path): Path =
+      synchronized(dirs.getOrElseUpdate(key, mk))
+  }
+
+  /** Stage the events fixture into a cached landing dir (`stage` writes
+    * the files and returns them in arrival order) and return a file
+    * stream over it, one file per micro-batch, with `ts` read the way
+    * Tables.load reads it (nanos→micros). */
+  private def landedStream(spark: SparkSession, dir: String, recipe: String)
+                          (stage: Path => Seq[Path]): DataFrame = {
+    graft.Tables.fixtureConf(spark)
+    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val landing = LandingCache.getOrCreate(s"$dir||$recipe") {
+      val out = Files.createTempDirectory("graft_stream_in_")
+      val files = stage(out)
+      // pin mtimes a minute apart in arrival order: the file source
+      // batches oldest-first, and back-to-back copies can otherwise land
+      // in the same filesystem timestamp tick, leaving batch order to
+      // listing luck — fatal for order-SENSITIVE consumers (q141's
+      // cross-batch high-water mark, the sentinel flush batch)
+      val base = System.currentTimeMillis()
+      files.zipWithIndex.foreach { case (f, i) =>
+        Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime
+          .fromMillis(base - (files.length - i).toLong * 60000L))
+      }
+      out
+    }
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1") // one file per micro-batch
+      .parquet(landing.toString)
+      .withColumn("ts", graft.Tables.tsCol(schema("ts").dataType))
+  }
+
+  /** Write `df` as the single parquet file `target`. */
+  private def writeOneFile(df: DataFrame, target: Path): Path = {
+    val tmp = Files.createTempDirectory("graft_stage_")
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val st = Files.list(tmp)
+      val part = try st.filter(_.toString.endsWith(".parquet")).findFirst()
+        .orElseThrow(() => new IllegalStateException(s"no parquet part in $tmp"))
+      finally st.close()
+      Files.copy(part, target)
+    } finally deleteRecursively(tmp)
   }
 
   final case class EventRow(event_id: Long, ts: java.sql.Timestamp,
@@ -123,13 +215,10 @@ object EventStream {
     * emits only keys whose watermark advanced in the batch. */
   def statefulWatermarks(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (src, landing) = eventsStream(spark, dir)
-    val stream = src
+    val stream = eventsStream(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[EventRow]
-    val updated = watermarkState(stream)
-    runToResult(spark, updated.toDF(), "update",
-      statePartitioned = true, Some(landing)) { t =>
+    runToResult(watermarkState(stream).toDF(), "update") { t =>
       // multiple micro-batches may emit a key repeatedly; last write wins
       t.groupBy("user_id")
         .agg(max(col("latest_epoch_day")).as("latest_epoch_day"))
@@ -195,128 +284,42 @@ object EventStream {
   /** Streaming record-breakers via [[HighWaterProcessor]]: the fixture
     * lands as two time-halves (their own micro-batches, early first), so
     * the ValueState genuinely crosses batches. transformWithState
-    * requires the RocksDB state store — swapped in for this query and
-    * restored after. */
+    * requires the RocksDB state store, which [[drain]] swaps in for this
+    * query and restores after. */
   def recordBreakers(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.Tables.fixtureConf(spark)
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    val tsNorm = graft.Tables.tsCol(raw.schema("ts").dataType)
-    val Array(loUs, hiUs) = raw
-      .agg(unix_micros(min(tsNorm)), unix_micros(max(tsNorm)))
-      .head().toSeq.map(_.asInstanceOf[Long]).toArray
-    val midC = timestamp_micros(lit(loUs + (hiUs - loUs) / 2))
-    val (stream, landing) = splitStream(spark, dir, "hiwater_", Seq(
-      "a_early" -> (tsNorm < midC),
-      "b_late" -> (tsNorm >= midC)))
-    val ds = stream
+    runToResult(perUser(halvesStream(spark, dir), new HighWaterProcessor),
+        "append") { t =>
+      t.select(col("user_id"), col("event_id"), col("value"))
+        .orderBy("user_id", "event_id")
+    }
+  }
+
+  /** Key the events stream by user through a transformWithState
+    * processor (no timers, append output). */
+  private def perUser[O: org.apache.spark.sql.Encoder](stream: DataFrame,
+      p: org.apache.spark.sql.streaming.StatefulProcessor[Long, EventRow, O])
+      : DataFrame = {
+    val spark = stream.sparkSession
+    import spark.implicits._
+    stream
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value")).as[EventRow]
-    val out = ds.groupByKey(_.user_id)
-      .transformWithState(new HighWaterProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
+      .groupByKey(_.user_id)
+      .transformWithState(p, org.apache.spark.sql.streaming.TimeMode.None(),
         org.apache.spark.sql.streaming.OutputMode.Append())
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      runToResult(spark, out.toDF(), "append",
-        statePartitioned = true, Some(landing)) { t =>
-        t.select(col("user_id"), col("event_id"), col("value"))
-          .orderBy("user_id", "event_id")
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+      .toDF()
   }
 
-  /** Shared stream source over the events fixture (nanos→micros ts, see
-    * Tables.load). `copies` > 1 lands the same file several times — the
-    * arriving-duplicate-batch shape that exercises cross-batch dedup.
-    * Returns the landing dir too: callers hand it to [[runToResult]],
-    * which deletes it once the sink is materialized. */
+  /** Stream source over the events fixture. `copies` > 1 lands the
+    * same file several times — the arriving-duplicate-batch shape that
+    * exercises cross-batch dedup. */
   private def eventsStream(spark: SparkSession, dir: String,
-                           copies: Int = 1): (DataFrame, java.nio.file.Path) = {
-    graft.Tables.fixtureConf(spark)
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val landing = LandingCache.getOrCreate(s"$dir||copies=$copies") {
-      val out = java.nio.file.Files.createTempDirectory("graft_stream_in_")
-      (1 to copies).foreach { i =>
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          out.resolve(s"events_$i.parquet"))
-      }
-      out
+                           copies: Int = 1): DataFrame =
+    landedStream(spark, dir, s"copies=$copies") { out =>
+      (1 to copies).map(i => Files.copy(Paths.get(s"$dir/events.parquet"),
+        out.resolve(s"events_$i.parquet")))
     }
-    val df = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1") // one file per micro-batch
-      .parquet(landing.toString)
-      .withColumn("ts", graft.Tables.tsCol(schema("ts").dataType))
-    (df, landing)
-  }
-
-  /** Run a streaming DataFrame into a uniquely-named memory sink
-    * (AvailableNow, awaited), apply `finish` to the sink table, and
-    * eagerly materialize the result so the sink view can be DROPPED and
-    * the landing dir DELETED before returning. Without this, repeated
-    * bench passes accumulate full result sets in driver memory (one
-    * never-dropped temp view per invocation) and fixture copies in /tmp. */
-  /** Throwaway checkpoint dir (offsets + state store files) on tmpfs
-    * when available: the harness queries commit state + offset files
-    * every micro-batch, and that fsync-bound I/O — not computation —
-    * dominates short stream-stream joins. Production checkpoints
-    * belong on durable storage; a bench/verify harness's throwaway
-    * checkpoints do not. Writable is not enough: containers commonly
-    * mount /dev/shm at 64MB, and a stream-stream join's state store
-    * exhausting it mid-query fails a run that would have succeeded on
-    * disk. Require real headroom (512MB) before choosing tmpfs;
-    * otherwise fall through (None) to Spark's default disk-backed
-    * checkpoint location. */
-  private def tmpfsCheckpoint(): Option[java.nio.file.Path] = {
-    val ckptBase = java.nio.file.Paths.get("/dev/shm")
-    val shmUsable = java.nio.file.Files.isWritable(ckptBase) &&
-      (try java.nio.file.Files.getFileStore(ckptBase).getUsableSpace >=
-        512L * 1024 * 1024
-       catch { case _: java.io.IOException => false })
-    if (shmUsable)
-      Some(java.nio.file.Files.createTempDirectory(ckptBase, "graft_ckpt_"))
-    else None
-  }
-
-  private def runToResult(spark: SparkSession, df: DataFrame, mode: String,
-                          statePartitioned: Boolean,
-                          landing: Option[java.nio.file.Path])
-                         (finish: DataFrame => DataFrame): DataFrame = {
-    val name = s"stream_q_${System.nanoTime()}"
-    // cleanup must survive a FAILED pass too: Bench.timeOnce expects
-    // streaming queries to sometimes throw and keeps going — without the
-    // finally, each failed pass would leak its landing dir and sink view,
-    // exactly the accumulation this helper exists to prevent
-    val ckpt = tmpfsCheckpoint()
-    try {
-      def run(): Unit = withFastFs(spark) {
-        val w0 = df.writeStream.outputMode(mode).format("memory")
-          .queryName(name).trigger(Trigger.AvailableNow())
-        val w = ckpt.fold(w0)(p => w0.option("checkpointLocation", p.toString))
-        val q = w.start()
-        q.awaitTermination()
-      }
-      if (statePartitioned) withStatePartitions(spark, StatePartitions)(run())
-      else run()
-      finish(spark.table(name)).localCheckpoint(true)
-    } finally {
-      ckpt.foreach(deleteRecursively)
-      try spark.catalog.dropTempView(name) catch { case _: Exception => () }
-      // cached landing dirs are shared across queries — they die with
-      // the JVM (LandingCache shutdown hook), not with this query
-      landing.foreach(p =>
-        if (!LandingCache.isCached(p)) deleteRecursively(p))
-    }
-  }
 
   /** Streaming dedup across micro-batches: the same events file lands
     * twice (two micro-batches via maxFilesPerTrigger=1), and
@@ -333,12 +336,11 @@ object EventStream {
     * watermark horizon (state TTL = delay), not by stream length — the
     * always-on form of exact dedup; RocksDB state store in production. */
   def dedupedCounts(spark: SparkSession, dir: String): DataFrame = {
-    val (src, landing) = eventsStream(spark, dir, copies = 2)
+    val src = eventsStream(spark, dir, copies = 2)
     val deduped = src
       .withWatermark("ts", "1 day")
       .dropDuplicatesWithinWatermark("event_id")
-    runToResult(spark, deduped, "append",
-      statePartitioned = true, Some(landing)) { t =>
+    runToResult(deduped, "append") { t =>
       t.groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast(Exact.Money)).cast(DoubleType).as("total_value"))
@@ -360,12 +362,11 @@ object EventStream {
         ("click", 1), ("view", 0), ("purchase", 5), ("signup", 3),
         ("logout", 0)))
       .toDF("event_type", "weight")
-    val (src, landing) = eventsStream(spark, dir)
+    val src = eventsStream(spark, dir)
     val enriched = src
       .join(broadcast(dim), "event_type")
       .withColumn("weighted", col("value") * col("weight"))
-    runToResult(spark, enriched, "append",
-      statePartitioned = true, Some(landing)) { t =>
+    runToResult(enriched, "append") { t =>
       t.groupBy("event_type", "weight")
         .agg(count(lit(1)).as("n"),
           sum(col("weighted").cast(Exact.Money)).cast(DoubleType).as("weighted_value"))
@@ -381,7 +382,7 @@ object EventStream {
     * each match in the micro-batch it completes in, so the collected
     * result equals the batch interval join regardless of batching. */
   def intervalJoined(spark: SparkSession, dir: String): DataFrame = {
-    val (src, landing) = eventsStream(spark, dir)
+    val src = eventsStream(spark, dir)
     val clicks = src.filter(col("event_type") === "click")
       .withWatermark("ts", "1 hour")
       .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
@@ -394,8 +395,7 @@ object EventStream {
       col("b_user") === col("c_user") &&
         col("click_ts") <= col("buy_ts") &&
         col("click_ts") >= col("buy_ts") - expr("INTERVAL 1 HOUR"))
-    runToResult(spark, joined, "append",
-      statePartitioned = true, Some(landing)) { t =>
+    runToResult(joined, "append") { t =>
       t.select(col("buy_id"), col("click_id"),
         (unix_micros(col("buy_ts")) - unix_micros(col("click_ts"))).as("gap_us"))
         .orderBy("buy_id", "click_id")
@@ -414,7 +414,7 @@ object EventStream {
     * flush for finite replays of an always-on query. State stays bounded
     * by watermark delay + interval width per side. */
   def leftOuterJoined(spark: SparkSession, dir: String): DataFrame = {
-    val (src, landing) = eventsStreamWithSentinel(spark, dir)
+    val src = eventsStreamWithSentinel(spark, dir)
     // the flush sentinels must survive BOTH branch filters: Catalyst
     // pushes these filters below the EventTimeWatermark node, so a
     // sentinel excluded by them would never reach the watermark
@@ -433,8 +433,7 @@ object EventStream {
         col("buy_ts") >= col("click_ts") &&
         col("buy_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
       "leftOuter")
-    runToResult(spark, joined, "append",
-      statePartitioned = true, Some(landing)) { t =>
+    runToResult(joined, "append") { t =>
       t.filter(col("click_id") >= 0)
         .select(col("click_id"), col("buy_id"),
           (unix_micros(col("buy_ts")) - unix_micros(col("click_ts"))).as("gap_us"))
@@ -452,7 +451,7 @@ object EventStream {
     * join tail AND the final day window. The sentinel self-pair lands
     * in a far-future day and is filtered out BEFORE the aggregate. */
   def joinedDailyTotals(spark: SparkSession, dir: String): DataFrame = {
-    val (src, landing) = eventsStreamWithSentinel(spark, dir)
+    val src = eventsStreamWithSentinel(spark, dir)
     val wsrc = src.withWatermark("ts", "1 hour")
     val clicks = wsrc.filter(col("event_type").isin("click", "flush"))
       .select(col("user_id").as("c_user"), col("ts").as("click_ts"))
@@ -469,8 +468,7 @@ object EventStream {
       .agg(count(lit(1)).as("n_pairs"),
         sum(unix_micros(col("buy_ts")) - unix_micros(col("click_ts")))
           .as("gap_us_total"))
-    runToResult(spark, agg, "append",
-      statePartitioned = true, Some(landing)) { t =>
+    runToResult(agg, "append") { t =>
       t.select(col("w.start").as("day"), col("n_pairs"),
         col("gap_us_total")).orderBy("day")
     }
@@ -486,7 +484,7 @@ object EventStream {
     * side. The emitted relation ≡ the batch full-outer time-range join
     * under any batching once the watermark passes every real event. */
   def fullOuterJoined(spark: SparkSession, dir: String): DataFrame = {
-    val (src, landing) = eventsStreamWithSentinel(spark, dir)
+    val src = eventsStreamWithSentinel(spark, dir)
     val wsrc = src.withWatermark("ts", "1 hour")
     val clicks = wsrc.filter(col("event_type").isin("click", "flush"))
       .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
@@ -499,8 +497,7 @@ object EventStream {
         col("buy_ts") >= col("click_ts") &&
         col("buy_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
       "fullOuter")
-    runToResult(spark, joined, "append",
-      statePartitioned = true, Some(landing)) { t =>
+    runToResult(joined, "append") { t =>
       // sentinels pair with each other (user −1 both sides) — one test
       // on either id removes them while keeping genuine null sides
       t.filter((col("click_id").isNull || col("click_id") >= 0) &&
@@ -531,60 +528,58 @@ object EventStream {
     * rides the [[LandingCache]] like [[eventsStream]]'s — the max-ts
     * scan, the sentinel write job, and the fixture copy are paid once
     * per JVM, not once per bench pass. */
-  private def eventsStreamWithSentinel(spark: SparkSession, dir: String)
-      : (DataFrame, java.nio.file.Path) = {
-    graft.Tables.fixtureConf(spark)
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val tsIsTimestamp =
-      schema("ts").dataType == org.apache.spark.sql.types.TimestampType
-    val landing = LandingCache.getOrCreate(s"$dir||sentinel=1") {
+  private def eventsStreamWithSentinel(spark: SparkSession,
+                                       dir: String): DataFrame =
+    landedStream(spark, dir, "sentinel=1") { out =>
       val raw = spark.read.parquet(s"$dir/events.parquet")
-      val out = java.nio.file.Files.createTempDirectory("graft_stream_in_")
-      val eventsFile = out.resolve("events_1.parquet")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"), eventsFile)
-      val dayNs = 24L * 3600 * 1000000000L
-      val sentTsCol =
-        if (tsIsTimestamp) {
-          val maxTs = raw.agg(max(col("ts"))).head().getTimestamp(0)
-          lit(maxTs) + expr("INTERVAL 30 DAYS")
-        } else {
-          val maxNs = raw.agg(max(col("ts"))).head().getLong(0)
-          lit(maxNs + 30L * dayNs)
-        }
-      val sentinel = spark.range(1, 2).toDF("i").select(
-        lit(-1L).as("event_id"), sentTsCol.as("ts"),
+      val maxTs = raw.agg(max(col("ts"))).head()
+      val sentTs =
+        if (raw.schema("ts").dataType == TimestampType)
+          lit(maxTs.getTimestamp(0)) + expr("INTERVAL 30 DAYS")
+        else lit(maxTs.getLong(0) + 30L * 24 * 3600 * 1000000000L)
+      val sentinel = spark.range(1).select(
+        lit(-1L).as("event_id"), sentTs.as("ts"),
         lit(-1L).as("user_id"), lit("flush").as("event_type"),
         lit(0.0).as("value"), lit(null).cast("string").as("props"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sentinel_")
-      sentinel.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = {
-        val st = java.nio.file.Files.list(tmp)
-        try st.filter(_.toString.endsWith(".parquet")).findFirst()
-          .orElseThrow(() => new IllegalStateException("no sentinel part"))
-        finally st.close()
-      }
-      val sent1 = out.resolve("events_2_sentinel.parquet")
-      java.nio.file.Files.copy(part, sent1)
-      deleteRecursively(tmp)
-      // the file source processes files oldest-mtime-first: pin the order
-      val base = System.currentTimeMillis()
-      java.nio.file.Files.setLastModifiedTime(eventsFile,
-        java.nio.file.attribute.FileTime.fromMillis(base - 120000))
-      java.nio.file.Files.setLastModifiedTime(sent1,
-        java.nio.file.attribute.FileTime.fromMillis(base - 60000))
-      out
+      Seq(Files.copy(Paths.get(s"$dir/events.parquet"),
+          out.resolve("events_1.parquet")),
+        writeOneFile(sentinel, out.resolve("events_2_sentinel.parquet")))
     }
-    val df = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(landing.toString)
-      .withColumn("ts", graft.Tables.tsCol(schema("ts").dataType))
-    (df, landing)
+
+  /** Land the events fixture split into one file per predicate, in
+    * declaration order (each becomes its own micro-batch). The cache
+    * recipe is the split itself (predicate strings are deterministic),
+    * so every query staging the same split shares one landing dir. */
+  private def splitStream(spark: SparkSession, dir: String,
+                          splits: Seq[(String, Column)]): DataFrame =
+    landedStream(spark, dir,
+        splits.map { case (n, p) => s"$n:$p" }.mkString("|")) { out =>
+      val src = spark.read.parquet(s"$dir/events.parquet")
+      splits.map { case (name, pred) =>
+        writeOneFile(src.filter(pred), out.resolve(s"$name.parquet"))
+      }
+    }
+
+  private def parityStream(spark: SparkSession, dir: String): DataFrame =
+    splitStream(spark, dir, Seq(
+      "even" -> (col("event_id") % 2 === 0),
+      "odd" -> (col("event_id") % 2 === 1)))
+
+  /** The fixture as two time-halves, early first, so per-user state
+    * written in batch 1 is read in batch 2. */
+  private def halvesStream(spark: SparkSession, dir: String): DataFrame = {
+    graft.Tables.fixtureConf(spark)
+    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val tsNorm = graft.Tables.tsCol(raw.schema("ts").dataType)
+    val Array(loUs, hiUs) = raw
+      .agg(unix_micros(min(tsNorm)), unix_micros(max(tsNorm)))
+      .head().toSeq.map(_.asInstanceOf[Long]).toArray
+    val midC = timestamp_micros(lit(loUs + (hiUs - loUs) / 2))
+    splitStream(spark, dir, Seq(
+      "a_early" -> (tsNorm < midC),
+      "b_late" -> (tsNorm >= midC)))
   }
 
-  /** Tumbling 1-day totals per event_type over the events fixture,
-    * executed as a real streaming query into a memory sink, returned as a
-    * batch DataFrame for the verify/oracle harness. */
   /** Streaming sessionization: the batch `session_window` aggregation
     * (q61, [[graft.operators.Sessions.sessionWindows]]) over a
     * micro-batched stream. The fixture is split into two landing files
@@ -599,68 +594,13 @@ object EventStream {
     * Scale notes: session state is bounded by open sessions per key,
     * not stream length; with a watermark (production form) closed
     * sessions evict as event time passes gap + delay. */
-  /** Land the events fixture split into one file per predicate (each
-    * becomes its own micro-batch under maxFilesPerTrigger=1) and return
-    * the ts-shimmed file-source stream over the landing dir. Shared by
-    * [[sessionTotals]] and [[mergedUserTotals]] — the split-by-parity
-    * staging, schema shim, and landing protocol live in exactly one
-    * place. Caller owns deleting the returned landing dir. */
-  private def splitStream(spark: SparkSession, dir: String, tag: String,
-                          splits: Seq[(String, org.apache.spark.sql.Column)])
-      : (DataFrame, java.nio.file.Path) = {
-    graft.Tables.fixtureConf(spark)
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    // Cache key = fixture dir + the split recipe (predicate expression
-    // strings are deterministic); NOT the per-query tag, so every query
-    // staging the same split shares one landing dir.
-    val key = dir + "||" +
-      splits.map { case (n, p) => s"$n:$p" }.mkString("|")
-    val landing = LandingCache.getOrCreate(key) {
-      val src = spark.read.parquet(s"$dir/events.parquet")
-      val out = java.nio.file.Files.createTempDirectory(s"graft_stream_$tag")
-      val mtimeBase = System.currentTimeMillis()
-      splits.zipWithIndex.foreach { case ((name, pred), i) =>
-        val tmp = java.nio.file.Files.createTempDirectory(s"graft_${tag}_$name")
-        src.filter(pred).coalesce(1).write.mode("overwrite")
-          .parquet(tmp.toString)
-        val listing = java.nio.file.Files.list(tmp)
-        val part = try listing.filter(_.toString.endsWith(".parquet"))
-          .findFirst().get() finally listing.close()
-        val landed = out.resolve(s"$name.parquet")
-        java.nio.file.Files.copy(part, landed)
-        // pin mtimes a minute apart in declaration order: the file source
-        // batches oldest-first, and back-to-back copies can otherwise land
-        // in the same filesystem timestamp tick, leaving batch order to
-        // listing luck — fatal for order-SENSITIVE consumers (q141's
-        // cross-batch high-water mark), harmless for the rest
-        java.nio.file.Files.setLastModifiedTime(landed,
-          java.nio.file.attribute.FileTime.fromMillis(
-            mtimeBase - (splits.length - i).toLong * 60000L))
-        deleteRecursively(tmp) // staging copy no longer needed once landed
-      }
-      out
-    }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(landing.toString)
-      .withColumn("ts", graft.Tables.tsCol(schema("ts").dataType))
-    (stream, landing)
-  }
-
-  private def parityStream(spark: SparkSession, dir: String, tag: String)
-      : (DataFrame, java.nio.file.Path) =
-    splitStream(spark, dir, tag, Seq(
-      "even" -> (col("event_id") % 2 === 0),
-      "odd" -> (col("event_id") % 2 === 1)))
-
   def sessionTotals(spark: SparkSession, dir: String): DataFrame = {
-    val (stream, landing) = parityStream(spark, dir, "sess_")
+    val stream = parityStream(spark, dir)
     val agg = stream
       .groupBy(col("user_id"), session_window(col("ts"), "12 hours").as("w"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(Exact.Money)).as("tv"))
-    runToResult(spark, agg, "complete",
-      statePartitioned = true, Some(landing)) { t =>
+    runToResult(agg, "complete") { t =>
       t.select(col("user_id"),
         unix_micros(col("w.start")).as("session_start_us"),
         unix_micros(col("w.end")).as("session_end_us"),
@@ -704,10 +644,10 @@ object EventStream {
     * lives in the sink, not the state store — destination size, not
     * stream length. */
   def mergedUserTotals(spark: SparkSession, dir: String): DataFrame = {
-    val (stream, landing) = parityStream(spark, dir, "mrg_")
-    val dest = java.nio.file.Files.createTempDirectory("graft_stream_dest_")
+    val stream = parityStream(spark, dir)
+    val dest = Files.createTempDirectory("graft_stream_dest_")
     def committed(): Option[Long] = {
-      val listing = java.nio.file.Files.list(dest)
+      val listing = Files.list(dest)
       val ids = try listing.iterator().asScala
         .map(_.getFileName.toString).filter(_.startsWith("commit_"))
         .map(_.stripPrefix("commit_").toLong).toSeq
@@ -715,8 +655,8 @@ object EventStream {
       if (ids.isEmpty) None else Some(ids.max)
     }
     def dataV(id: Long) = dest.resolve(s"data_v$id")
-    def startQ() = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    try {
+      drain(stream)(_.foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cur = committed()
         if (!cur.exists(_ >= batchId)) { // idempotent re-delivery guard
           val b = batch.groupBy("user_id").agg(
@@ -738,14 +678,10 @@ object EventStream {
               greatest(coalesce(col("latest_us"), lit(Long.MinValue)),
                 coalesce(col("b_latest"), lit(Long.MinValue))).as("latest_us"))
           merged.write.mode("overwrite").parquet(dataV(batchId).toString)
-          java.nio.file.Files.createFile(dest.resolve(s"commit_$batchId"))
+          Files.createFile(dest.resolve(s"commit_$batchId"))
           cur.foreach(id => deleteRecursively(dataV(id))) // sweep AFTER commit
         }
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    try {
-      withFastFs(spark) { val q = startQ(); q.awaitTermination() }
+      })
       val last = committed().getOrElse(
         sys.error("streaming merge produced no committed version"))
       spark.read.parquet(dataV(last).toString)
@@ -753,10 +689,7 @@ object EventStream {
           col("tv").cast(DoubleType).as("total_value"), col("latest_us"))
         .orderBy("user_id")
         .localCheckpoint(true)
-    } finally {
-      if (!LandingCache.isCached(landing)) deleteRecursively(landing)
-      deleteRecursively(dest)
-    }
+    } finally deleteRecursively(dest)
   }
 
   /** Exactly-once streaming ingestion into the ACID table format
@@ -771,38 +704,30 @@ object EventStream {
     * q107 commit-marker sink hand-rolls this protocol per destination;
     * this is the same guarantee as ONE table-format property. */
   def txnLogSinkTotals(spark: SparkSession, dir: String): DataFrame = {
-    val (stream0, landing) = parityStream(spark, dir, "txnsink_")
-    val table = java.nio.file.Files
-      .createTempDirectory("graft_txn_sink_").resolve("t").toString
-    val src = stream0.select(col("event_id"), col("event_type"),
-      col("value"))
-    graft.sources.TxnLog.create(spark, table,
-      graft.Tables.load(spark, dir, "events")
-        .select(col("event_id"), col("event_type"), col("value"))
-        .limit(0)) // schema-only init commit (D4's empty-table create)
-    def runOnce(): Unit = withFastFs(spark) {
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          graft.sources.TxnLog.idempotentAppend(
-            spark, table, batch, "etl-sync", id): Unit
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    runOnce()
-    runOnce() // fresh checkpoint = full crash replay; markers absorb it
+    import graft.sources.TxnLog
+    val src = parityStream(spark, dir)
+      .select(col("event_id"), col("event_type"), col("value"))
+    val root = Files.createTempDirectory("graft_txn_sink_")
+    val table = root.resolve("t").toString
     try {
-      graft.sources.TxnLog.snapshot(spark, table)
+      TxnLog.create(spark, table,
+        graft.Tables.load(spark, dir, "events")
+          .select(col("event_id"), col("event_type"), col("value"))
+          .limit(0)) // schema-only init commit (D4's empty-table create)
+      // the second run's fresh checkpoint = full crash replay; the txn
+      // markers absorb it
+      for (_ <- 1 to 2)
+        drain(src)(_.foreachBatch { (batch: DataFrame, id: Long) =>
+          TxnLog.idempotentAppend(spark, table, batch, "etl-sync", id): Unit
+        })
+      TxnLog.snapshot(spark, table)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast(Exact.Money)).cast(DoubleType)
             .as("total_value"))
         .orderBy("event_type")
         .localCheckpoint(true)
-    } finally {
-      if (!LandingCache.isCached(landing)) deleteRecursively(landing)
-      deleteRecursively(java.nio.file.Paths.get(table).getParent)
-    }
+    } finally deleteRecursively(root)
   }
 
   /** The FORMAT-STRING streaming sink (`writeStream.format("txnlog")`,
@@ -814,25 +739,16 @@ object EventStream {
     * keeps the aggregate equal to the batch oracle. The first batch
     * CREATES the table (schema + data + marker in one commit). */
   def txnLogFormatSinkTotals(spark: SparkSession, dir: String): DataFrame = {
-    val (stream0, landing) = parityStream(spark, dir, "txnfmt_")
-    val table = java.nio.file.Files
-      .createTempDirectory("graft_txn_fmt_").resolve("t").toString
-    val src = stream0.select(col("event_id"), col("event_type"),
-      col("value"))
-    def runOnce(): Unit = withFastFs(spark) {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_txn_fmt_ck_").toString
-      val q = src.writeStream.format("txnlog")
-        .option("path", table)
-        .option("txnAppId", "etl-format-sync")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      try q.awaitTermination()
-      finally deleteRecursively(java.nio.file.Paths.get(ckpt))
-    }
-    runOnce()
-    runOnce() // fresh checkpoint = full crash replay; markers absorb it
+    val src = parityStream(spark, dir)
+      .select(col("event_id"), col("event_type"), col("value"))
+    val root = Files.createTempDirectory("graft_txn_fmt_")
+    val table = root.resolve("t").toString
     try {
+      // the second run's fresh checkpoint = full crash replay; the sink's
+      // markers absorb it
+      for (_ <- 1 to 2)
+        drain(src)(_.format("txnlog").option("path", table)
+          .option("txnAppId", "etl-format-sync"))
       graft.sources.TxnLog.snapshot(spark, table)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
@@ -841,10 +757,7 @@ object EventStream {
           max(col("value")).as("max_value"))
         .orderBy("event_type")
         .localCheckpoint(true)
-    } finally {
-      if (!LandingCache.isCached(landing)) deleteRecursively(landing)
-      deleteRecursively(java.nio.file.Paths.get(table).getParent)
-    }
+    } finally deleteRecursively(root)
   }
 
   /** Exactly-once streaming MERGE into a TxnLog table: two "daily
@@ -860,38 +773,33 @@ object EventStream {
     * `2 × updated rows` only holds if the markers absorbed the replay. */
   def txnMergeSinkTotals(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxnLog
-    val root = java.nio.file.Files.createTempDirectory("graft_txn_merge_")
+    val root = Files.createTempDirectory("graft_txn_merge_")
     val table = root.resolve("t").toString
     val landing = root.resolve("landing")
-    val o = graft.Tables.load(spark, dir, "orders")
-      .select(col("o_orderkey"), col("o_orderstatus"),
-        col("o_orderdate"), col("o_totalprice"))
-    TxnLog.create(spark, table,
-      o.filter(col("o_orderdate") < to_date(lit("1998-01-01"))))
-    def window(lo: String, hi: String) = o
-      .filter(col("o_orderdate") >= to_date(lit(lo)) &&
-        col("o_orderdate") < to_date(lit(hi)))
-      .withColumn("o_totalprice", col("o_totalprice") * 2)
-    window("1997-01-01", "1997-04-01").coalesce(1)
-      .write.mode("overwrite").parquet(s"$landing/a")
-    window("1997-04-01", "1997-07-01").coalesce(1)
-      .write.mode("overwrite").parquet(s"$landing/b")
-    val schema = o.schema
-    def runOnce(): Unit = withFastFs(spark) {
-      val q = spark.readStream.schema(schema)
+    try {
+      val o = graft.Tables.load(spark, dir, "orders")
+        .select(col("o_orderkey"), col("o_orderstatus"),
+          col("o_orderdate"), col("o_totalprice"))
+      TxnLog.create(spark, table,
+        o.filter(col("o_orderdate") < to_date(lit("1998-01-01"))))
+      def window(lo: String, hi: String) = o
+        .filter(col("o_orderdate") >= to_date(lit(lo)) &&
+          col("o_orderdate") < to_date(lit(hi)))
+        .withColumn("o_totalprice", col("o_totalprice") * 2)
+      window("1997-01-01", "1997-04-01").coalesce(1)
+        .write.mode("overwrite").parquet(s"$landing/a")
+      window("1997-04-01", "1997-07-01").coalesce(1)
+        .write.mode("overwrite").parquet(s"$landing/b")
+      val updates = spark.readStream.schema(o.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$landing/*")
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
+      // the second run's fresh checkpoint = full crash replay; the txn
+      // markers absorb it
+      for (_ <- 1 to 2)
+        drain(updates)(_.foreachBatch { (batch: DataFrame, id: Long) =>
           TxnLog.idempotentUpsert(spark, table, batch,
             Seq("o_orderkey"), "merge-sync", id): Unit
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    runOnce()
-    runOnce() // fresh checkpoint = full crash replay; markers absorb it
-    try {
+        })
       val snap = TxnLog.snapshot(spark, table)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
@@ -919,7 +827,7 @@ object EventStream {
     * so the oracle replays the full feed without seeing the table. */
   def txnChangeFeedTotals(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxnLog
-    val table = java.nio.file.Files
+    val table = Files
       .createTempDirectory("graft_txn_cdf_").resolve("t").toString
     val o = graft.Tables.load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"),
@@ -936,22 +844,13 @@ object EventStream {
       .groupBy("_change_type")
       .agg(count(lit(1)).as("n_rows"),
         sum(col("o_totalprice").cast(Exact.Money)).as("tp"))
-    try runToResult(spark, agg, "complete",
-      statePartitioned = true, None) { t =>
+    try runToResult(agg, "complete") { t =>
       t.select(col("_change_type"), col("n_rows"),
         col("tp").cast(DoubleType).as("total_price"))
         .orderBy("_change_type")
-    } finally deleteRecursively(java.nio.file.Paths.get(table).getParent)
+    } finally deleteRecursively(Paths.get(table).getParent)
   }
 
-  /** Streaming CDF via the FORMAT STRING: the q275 pipeline (create →
-    * MERGE-style upsert → delete) consumed through
-    * `readStream.format("txnlog").option("readChangeFeed", true)` — the
-    * registered change-feed SOURCE whose offsets are log versions and
-    * whose micro-batches are changesBetween windows, i.e. Delta's
-    * streaming readChangeFeed with zero programmatic calls.
-    * `startingVersion = 2` opens the window after the create, so the
-    * feed is exactly the journaled upsert/delete rows. */
   /** Rate-limited txnlog streaming source: `maxVersionsPerTrigger=1`
     * turns a 4-version backlog into four bounded micro-batches instead
     * of one giant catch-up batch — the in-run require pins the batch
@@ -962,7 +861,7 @@ object EventStream {
   def txnRateLimitedStreamTotals(spark: SparkSession,
                                  dir: String): DataFrame = {
     import graft.sources.TxnLog
-    val table = java.nio.file.Files
+    val table = Files
       .createTempDirectory("graft_txn_rate_").resolve("t").toString
     val o = graft.Tables.load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"),
@@ -978,38 +877,28 @@ object EventStream {
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_rows"),
         sum(col("o_totalprice").cast(Exact.Money)).as("tp"))
-    val name = s"stream_rate_${System.nanoTime()}"
-    // same harness discipline as runToResult (this query drives its own
-    // loop to read progress records): throwaway checkpoint on tmpfs and
-    // state partitions sized to state volume (~3 status keys) — without
-    // either, each micro-batch paid 32 disk-fsynced store commits
-    // (round-16 StreamProbe: ~600 ms per store under full contention)
-    val ckpt = tmpfsCheckpoint()
-    val w0 = agg.writeStream.outputMode("complete").format("memory")
-      .queryName(name)
-    val w = ckpt.fold(w0)(p => w0.option("checkpointLocation", p.toString))
-    withFastFs(spark) {
-      val q = withStatePartitions(spark, StatePartitions)(w.start())
-      try {
-        q.processAllAvailable()
+    try runToResult(agg, "complete", check = { q =>
         val nonEmpty = q.recentProgress.count(_.numInputRows > 0)
         require(nonEmpty >= 4,
           s"4 versions at 1/trigger need >= 4 micro-batches, got $nonEmpty")
-      } finally {
-        q.stop()
-        ckpt.foreach(deleteRecursively)
-      }
-    }
-    try spark.table(name)
-      .select(col("o_orderstatus"), col("n_rows"),
+      }) { t =>
+      t.select(col("o_orderstatus"), col("n_rows"),
         col("tp").cast(DoubleType).as("total_price"))
-      .orderBy("o_orderstatus").localCheckpoint(true)
-    finally deleteRecursively(java.nio.file.Paths.get(table).getParent)
+        .orderBy("o_orderstatus")
+    } finally deleteRecursively(Paths.get(table).getParent)
   }
 
+  /** Streaming CDF via the FORMAT STRING: the q275 pipeline (create →
+    * MERGE-style upsert → delete) consumed through
+    * `readStream.format("txnlog").option("readChangeFeed", true)` — the
+    * registered change-feed SOURCE whose offsets are log versions and
+    * whose micro-batches are changesBetween windows, i.e. Delta's
+    * streaming readChangeFeed with zero programmatic calls.
+    * `startingVersion = 2` opens the window after the create, so the
+    * feed is exactly the journaled upsert/delete rows. */
   def txnCdfStreamTotals(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxnLog
-    val table = java.nio.file.Files
+    val table = Files
       .createTempDirectory("graft_txn_cdfsrc_").resolve("t").toString
     val o = graft.Tables.load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"),
@@ -1031,12 +920,11 @@ object EventStream {
       .agg(count(lit(1)).as("n_rows"),
         sum(col("o_totalprice").cast(Exact.Money)).as("tp"),
         min(col("_commit_version")).as("first_v"))
-    try runToResult(spark, agg, "complete",
-      statePartitioned = true, None) { t =>
+    try runToResult(agg, "complete") { t =>
       t.select(col("_change_type"), col("n_rows"),
         col("tp").cast(DoubleType).as("total_price"), col("first_v"))
         .orderBy("_change_type")
-    } finally deleteRecursively(java.nio.file.Paths.get(table).getParent)
+    } finally deleteRecursively(Paths.get(table).getParent)
   }
 
   /** q286: the APPEND-path streaming read of a TxnLog table — the
@@ -1051,7 +939,7 @@ object EventStream {
     * appended batches, so a leaked rewrite row hash-fails. */
   def txnAppendStreamTotals(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxnLog
-    val table = java.nio.file.Files
+    val table = Files
       .createTempDirectory("graft_txn_feed_").resolve("t").toString
     val o = graft.Tables.load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"),
@@ -1069,12 +957,11 @@ object EventStream {
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_rows"),
         sum(col("o_totalprice").cast(Exact.Money)).as("tp"))
-    try runToResult(spark, agg, "complete",
-      statePartitioned = true, None) { t =>
+    try runToResult(agg, "complete") { t =>
       t.select(col("o_orderstatus"), col("n_rows"),
         col("tp").cast(DoubleType).as("total_price"))
         .orderBy("o_orderstatus")
-    } finally deleteRecursively(java.nio.file.Paths.get(table).getParent)
+    } finally deleteRecursively(Paths.get(table).getParent)
   }
 
   /** `spark.readStream.format("txnlog")` end-to-end: the registered
@@ -1086,7 +973,7 @@ object EventStream {
     * commit classification, not just the happy path. */
   def txnSourceStreamTotals(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxnLog
-    val table = java.nio.file.Files
+    val table = Files
       .createTempDirectory("graft_txn_src_").resolve("t").toString
     val o = graft.Tables.load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"),
@@ -1107,37 +994,28 @@ object EventStream {
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_rows"),
         sum(col("o_totalprice").cast(Exact.Money)).as("tp"))
-    try runToResult(spark, agg, "complete",
-      statePartitioned = true, None) { t =>
+    try runToResult(agg, "complete") { t =>
       t.select(col("o_orderstatus"), col("n_rows"),
         col("tp").cast(DoubleType).as("total_price"))
         .orderBy("o_orderstatus")
-    } finally deleteRecursively(java.nio.file.Paths.get(table).getParent)
+    } finally deleteRecursively(Paths.get(table).getParent)
   }
 
+  /** Tumbling 1-day totals per event_type over the events fixture,
+    * executed as a real streaming query into a memory sink, returned as a
+    * batch DataFrame for the verify/oracle harness. */
   def dailyTotals(spark: SparkSession, dir: String): DataFrame = {
-    val (src, landing) = eventsStream(spark, dir)
+    val src = eventsStream(spark, dir)
     val agg = src
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value").cast(Exact.Money)).as("tv"))
-    runToResult(spark, agg, "complete",
-      statePartitioned = true, Some(landing)) { t =>
+    runToResult(agg, "complete") { t =>
       t.select(to_date(col("w.start")).as("event_date"), col("event_type"),
         col("n"), col("tv").cast(DoubleType).as("total_value"))
         .orderBy("event_date", "event_type")
     }
   }
 
-  /** Hopping (sliding) windows: 2-day windows advancing by 1 day, so
-    * every event lands in exactly TWO windows — the overlapping-window
-    * semantics tumbling (q35) can't express (trailing 48h totals
-    * refreshed daily). Spark's `window(ts, size, slide)` assigns the
-    * ⌈size/slide⌉ epoch-aligned windows per row inside the scan (a
-    * Generate, input ×2 before partial aggregation — the row-local
-    * expansion IS the operator); state stays bounded at
-    * (#windows × #types). The batch oracle replays the same assignment
-    * as an unnest over day offsets {0, 1}, and decimal sums make
-    * stream ≡ batch for any micro-batch split. */
   /** Streaming Count-Min: the q146 sketch aggregate running INSIDE a
     * micro-batch pipeline — the stream split by event-id parity, so every
     * type's grid is genuinely built across two batches and merged in the
@@ -1148,14 +1026,13 @@ object EventStream {
     * oracle check a streaming pipeline: the sketch-table production
     * pattern (q143's KMV rollup) in its streaming form. */
   def sketchTotals(spark: SparkSession, dir: String): DataFrame = {
-    val (stream, landing) = parityStream(spark, dir, "cm_")
+    val stream = parityStream(spark, dir)
     val d = 2; val w = 64
     val agg = stream
       .withColumn("h", graft.ops.Sampling.shaHash60(col("user_id")))
       .groupBy("event_type")
       .agg(graft.functions.CountMin(col("h"), d, w).as("grid"))
-    runToResult(spark, agg, "complete",
-      statePartitioned = true, Some(landing)) { t =>
+    runToResult(agg, "complete") { t =>
       t.select(col("event_type"), posexplode(col("grid")).as(Seq("pos", "cnt")))
         .filter(col("cnt") > 0)
         .select(col("event_type"),
@@ -1177,13 +1054,12 @@ object EventStream {
     * a full batch-vs-stream equivalence check for the approximate
     * operator's merge path. */
   def spaceSavingTotals(spark: SparkSession, dir: String): DataFrame = {
-    val (stream, landing) = parityStream(spark, dir, "ss_")
+    val stream = parityStream(spark, dir)
     val agg = stream
       .withColumn("tok", pmod(col("user_id"), lit(64L)).cast("string"))
       .groupBy("event_type")
       .agg(graft.functions.SpaceSaving(col("tok"), 128).as("hh"))
-    runToResult(spark, agg, "complete",
-      statePartitioned = true, Some(landing)) { t =>
+    runToResult(agg, "complete") { t =>
       t.select(col("event_type"), explode(col("hh")).as("e"))
         .select(col("event_type"), col("e.token"), col("e.cnt"),
           col("e.err"))
@@ -1237,29 +1113,10 @@ object EventStream {
     * as transformWithState requires). */
   def typeMilestones(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (stream, landing) = parityStream(spark, dir, "milestone_")
-    val ds = stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value")).as[EventRow]
-    val out = ds.groupByKey(_.user_id)
-      .transformWithState(new TypeMilestoneProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      runToResult(spark, out.toDF(), "append",
-        statePartitioned = true, Some(landing)) { t =>
-        t.select(col("user_id"), col("event_type"), col("milestone"))
-          .orderBy("user_id", "event_type", "milestone")
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    runToResult(perUser(parityStream(spark, dir), new TypeMilestoneProcessor),
+        "append") { t =>
+      t.select(col("user_id"), col("event_type"), col("milestone"))
+        .orderBy("user_id", "event_type", "milestone")
     }
   }
 
@@ -1309,49 +1166,29 @@ object EventStream {
     * prefix is in batch 1 and completion in batch 2 still matches). */
   def seqPatternMatches(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.Tables.fixtureConf(spark)
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    val tsNorm = graft.Tables.tsCol(raw.schema("ts").dataType)
-    val Array(loUs, hiUs) = raw
-      .agg(unix_micros(min(tsNorm)), unix_micros(max(tsNorm)))
-      .head().toSeq.map(_.asInstanceOf[Long]).toArray
-    val midC = timestamp_micros(lit(loUs + (hiUs - loUs) / 2))
-    val (stream, landing) = splitStream(spark, dir, "seqpat_", Seq(
-      "a_early" -> (tsNorm < midC),
-      "b_late" -> (tsNorm >= midC)))
-    val ds = stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value")).as[EventRow]
-    val out = ds.groupByKey(_.user_id)
-      .transformWithState(
-        new SeqPatternProcessor(Seq("view", "click", "purchase")),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      runToResult(spark, out.toDF(), "append",
-        statePartitioned = true, Some(landing)) { t =>
-        t.select(col("user_id"), col("event_id"))
-          .orderBy("user_id", "event_id")
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    val matcher = new SeqPatternProcessor(Seq("view", "click", "purchase"))
+    runToResult(perUser(halvesStream(spark, dir), matcher), "append") { t =>
+      t.select(col("user_id"), col("event_id"))
+        .orderBy("user_id", "event_id")
     }
   }
 
+  /** Hopping (sliding) windows: 2-day windows advancing by 1 day, so
+    * every event lands in exactly TWO windows — the overlapping-window
+    * semantics tumbling (q35) can't express (trailing 48h totals
+    * refreshed daily). Spark's `window(ts, size, slide)` assigns the
+    * ⌈size/slide⌉ epoch-aligned windows per row inside the scan (a
+    * Generate, input ×2 before partial aggregation — the row-local
+    * expansion IS the operator); state stays bounded at
+    * (#windows × #types). The batch oracle replays the same assignment
+    * as an unnest over day offsets {0, 1}, and decimal sums make
+    * stream ≡ batch for any micro-batch split. */
   def hoppingTotals(spark: SparkSession, dir: String): DataFrame = {
-    val (src, landing) = eventsStream(spark, dir)
+    val src = eventsStream(spark, dir)
     val agg = src
       .groupBy(window(col("ts"), "2 days", "1 day").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value").cast(Exact.Money)).as("tv"))
-    runToResult(spark, agg, "complete",
-      statePartitioned = true, Some(landing)) { t =>
+    runToResult(agg, "complete") { t =>
       t.select(to_date(col("w.start")).as("w_start"),
         to_date(col("w.end")).as("w_end"), col("event_type"),
         col("n"), col("tv").cast(DoubleType).as("total_value"))

@@ -394,4 +394,115 @@ class StreamSpec extends SparkSpec {
       .filter(col("early") > 0 && col("late") > 0).count()
     assert(bothHalves > 0, "fixture never exercises cross-batch state handoff")
   }
+
+  test("maxVersionsPerTrigger under AvailableNow drains every version in capped batches") {
+    // AvailableNow must pin the head and still honour the per-batch cap:
+    // four 100-row versions at one version per trigger
+    import graft.sources.TxnLog
+    val t = java.nio.file.Paths.get(TempWork.fresh("avail_cap"))
+      .resolve("t").toString
+    val ids = spark.range(400).toDF("id")
+    TxnLog.create(spark, t, ids.filter(col("id") < 100))
+    for (lo <- Seq(100, 200, 300))
+      TxnLog.append(spark, t, ids.filter(col("id") >= lo && col("id") < lo + 100))
+    val sizes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val q = spark.readStream.format("txnlog").option("path", t)
+      .option("maxVersionsPerTrigger", "1").load()
+      .writeStream
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) =>
+        sizes.add(b.count()): Unit)
+      .option("checkpointLocation", TempWork.fresh("avail_cap_ck"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val got = sizes.toArray.toSeq.map(_.asInstanceOf[Long])
+    assert(got.sum === 400L, s"batch sizes $got")
+    assert(got.count(_ > 0) >= 4, s"batch sizes $got")
+  }
+
+  test("streaming queries leave no temp view or graft_* dir behind") {
+    import scala.jdk.CollectionConverters._
+    val roots = Seq(System.getProperty("java.io.tmpdir"), "/dev/shm")
+      .map(java.nio.file.Paths.get(_)).filter(java.nio.file.Files.isDirectory(_))
+    def graftDirs(): Set[String] = roots.flatMap { r =>
+      val st = java.nio.file.Files.list(r)
+      try st.iterator().asScala.map(_.toString)
+        .filter(_.startsWith(r.resolve("graft_").toString)).toList
+      finally st.close()
+    }.toSet
+    def tempViews(): Set[String] =
+      spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    // the first run stages the per-JVM landing cache; the second must
+    // leave the driver and the temp dirs exactly as it found them
+    for (name <- Seq("q95_stream_enrich", "q107_stream_merge_sink",
+        "q156_stream_milestones", "q264_stream_txnlog_sink",
+        "q295_stream_txnlog_merge", "q301_stream_txnlog_format",
+        "q313_stream_rate_limit")) {
+      val run = SparkEntry.queries(name)
+      assert(run(spark, sf0001).collect().nonEmpty, name)
+      val (views, dirs) = (tempViews(), graftDirs())
+      run(spark, sf0001).collect()
+      assert(tempViews() -- views === Set.empty[String], s"$name leaked a temp view")
+      assert(graftDirs() -- dirs === Set.empty[String], s"$name leaked a temp dir")
+    }
+  }
+
+  test("drain restores the session and deletes its checkpoint when the sink throws") {
+    implicit val ctx = spark.sqlContext
+    val keys = Seq("spark.sql.shuffle.partitions", "fs.file.impl",
+      "fs.AbstractFileSystem.file.impl",
+      "spark.sql.streaming.stateStore.providerClass")
+    def settings() = keys.map(k => k -> spark.conf.getOption(k)).toMap
+    def checkpoints(): Set[String] = Seq(System.getProperty("java.io.tmpdir"), "/dev/shm")
+      .map(java.nio.file.Paths.get(_)).filter(java.nio.file.Files.isDirectory(_))
+      .flatMap { r =>
+        val st = java.nio.file.Files.list(r)
+        try st.toArray.map(_.toString)
+          .filter(_.startsWith(r.resolve("graft_ckpt_").toString)).toList
+        finally st.close()
+      }.toSet
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7") // tell 7 from the scoped 4
+    try {
+      val (before, ckptsBefore) = (settings(), checkpoints())
+      val inside = new java.util.concurrent.atomic.AtomicReference(
+        Map.empty[String, Option[String]])
+      val ms = MemoryStream[EventRow]
+      ms.addData(ev(1, "2024-01-05"), ev(2, "2024-01-03"))
+      // a transformWithState plan, so the RocksDB provider is scoped in too
+      val keyed = ms.toDS().groupByKey(_.user_id)
+        .transformWithState(new StreamSpec.UserKeys,
+          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
+        .toDF()
+      val err = intercept[Exception] {
+        EventStream.drain(keyed)(_.foreachBatch {
+          (_: org.apache.spark.sql.DataFrame, _: Long) =>
+            inside.set(settings())
+            throw new IllegalStateException("sink failed on purpose")
+        })
+      }
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("sink failed on purpose")),
+        s"the sink's error must reach the caller, got $err")
+      assert(inside.get()("spark.sql.shuffle.partitions") === Some("4"))
+      assert(inside.get()("fs.file.impl") ===
+        Some(classOf[graft.sources.FastLocalFs].getName))
+      assert(inside.get()("spark.sql.streaming.stateStore.providerClass")
+        .exists(_.contains("RocksDB")))
+      assert(settings() === before)
+      assert(checkpoints() === ckptsBefore)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
+  }
+}
+
+object StreamSpec {
+  /** Emits each user once per batch; only its plan shape matters. */
+  class UserKeys extends org.apache.spark.sql.streaming.StatefulProcessor[
+      Long, EventRow, Long] {
+    override def init(outputMode: OutputMode,
+                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = ()
+    override def handleInputRows(key: Long, rows: Iterator[EventRow],
+        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[Long] =
+      Iterator(key)
+  }
 }
