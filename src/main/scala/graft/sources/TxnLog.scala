@@ -6,7 +6,9 @@ import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{BooleanType, DataType, DateType, LongType,
   NumericType, StringType, StructField, StructType, TimestampType}
 
@@ -1310,16 +1312,15 @@ object TxnLog {
     * [[BloomBits]] per file per column, OR-folded into the bitset
     * driver-side. */
   private def bloomLines(spark: SparkSession, table: String,
-                         named: Seq[String],
+                         footers: Seq[StagedFooter],
                          bloomCols: Seq[String],
                          phys: Map[String, String] = Map.empty)
       : Seq[String] = {
-    if (bloomCols.isEmpty || named.isEmpty) return Nil
+    if (bloomCols.isEmpty || footers.isEmpty) return Nil
     import org.apache.spark.sql.functions._
     val m = BloomBits; val k = BloomHashes
-    val byLeaf = named.map(n => n.split('/').last -> n).toMap
-    val df = spark.read.parquet(
-      named.map(n => new HPath(tablePath(table), n).toString): _*)
+    val byLeaf = footers.map(f => f.name.split('/').last -> f.name).toMap
+    val df = readStaged(spark, table, footers)
     // staged files carry PHYSICAL names; lines are keyed by the LOGICAL
     // name probes use. A tracked column no longer in the files (renamed
     // away / dropped) is skipped — unprunable, never wrong.
@@ -1510,8 +1511,10 @@ object TxnLog {
     val tableQ = fs.makeQualified(t)
     val tmp = new HPath(tableQ, s"_staging_${UUID.randomUUID()}")
     val w = df.write.mode("overwrite").options(stageWriteOptions)
-    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
+    // a failed job leaves the files its finished tasks committed
+    try (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
       .parquet(tmp.toString)
+    catch { case e: Throwable => fs.delete(tmp, true); throw e }
     val tmpQ = fs.makeQualified(tmp).toString
     val parts = {
       val it = fs.listFiles(tmp, true)
@@ -1631,6 +1634,17 @@ object TxnLog {
   private final case class StagedFooter(
       name: String, rows: Long, bytes: Long,
       footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+
+  /** Staged files read under the schema Spark infers from their footer,
+    * minus the one-task inference job a bare `read.parquet` runs. */
+  private def readStaged(spark: SparkSession, table: String,
+                         foot: Seq[StagedFooter]): DataFrame = {
+    val paths = foot.map(f => new HPath(tablePath(table), f.name))
+    spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(paths.head, foot.head.footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+      .parquet(paths.map(_.toString): _*)
+  }
 
   private def readFooters(table: String, named: Seq[String])
       : Seq[StagedFooter] = {
@@ -1761,21 +1775,20 @@ object TxnLog {
       else leftover += ((c, pc))
     }
     fromFooter.toSeq ++
-      statsLinesJob(spark, table, footers.map(_.name), leftover.toSeq)
+      statsLinesJob(spark, table, footers, leftover.toSeq)
   }
 
   /** The original one-Spark-job stats pass — now only the FALLBACK for
     * columns whose footer statistics cannot reproduce [[canonicalCol]]
     * (strings, doubles, decimals, INT96 timestamps). */
   private def statsLinesJob(spark: SparkSession, table: String,
-                            named: Seq[String],
+                            footers: Seq[StagedFooter],
                             colPairs: Seq[(String, String)])
       : Seq[String] = {
-    if (colPairs.isEmpty || named.isEmpty) return Nil
+    if (colPairs.isEmpty || footers.isEmpty) return Nil
     import org.apache.spark.sql.functions._
-    val byLeaf = named.map(n => n.split('/').last -> n).toMap
-    val df = spark.read.parquet(
-      named.map(n => new HPath(tablePath(table), n).toString): _*)
+    val byLeaf = footers.map(f => f.name.split('/').last -> f.name).toMap
+    val df = readStaged(spark, table, footers)
     // staged files carry PHYSICAL names; lines are keyed by the LOGICAL
     // name probes use (same contract as bloomLines). A tracked column
     // whose type lost its long form (a schema-replacing overwrite) is
@@ -2171,7 +2184,7 @@ object TxnLog {
         rowTrackLines(rows, p.st.rowHigh) else Nil) ++
       statsLines(spark, table, foot, tracked(p.st.stats.keys, p.statsCols),
         pm) ++
-      bloomLines(spark, table, p.staged,
+      bloomLines(spark, table, foot,
         tracked(p.st.blooms.keys, p.bloomCols), pm) ++
       rowcountLines(read)
   }
@@ -3071,7 +3084,11 @@ object TxnLog {
     * disabled only when `notMatchedBySource` clauses exist, since
     * those touch every unmatched target row, exactly Delta's rule),
     * one transactional CAS-pinned commit, and row-level CDF journaling
-    * (update_preimage/update_postimage/delete/insert). */
+    * (update_preimage/update_postimage/delete/insert).
+    * The join runs ONCE: the data-file write computes and pins it, and
+    * the change feed is one `explode` over the pinned rows, so
+    * post-images are the staged rows whatever the assignments
+    * evaluate to. The pin is released on return or throw. */
   def merge(spark: SparkSession, table: String, source: DataFrame,
             keys: Seq[String],
             matched: Seq[MergeClause],
@@ -3080,8 +3097,8 @@ object TxnLog {
             sourceKeys: Seq[String] = Nil,
             expectedVersion: Option[Long] = None,
             mergeSchema: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit, raise_error,
-      struct, when}
+    import org.apache.spark.sql.functions.{array, col, count, explode, lit,
+      raise_error, struct, when}
     require(keys.nonEmpty, "merge needs at least one key column")
     // the ON equality may pair differently-named columns (a CDC feed's
     // `id` against the table's `order_id`); `sourceKeys` names the
@@ -3248,61 +3265,42 @@ object TxnLog {
     val updRow = (isM && mi.isNotNull && !isIn(mi, mDel)) ||
       (isT && ti.isNotNull && !isIn(ti, tDel))
     val delRow = (isM && isIn(mi, mDel)) || (isT && isIn(ti, tDel))
-    // the staged rows and the CDF post-image/insert rows must carry
-    // IDENTICAL values, so both derive from ONE tagged plan. When any
-    // output expression can drift between two executions — identity
-    // assignment (monotonically_increasing_id over the filtered plan)
-    // or wall-clock/random defaults like NOW() — the plan is PINNED
-    // once (localCheckpoint, same single-scan contract as
-    // updateWhereDV); a fully deterministic merge skips the pin and
-    // lets both sides re-evaluate to provably equal values.
-    val branchTag = when(isS, lit("ins")).when(updRow, lit("upd"))
-      .otherwise(lit("keep")).as("__branch")
-    def drifts(e: org.apache.spark.sql.catalyst.expressions.Expression)
-        : Boolean = {
-      val wallClock = Set("now", "current_timestamp", "current_date",
-        "localtimestamp", "rand", "randn", "random", "uuid", "shuffle",
-        "monotonically_increasing_id")
-      e.exists {
-        case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-          => wallClock.contains(f.nameParts.last.toLowerCase)
-        case nd if !nd.deterministic => true
-        case _ => false
-      }
+    // ONE tagged relation feeds both writes: output columns, branch
+    // and (upd/del) the target pre-image. GENERATED columns are ALWAYS
+    // recomputed from the merged row — an UPDATE that moves a base
+    // column cannot leave the generated (often partition) column stale,
+    // and an INSERT clause that omits it cannot land a null partition
+    val branch = when(isS, lit("ins")).when(updRow, lit("upd"))
+      .when(delRow, lit("del")).otherwise(lit("keep")).as("__branch")
+    val pre = when(updRow || delRow, struct(tAll: _*)).as("__pre")
+    // pinned LAZILY: the data-file write computes and stores the rows,
+    // the change-feed write reads them back — no second scan, and
+    // identity ids, NOW() or rand() cannot differ between the two
+    val pinned = regenerate(joined.filter(survives || delRow)
+      .select(outCols :+ branch :+ pre: _*), Some(schema))
+      .localCheckpoint(eager = false)
+    try {
+      val tag = col("__branch")
+      val post = struct(evolved.fieldNames.toSeq.map(col): _*)
+      def img(r: Column, t: String) = struct(r.as("r"), lit(t).as("t"))
+      val cdc = pinned.where(tag =!= "keep").select(explode(
+        when(tag === "upd", array(img(col("__pre"), "update_preimage"),
+          img(post, "update_postimage")))
+          .when(tag === "del", array(img(col("__pre"), "delete")))
+          .otherwise(array(img(post, "insert")))).as("__c"))
+        .select(col("__c.r.*"), col("__c.t").as("_change_type"))
+      val named = stageChecked(spark, table,
+        pinned.where(tag =!= "del").drop("__branch", "__pre"),
+        st.checks, pcols, Some(evolved))
+      commit(spark, table, Plan("merge", base, st,
+        meta = dvClearIf(st, touchedFiles),
+        schema = if (newFields.nonEmpty) Some(evolved.json) else None,
+        removes = touchedFiles, staged = named,
+        cdc = stageCdc(spark, table, cdc), layout = Some(evolved),
+        idCols = idFieldsM.map(_.name).toSeq))
+    } finally pinned.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
     }
-    val needsPin = idFieldsM.nonEmpty ||
-      outCols.exists(c =>
-        drifts(org.apache.spark.sql.GraftShim.expression(c)))
-    // GENERATED columns are ALWAYS recomputed from the merged row —
-    // an UPDATE that moves a base column cannot leave the generated
-    // (often partition) column stale, and an INSERT clause that omits
-    // it cannot land a null partition
-    val mergedAll0 = regenerate(joined.filter(survives)
-      .select(outCols :+ branchTag: _*), Some(schema))
-    val mergedAll =
-      if (needsPin) mergedAll0.localCheckpoint(true) else mergedAll0
-    val merged = mergedAll.drop("__branch")
-    // row-level CDF: pre-image/delete rows read target values (always
-    // deterministic); post-image/insert rows come from the SAME
-    // (possibly pinned) plan the staged files are written from
-    val cdc = joined.filter(updRow && cardOk).select(tAll: _*)
-        .withColumn("_change_type", lit("update_preimage"))
-      .unionByName(mergedAll.filter(col("__branch") === "upd")
-        .drop("__branch")
-        .withColumn("_change_type", lit("update_postimage")))
-      .unionByName(joined.filter(delRow).select(tAll: _*)
-        .withColumn("_change_type", lit("delete")))
-      .unionByName(mergedAll.filter(col("__branch") === "ins")
-        .drop("__branch")
-        .withColumn("_change_type", lit("insert")))
-    val named = stageChecked(spark, table, merged, st.checks, pcols,
-      Some(evolved))
-    commit(spark, table, Plan("merge", base, st,
-      meta = dvClearIf(st, touchedFiles),
-      schema = if (newFields.nonEmpty) Some(evolved.json) else None,
-      removes = touchedFiles, staged = named,
-      cdc = stageCdc(spark, table, cdc), layout = Some(evolved),
-      idCols = idFieldsM.map(_.name).toSeq))
   }
 
   /** DYNAMIC PARTITION OVERWRITE (Spark's INSERT OVERWRITE dynamic

@@ -144,4 +144,106 @@ class MergePropertySpec extends SparkSpec {
       TempWork.deleteRecursively(dir)
     }
   }
+
+  /** The change rows SQL MERGE implies, as (_change_type, k, tv):
+    * pre/post for every fired non-delete matched or NOT MATCHED BY
+    * SOURCE clause, `delete` per deleted row, `insert` per inserted
+    * row. */
+  private def referenceChanges(tRows: Map[Int, Int], sRows: Map[Int, Int],
+                               matched: Seq[Spec], notMatched: Seq[Spec],
+                               nmbs: Seq[Spec]): Seq[(String, Int, Int)] = {
+    def fired(sp: Option[Spec], k: Int, tv: Int, sv: Option[Int]) =
+      sp match {
+        case Some(Spec(_, Del)) => Seq(("delete", k, tv))
+        case Some(Spec(_, act)) =>
+          val nv = if (act == Bump) tv + 1 else sv.get
+          Seq(("update_preimage", k, tv), ("update_postimage", k, nv))
+        case None => Nil
+      }
+    tRows.toSeq.flatMap { case (k, tv) =>
+      sRows.get(k) match {
+        case Some(sv) => fired(
+          matched.find(sp => condRef(sp.cond, Some(tv), Some(sv))),
+          k, tv, Some(sv))
+        case None => fired(
+          nmbs.find(sp => condRef(sp.cond, Some(tv), None)), k, tv, None)
+      }
+    } ++ sRows.toSeq.collect { case (k, sv) if !tRows.contains(k) &&
+        notMatched.exists(sp => condRef(sp.cond, None, Some(sv))) =>
+      ("insert", k, sv)
+    }
+  }
+
+  test("random clause sets: change feed == reference change rows") {
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField,
+      StructType}
+    val rnd = new scala.util.Random(77031)
+    val schema = StructType(Seq(StructField("k", IntegerType),
+      StructField("tv", IntegerType), StructField("d", DoubleType)))
+    (1 to 12).foreach { trial =>
+      // a drifting assignment gives another value on every execution;
+      // the post-images must still be the rows the snapshot holds
+      val drift: Option[Column] = trial % 4 match {
+        case 0 => Some(rand())
+        case 1 => Some(unix_micros(current_timestamp()).cast("double"))
+        case _ => None
+      }
+      val tRows = (0 to 14).filter(_ => rnd.nextBoolean())
+        .map(k => k -> rnd.nextInt(20)).toMap
+      val sRows = (0 to 19).filter(_ => rnd.nextBoolean())
+        .map(k => k -> rnd.nextInt(20)).toMap
+      def cond(): Cond = rnd.nextInt(3) match {
+        case 0 => Always
+        case 1 => SrcGt(rnd.nextInt(20))
+        case 2 => TgtGt(rnd.nextInt(20))
+      }
+      def mAct(): Act = rnd.nextInt(3) match {
+        case 0 => Del; case 1 => SetFromSrc; case 2 => Bump
+      }
+      val matched = Seq.fill(rnd.nextInt(3))(Spec(cond(), mAct()))
+      var notMatched = Seq.fill(rnd.nextInt(2))(Spec(cond(), SetFromSrc))
+      val nmbs = Seq.fill(rnd.nextInt(2))(
+        Spec(cond(), if (rnd.nextBoolean()) Del else Bump))
+      if (matched.isEmpty && notMatched.isEmpty && nmbs.isEmpty)
+        notMatched = Seq(Spec(Always, SetFromSrc))
+      def drifted(c: MergeClause) =
+        if (c.isDelete) c
+        else c.copy(assignments = c.assignments ++ drift.map("d" -> _))
+      val dir = Files.createTempDirectory("graft_mcdf_")
+      dir.toFile.deleteOnExit()
+      val t = dir.resolve("t").toString
+      if (tRows.isEmpty) TxnLog.createEmpty(spark, t, schema)
+      else TxnLog.create(spark, t, spark.createDataFrame(
+        spark.sparkContext.parallelize(tRows.toSeq.map { case (k, tv) =>
+          org.apache.spark.sql.Row(k, tv, k * 0.5) }), schema))
+      val sEff = if (sRows.isEmpty) Map(-99 -> 0) else sRows
+      val v = TxnLog.merge(spark, t,
+        spark.createDataFrame(sEff.toSeq).toDF("sk", "sv"), keys = Seq("k"),
+        matched = matched.map(matchedClause).map(drifted),
+        notMatched = notMatched.map(insertClause).map(drifted),
+        notMatchedBySource = nmbs.map(matchedClause).map(drifted),
+        sourceKeys = Seq("sk"))
+      val snap = TxnLog.snapshot(spark, t).collect()
+        .map(r => r.getInt(0) -> r).toMap
+      val changes = TxnLog.changesBetween(spark, t, v - 1, v)
+        .select("_change_type", "k", "tv", "d").collect().toSeq
+      val got = changes.map(r => (r.getString(0), r.getInt(1), r.getInt(2)))
+      val want = referenceChanges(tRows, sEff, matched, notMatched, nmbs)
+      val ctx = s"trial $trial: target=$tRows source=$sEff " +
+        s"matched=$matched notMatched=$notMatched nmbs=$nmbs drift=$drift"
+      assert(got.sorted == want.sorted, ctx)
+      changes.foreach { r =>
+        val k = r.getInt(1)
+        r.getString(0) match {
+          case "update_preimage" | "delete" =>
+            assert(r.getDouble(3) == k * 0.5, s"pre-image of $k; $ctx")
+          case _ =>
+            val s = snap(k)
+            assert(r.getInt(2) == s.getInt(1) && r.get(3) == s.get(2),
+              s"post-image $r is not the committed row $s; $ctx")
+        }
+      }
+      TempWork.deleteRecursively(dir)
+    }
+  }
 }

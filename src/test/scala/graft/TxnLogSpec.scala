@@ -2730,6 +2730,85 @@ class TxnLogSpec extends SparkSpec {
     assert(e2.getMessage.contains("conjunction of equalities"))
   }
 
+  /** Every regular file under a table directory. */
+  private def filesUnder(t: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.walk(Paths.get(t))
+    try s.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(_.toString).toSet
+    finally s.close()
+  }
+
+  private val setV = TxnLog.MergeClause(None, isDelete = false,
+    Seq("v" -> col("__s.v")))
+  private val insertKV = TxnLog.MergeClause(None, isDelete = false,
+    Seq("k" -> col("__s.k"), "v" -> col("__s.v")))
+
+  test("general MERGE scans its touched files once and pins nothing after") {
+    val t = freshTable()
+    val n = 400
+    TxnLog.create(spark, t, spark.range(n).select(
+      col("id").cast("int").as("k"), (col("id") * 2).cast("int").as("v")))
+    val src = spark.createDataFrame(
+      (0 until 50).map(k => (k, -k)) ++ (1000 until 1010).map(k => (k, k)))
+      .toDF("k", "v")
+    val sc = spark.sparkContext
+    val pinnedBefore = sc.getPersistentRDDs.keySet
+    // rows read by stages that scan files: a stage reading stored blocks
+    // counts those rows as input too, so it is left out
+    val scanned = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          scanned.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(l)
+    try TxnLog.merge(spark, t, src, keys = Seq("k"),
+      matched = Seq(setV), notMatched = Seq(insertKV))
+    finally {
+      org.apache.spark.ListenerDrain(sc)
+      sc.removeSparkListener(l)
+    }
+    assert(scanned.get == n,
+      s"merge scanned ${scanned.get} rows of a $n-row target")
+    assert((sc.getPersistentRDDs.keySet -- pinnedBefore).isEmpty,
+      "merge left a persisted RDD behind")
+    assert(TxnLog.snapshot(spark, t).count() == n + 10)
+    val cdf = TxnLog.changesBetween(spark, t, 1L, 2L)
+      .groupBy("_change_type").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(cdf == Map("update_preimage" -> 50L, "update_postimage" -> 50L,
+      "insert" -> 10L))
+  }
+
+  test("a refused duplicate-key MERGE leaves no version, file or pin") {
+    val t = freshTable()
+    TxnLog.create(spark, t, spark.range(100).select(
+      col("id").cast("int").as("k"), lit(0).as("v")))
+    val files = filesUnder(t)
+    val sc = spark.sparkContext
+    val pinnedBefore = sc.getPersistentRDDs.keySet
+    val dup = spark.createDataFrame(Seq((1, 5), (1, 6), (500, 7)))
+      .toDF("k", "v")
+    // uncoalesced shuffle partitions: the tasks that hold no duplicate
+    // can commit their files before the job fails
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    val e = try intercept[Exception](TxnLog.merge(spark, t, dup,
+      keys = Seq("k"), matched = Seq(setV), notMatched = Seq(insertKV)))
+    finally spark.conf.unset(coalesce)
+    val msgs = Iterator.iterate(e: Throwable)(_.getCause)
+      .takeWhile(_ != null).map(x => String.valueOf(x.getMessage))
+      .mkString(" | ")
+    assert(msgs.contains("multiple source rows"), msgs)
+    assert(TxnLog.versions(t) == Seq(1L))
+    assert(filesUnder(t) == files, "a refused merge left staged files")
+    assert((sc.getPersistentRDDs.keySet -- pinnedBefore).isEmpty,
+      "a refused merge left a persisted RDD behind")
+  }
+
   test("general MERGE prunes files on the merge keys") {
     val t = freshTable()
     TxnLog.create(spark, t,

@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** The listener bus is package-private; tests wait on it so every event
+  * of a finished job has reached their listeners before they read them. */
+object ListenerDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
