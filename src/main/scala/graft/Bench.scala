@@ -1,20 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+
-        graft.plans.NanosPredicatePushdown :+ graft.plans.EagerMinMaxAggregation
+    val spark = Session.local()
     // Untimed warmup: pay the one-time session costs (Hadoop FS init,
     // Janino/JIT compiler warmup, broadcast/shuffle thread pools, parquet
     // footer cache) before the first measured query — they belong to the
@@ -45,12 +33,14 @@ object Bench {
     // the committed-baseline-facing BENCH_FULL.json.
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    def shortKeyOf(name: String): String = {
+    // per-query keys are the qNN prefix, the unambiguous short form of
+    // the SparkEntry.queries names
+    def shortKey(name: String): String = {
       val cut = name.indexOf('_')
       if (cut > 0) name.substring(0, cut) else name
     }
     val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.contains(shortKeyOf(name))) }
+      only.forall(_.contains(shortKey(name))) }
     selected.valuesIterator.foreach { fn =>
       try fn(spark, warmDir).count() catch { case _: Throwable => () }
     }
@@ -64,15 +54,18 @@ object Bench {
     // were aliasing the harness change. SPARK_GRAFT_ONE_SHOT_CUTOFF=<sec>
     // restores the skip (one-shot timing for queries at/above the cutoff)
     // when bench wall-clock matters more than variance. A query that
-    // throws gets its elapsed time but contributes no rows — the driver's
-    // rows>0 checks catch that separately.
+    // throws in any timed pass is named in "failed"; its elapsed time
+    // stays in the map and the total.
     // returns (elapsed, succeeded): a failed pass must never win the min —
     // a query that works on pass 1 but throws quickly on pass 2 (the
     // streaming queries re-stage temp files per invocation) would
     // otherwise report the failure's fast elapsed as its timing.
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
+    val failed = scala.collection.mutable.SortedSet.empty[String]
+    def timeOnce(name: String): (Double, Boolean) = {
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val ok = try { selected(name)(spark, sfDir).count(); true }
+        catch { case _: Throwable => false }
+      if (!ok) failed += shortKey(name)
       ((System.nanoTime() - t0) / 1e9, ok)
     }
     val oneShotCutoff = sys.env.get("SPARK_GRAFT_ONE_SHOT_CUTOFF")
@@ -83,10 +76,10 @@ object Bench {
             s"[bench] ignoring unparseable SPARK_GRAFT_ONE_SHOT_CUTOFF='$s'")
         parsed
       }.getOrElse(Double.MaxValue)
-    val firstPass = selected.map { case (name, fn) =>
-      val (first, ok1) = timeOnce(fn)
+    val firstPass = selected.map { case (name, _) =>
+      val (first, ok1) = timeOnce(name)
       val best = if (!ok1 || first >= oneShotCutoff) first else {
-        val (second, ok2) = timeOnce(fn)
+        val (second, ok2) = timeOnce(name)
         if (ok2) math.min(first, second) else first
       }
       name -> best
@@ -106,19 +99,14 @@ object Bench {
     val results = firstPass.map { case (name, best) =>
       if (best < retryThreshold) name -> best
       else {
-        val (again, ok) = timeOnce(selected(name))
+        val (again, ok) = timeOnce(name)
         name -> (if (ok) math.min(best, again) else best)
       }
     }
     // Keep the JSON line SHORT: the harness retains only the last ~2000
-    // chars of process output, so per-query keys are the qNN prefix (the
-    // unambiguous short form of the SparkEntry.queries names) and timings
-    // are rounded to ms — full-precision full-name output would outgrow
-    // the window and the line would never parse.
-    def shortKey(name: String): String = {
-      val cut = name.indexOf('_')
-      if (cut > 0) name.substring(0, cut) else name
-    }
+    // chars of process output, so per-query keys are short keys and
+    // timings are rounded to ms — full-precision full-name output would
+    // outgrow the window and the line would never parse.
     // two queries sharing a qNN prefix would emit duplicate JSON keys and
     // one timing would be silently dropped by any parser — fail instead
     require(results.keys.map(shortKey).toSet.size == results.size,
@@ -136,8 +124,9 @@ object Bench {
     // SLOWEST queries as fit — exactly the compute-bound tail per-query
     // grading reads; everything trimmed is sub-second scheduler-floor
     // noise, present in full in the file.
+    val failedJ = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":$totalR,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$totalR,"unit":"sec","queries":$qs,"failed":$failedJ,"sf":"$sfDir"}"""
     // BENCH_FULL.json is the committed GATE artifact — refreshed only
     // from verified-quiet windows. A plain measurement run (a judge's
     // paired window, an ad-hoc probe) must not clobber it, so the
@@ -155,10 +144,12 @@ object Bench {
     var len = 0
     results.toSeq.sortBy(-_._2).foreach { case (k, v) =>
       val e = "\"" + shortKey(k) + "\":" + (math.rint(v * 1000) / 1000)
-      if (len + e.length + 1 <= 1500) { kept += e; len += e.length + 1 }
+      if (len + e.length + 1 <= 1500 - failedJ.length) {
+        kept += e; len += e.length + 1
+      }
     }
     val qsTop = kept.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$totalR,"unit":"sec","queries":$qsTop,"n_queries":${results.size},"queries_full":"$outName","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$totalR,"unit":"sec","queries":$qsTop,"failed":$failedJ,"n_queries":${results.size},"queries_full":"$outName","sf":"$sfDir"}""")
     spark.stop()
   }
 }

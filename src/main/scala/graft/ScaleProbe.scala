@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Corpus
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling probe (dev tool, not driver contract): replicate the sf0.1
@@ -16,22 +16,16 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    // honor SPARK_GRAFT_CPUS like Bench does, so the probe can produce
-    // 8c-vs-32c datapoints at 10x/100x data (the core-scaling evidence
-    // the sf0.1 bench cannot show); optional args select sections
-    // ("docs", "events", "graph", "ml", "txn") to keep a paired run
-    // affordable
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // the core count is graft.Session's (SPARK_GRAFT_CPUS), so the probe
+    // can produce per-core-count datapoints at 10x/100x data (the
+    // core-scaling evidence the sf0.1 bench cannot show); optional args
+    // select sections ("docs", "events", "graph", "ml", "txn") to keep a
+    // paired run affordable
     val sections: Set[String] =
       if (args.isEmpty) Set("docs", "events", "graph", "ml", "txn")
       else args.map(_.trim.toLowerCase).toSet
     def on(s: String): Boolean = sections.contains(s)
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val base = Tables.load(spark, "/root/testdata/sf0.1", "documents")
 
     // reuse requires the _SUCCESS marker, not bare directory existence —

@@ -2081,12 +2081,7 @@ object SparkEntry {
     // MIN/MAX where it is unconditionally sound) pushes the aggregate
     // BELOW the join, so the join input shrinks from |lineitem| to
     // |orderkeys| rows; PlanRuleSpec pins the rewrite + equivalence ─────
-    "q188_eager_agg" -> ((s, dir) => {
-      if (!s.experimental.extraOptimizations
-          .contains(graft.plans.EagerMinMaxAggregation))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+
-            graft.plans.EagerMinMaxAggregation
+    "q188_eager_agg" -> ((s, dir) =>
       T(s, dir, "lineitem")
         .join(T(s, dir, "orders")
           .filter(col("o_orderpriority") === "1-URGENT").select("o_orderkey"),
@@ -2094,8 +2089,7 @@ object SparkEntry {
         .groupBy("l_orderkey")
         .agg(min("l_extendedprice").as("min_price"),
           max("l_shipdate").as("max_ship"))
-        .orderBy("l_orderkey")
-    }),
+        .orderBy("l_orderkey")),
 
     // ── [ext] diversity-constrained top-k: best 20 documents by quality
     // with AT MOST 3 per source (the curation/recommendation diversity

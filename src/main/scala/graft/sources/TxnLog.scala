@@ -3298,10 +3298,15 @@ object TxnLog {
         removes = touchedFiles, staged = named,
         cdc = stageCdc(spark, table, cdc), layout = Some(evolved),
         idCols = idFieldsM.map(_.name).toSeq))
-    } finally pinned.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
-    }
+    } finally unpin(pinned)
   }
+
+  /** Release a `localCheckpoint` pin: its stored blocks go now, not when
+    * the ContextCleaner happens to collect the RDD. */
+  private def unpin(pinned: DataFrame): Unit =
+    pinned.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+    }: Unit
 
   /** DYNAMIC PARTITION OVERWRITE (Spark's INSERT OVERWRITE dynamic
     * mode / Delta `replaceWhere` on partition values): replace EXACTLY
@@ -3907,39 +3912,41 @@ object TxnLog {
         dvOf(spark, table, st), keepDvPos = true)
     val victims = raw.filter(coalesce(cond, lit(false)))
       .localCheckpoint(true)
-    val perFile = victims.groupBy("__dv_f")
-      .agg(count(lit(1)).as("n"))
-      .collect() // ≤ |live files| rows
-      .map(r => r.getString(0) -> r.getLong(1))
-    if (perFile.isEmpty) return commit(spark, table, Plan(op, base, st))
-    val dvNamed = stage(spark, table,
-      victims.select(col("__dv_f"), col("__dv_r")),
-      subdir = Some("_deletion_vectors"))
-    // leaf name → committed relative path (partitioned files live in
-    // col=val dirs; the DV keys use the leaf, counts key the log path)
-    val byLeaf = st.live.map(f => f.split('/').last -> f).toMap
-    val dataCols = declared.map(_.fieldNames.toSeq)
-      .getOrElse(raw.columns.toSeq.filterNot(c =>
-        c.startsWith("__dv_") || c == RidCol || c == "_row_id"))
-    val pre = victims.select(dataCols.map(col): _*)
-    val (named, cdc) = set match {
-      case None => (Nil, pre.withColumn("_change_type", lit("delete")))
-      case Some(s) =>
-        // the touch-up rows carry the victims' stable ids (RidCol) on a
-        // tracking table; the CDF pre/postimage pairs stay at table
-        // schema (no rid column)
-        val post = assign(victims,
-          dataCols ++ (if (tracking) Seq(RidCol) else Nil), s, declared)
-        (stageChecked(spark, table, post, st.checks, pcols, declared),
-          pre.withColumn("_change_type", lit("update_preimage"))
-            .unionByName((if (tracking) post.drop(RidCol) else post)
-              .withColumn("_change_type", lit("update_postimage"))))
-    }
-    commit(spark, table, Plan(op, base, st,
-      meta = dvNamed.map("dv\t" + _) ++
-        perFile.toSeq.sortBy(_._1).map { case (leaf, n) =>
-          s"dvcount\t${byLeaf(leaf)}\t$n" },
-      staged = named, cdc = stageCdc(spark, table, cdc), layout = declared))
+    try {
+      val perFile = victims.groupBy("__dv_f")
+        .agg(count(lit(1)).as("n"))
+        .collect() // ≤ |live files| rows
+        .map(r => r.getString(0) -> r.getLong(1))
+      if (perFile.isEmpty) return commit(spark, table, Plan(op, base, st))
+      val dvNamed = stage(spark, table,
+        victims.select(col("__dv_f"), col("__dv_r")),
+        subdir = Some("_deletion_vectors"))
+      // leaf name → committed relative path (partitioned files live in
+      // col=val dirs; the DV keys use the leaf, counts key the log path)
+      val byLeaf = st.live.map(f => f.split('/').last -> f).toMap
+      val dataCols = declared.map(_.fieldNames.toSeq)
+        .getOrElse(raw.columns.toSeq.filterNot(c =>
+          c.startsWith("__dv_") || c == RidCol || c == "_row_id"))
+      val pre = victims.select(dataCols.map(col): _*)
+      val (named, cdc) = set match {
+        case None => (Nil, pre.withColumn("_change_type", lit("delete")))
+        case Some(s) =>
+          // the touch-up rows carry the victims' stable ids (RidCol) on a
+          // tracking table; the CDF pre/postimage pairs stay at table
+          // schema (no rid column)
+          val post = assign(victims,
+            dataCols ++ (if (tracking) Seq(RidCol) else Nil), s, declared)
+          (stageChecked(spark, table, post, st.checks, pcols, declared),
+            pre.withColumn("_change_type", lit("update_preimage"))
+              .unionByName((if (tracking) post.drop(RidCol) else post)
+                .withColumn("_change_type", lit("update_postimage"))))
+      }
+      commit(spark, table, Plan(op, base, st,
+        meta = dvNamed.map("dv\t" + _) ++
+          perFile.toSeq.sortBy(_._1).map { case (leaf, n) =>
+            s"dvcount\t${byLeaf(leaf)}\t$n" },
+        staged = named, cdc = stageCdc(spark, table, cdc), layout = declared))
+    } finally unpin(victims)
   }
 
   /** Row-level change feed (Delta CDF): every change committed in

@@ -59,7 +59,13 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q188 eager aggregation: the partial aggregate feeds the join") {
+    val extra = spark.experimental.extraOptimizations
     val plan = planOf("q188_eager_agg")
+    SparkEntry.queries("q188_eager_agg")(spark, sf0001).count()
+    // the rule comes from the session's extensions; the query must not
+    // change the optimizer every later query on the session runs
+    assert(spark.experimental.extraOptimizations == extra,
+      "q188 changed the session's extra optimizer rules")
     // physical shape: a HashAggregate pair (partial+final over orderkey)
     // BELOW the join — the join's left input carries one row per key
     val joinIdx = plan.indexOf("Join")

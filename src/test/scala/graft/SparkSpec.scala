@@ -4,17 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session — Spark
-  * startup dominates test wall-clock otherwise). */
+  * startup dominates test wall-clock otherwise). Four cores whatever
+  * `SPARK_GRAFT_CPUS` says, so plan-shape assertions see one layout. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  spark // initialize eagerly? no — lazy; suites touch .spark
+  lazy val spark: SparkSession = Session.local(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

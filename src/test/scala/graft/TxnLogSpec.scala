@@ -2809,6 +2809,30 @@ class TxnLogSpec extends SparkSpec {
       "a refused merge left a persisted RDD behind")
   }
 
+  test("DV delete and update release their victim pin on every path") {
+    val t = freshTable()
+    TxnLog.create(spark, t, spark.range(100).select(
+      col("id").cast("int").as("k"), lit(0).as("v")))
+    TxnLog.addCheck(spark, t, "v_small", "v < 10")
+    val sc = spark.sparkContext
+    def pinsLeftBy(body: => Any) = {
+      val before = sc.getPersistentRDDs.keySet
+      body
+      sc.getPersistentRDDs.keySet -- before
+    }
+    assert(pinsLeftBy(TxnLog.deleteWhereDV(spark, t, col("k") < 10)).isEmpty,
+      "a matching DV delete left a persisted RDD behind")
+    assert(pinsLeftBy(TxnLog.deleteWhereDV(spark, t, col("k") > 1000)).isEmpty,
+      "a DV delete that matched nothing left a persisted RDD behind")
+    assert(pinsLeftBy(TxnLog.updateWhereDV(spark, t, col("k") === 50,
+      Seq("v" -> lit(5)))).isEmpty, "a DV update left a persisted RDD behind")
+    val refused = pinsLeftBy(intercept[Exception](TxnLog.updateWhereDV(
+      spark, t, col("k") === 60, Seq("v" -> lit(99)))))
+    assert(refused.isEmpty, "a refused DV update left a persisted RDD behind")
+    assert(TxnLog.snapshot(spark, t).count() == 90)
+    assert(TxnLog.snapshot(spark, t).filter(col("v") === 5).count() == 1)
+  }
+
   test("general MERGE prunes files on the merge keys") {
     val t = freshTable()
     TxnLog.create(spark, t,
