@@ -1,5 +1,12 @@
 package graft
 object Bench {
+  /** Per-query keys are the qNN prefix, the unambiguous short form of
+    * the SparkEntry.queries names (Bench's and Verify's failure lists). */
+  private[graft] def shortKey(name: String): String = {
+    val cut = name.indexOf('_')
+    if (cut > 0) name.substring(0, cut) else name
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local()
@@ -33,12 +40,6 @@ object Bench {
     // the committed-baseline-facing BENCH_FULL.json.
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    // per-query keys are the qNN prefix, the unambiguous short form of
-    // the SparkEntry.queries names
-    def shortKey(name: String): String = {
-      val cut = name.indexOf('_')
-      if (cut > 0) name.substring(0, cut) else name
-    }
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.contains(shortKey(name))) }
     selected.valuesIterator.foreach { fn =>

@@ -5513,17 +5513,23 @@ object SparkEntry {
       val before = graft.sources.TxnLog.files(tbl)
       s.sql("CREATE OR REPLACE TEMPORARY VIEW q321_txn_v " +
         s"USING txnlog OPTIONS (path '$tbl')")
-      // keys < 1000 re-extracted NEWER (date+30, price doubled);
-      // [1000, 2000) re-extracted STALE (date-30, price tripled — the
-      // guard must skip them); keys+20M brand new (inserts)
-      o.filter(col("o_orderkey") < 1000)
+      // key bands are fractions of the largest key, so the batch hits
+      // the first of the 8 range files at every scale factor (and keeps
+      // its distinct keys under the bloom probe cap at sf0.1): the
+      // lowest 1% of keys re-extracted NEWER (date+30, price doubled);
+      // the next 1% re-extracted STALE (date-30, price tripled — the
+      // guard must skip them); the lowest 1/300 copied to keys+20M,
+      // brand new (inserts). Multiplications, not divisions, so the
+      // oracle's integer arithmetic cannot round differently.
+      val maxKey = o.agg(max(col("o_orderkey"))).head.getLong(0)
+      val k = col("o_orderkey")
+      o.filter(k * 100 < maxKey)
         .withColumn("o_orderdate", date_add(col("o_orderdate"), 30))
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-        .unionByName(o.filter(col("o_orderkey") >= 1000 &&
-            col("o_orderkey") < 2000)
+        .unionByName(o.filter(k * 100 >= maxKey && k * 50 < maxKey)
           .withColumn("o_orderdate", date_sub(col("o_orderdate"), 30))
           .withColumn("o_totalprice", col("o_totalprice") * 3))
-        .unionByName(o.filter(col("o_orderkey") < 300)
+        .unionByName(o.filter(k * 300 < maxKey)
           .withColumn("o_orderkey", col("o_orderkey") + 20000000L)
           .withColumn("o_totalprice",
             col("o_totalprice") + 1000000.0))
@@ -11715,17 +11721,19 @@ object SparkEntry {
           |ORDER BY n_nationkey""".stripMargin,
 
       // q321: the recency guard applies ONLY the newer re-extract
-      // (keys < 1000 doubled); the stale [1000, 2000) batch is skipped
-      // entirely, and the +20M copies of keys < 300 arrive as inserts
+      // (the lowest 1% of keys doubled); the stale next 1% is skipped
+      // entirely, and the +20M copies of the lowest 1/300 arrive as
+      // inserts
       "q321_txn_sql_merge_recency" ->
-        """WITH st AS (
+        """WITH mk AS (SELECT max(o_orderkey) AS m FROM orders),
+          |st AS (
           |  SELECT o_orderstatus,
-          |    CASE WHEN o_orderkey < 1000 THEN o_totalprice * 2
+          |    CASE WHEN o_orderkey * 100 < mk.m THEN o_totalprice * 2
           |      ELSE o_totalprice END AS p
-          |  FROM orders
+          |  FROM orders, mk
           |  UNION ALL
           |  SELECT o_orderstatus, o_totalprice + 1000000
-          |  FROM orders WHERE o_orderkey < 300)
+          |  FROM orders, mk WHERE o_orderkey * 300 < mk.m)
           |SELECT o_orderstatus, count(*) AS n_orders,
           |  CAST(sum(CAST(p AS DECIMAL(18,2))) AS DOUBLE)
           |    AS total_price

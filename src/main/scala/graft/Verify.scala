@@ -16,13 +16,17 @@ object Verify {
         keys.exists(k => n == k || n.startsWith(k + "_")) }
       case None => SparkEntry.queries
     }
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += Bench.shortKey(name)
       }
     }
+    // one summary line, "[]" when nothing threw (Bench's "failed" list)
+    System.err.println(s"[verify] failed: ${failed.mkString("[", ",", "]")}")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.sources.{TxnLog, TxnLogHadoopFsRelation,
-  TxnLogParquetFileFormat, TxnLogScanRelation}
+  TxnLogParquetFileFormat}
 import org.apache.spark.sql.{AnalysisException, GraftShim, Row,
   SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
@@ -42,7 +42,6 @@ object TxnLogSqlSurface {
     plan.collectFirst {
       case lr: LogicalRelation => lr.relation match {
         case r: TxnLogHadoopFsRelation => Some(r.tableDir)
-        case r: TxnLogScanRelation => Some(r.tableDir)
         case _ => None
       }
     }.flatten

@@ -7,7 +7,7 @@ import java.util.UUID
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.parquet.hadoop.Footer
-import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{BooleanType, DataType, DateType, LongType,
   NumericType, StringType, StructField, StructType, TimestampType}
@@ -904,109 +904,56 @@ object TxnLog {
 
   // ─── readers ───────────────────────────────────────────────────────
 
-  /** Read a set of committed relative paths as one parquet scan.
-    * Partitioned paths get `basePath` so Spark re-derives the partition
-    * columns from the hive-style directories; a declared schema is
-    * applied when present (parquet matches by NAME, so files written
-    * before a schema evolution surface the new column as null — and a
-    * time-traveled read uses the OLD declared schema). */
-  private[sources] def readFiles(spark: SparkSession, table: String,
-                        relPaths: Seq[String],
-                        schema: Option[StructType],
-                        dv: Option[DataFrame] = None,
-                        keepDvPos: Boolean = false,
-                        withRid: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{col, element_at, split}
-    val t = tablePath(table)
-    val base = fsOf(t).makeQualified(t)
-    // committed paths are table-relative for files the table wrote
-    // itself and ABSOLUTE for files a shallow clone references in its
-    // source table; Hadoop's Path(parent, child) resolves an absolute
-    // child to itself, so one join covers both
-    val paths = relPaths.map(f => new HPath(base, f).toString)
-    // DELETION VECTORS (merge-on-read): subtract journaled (leaf file,
-    // row index) pairs with one anti join keyed on the scan's own
-    // _metadata columns — deleted rows vanish logically with ZERO data
-    // files rewritten. The join is skipped entirely (None) on tables
-    // without live DVs, and the DV side is sized ∝ deleted rows, so
-    // AQE broadcasts it in the common small-delete case. `keepDvPos`
-    // keeps the position columns for a caller that needs them (the DV
-    // delete's victim scan) — _metadata resolves only on the scan
-    // itself, so positions must be captured in this pass.
-    val needPos = dv.isDefined || keepDvPos || withRid
-    // hive-partitioned paths need a `basePath` so Spark re-derives the
-    // partition columns — and a post-clone table can mix bases (its own
-    // dir plus the clone source's), so scan one group per base and
-    // union (same declared schema, no shuffle). The base pops EXACTLY
-    // the committed path's own segments (leaf + its partition dirs) —
-    // never arbitrary '='-containing ANCESTORS, so a table whose own
-    // directory (or an ancestor) contains '=' cannot grow phantom
-    // partition columns. Clone-referenced absolute paths carry only
-    // their partition '='-segments (shallowClone forbids '=' in source
-    // dirs), so the count is exact for both spellings.
-    def baseOfPath(committed: String, q: String): String = {
-      val pop = 1 +
-        committed.split('/').dropRight(1).count(_.contains('='))
-      q.split('/').dropRight(pop).mkString("/")
-    }
-    def scanGroup(gBase: String, gPaths: Seq[String]): DataFrame = {
-      val r0: DataFrameReader = spark.read
-      val r1 = if (gPaths.exists(_.substring(gBase.length).contains('=')))
-        r0.option("basePath", gBase) else r0
-      // the scan reads the files' PHYSICAL column names; the final
-      // select below renames them to declared names (column mapping).
-      // `withRid` extends the READ schema (never the declared one) with
-      // the nullable materialized row-id column: files that carry it (a
-      // compaction's output on a row-tracking table) surface it, files
-      // that don't read null — exactly the per-file fill semantics the
-      // row-id reader's base+position fallback needs.
-      val r2 = schema.fold(r1)(s => r1.schema {
-        val ps = physSchema(s)
-        if (withRid && !ps.fieldNames.contains(RidCol))
-          ps.add(StructField(RidCol, LongType, nullable = true))
-        else ps
-      })
-      val g0 = r2.parquet(gPaths: _*)
-      if (!needPos) g0
-      else g0.withColumn("__dv_f",
-          element_at(split(col("_metadata.file_path"), "/"), -1))
-        .withColumn("__dv_r", col("_metadata.row_index"))
-    }
-    val groups = relPaths.zip(paths)
-      .groupBy { case (f, q) => baseOfPath(f, q) }
-      .toSeq.sortBy(_._1)
-      .map { case (b, fq) => (b, fq.map(_._2)) }
-    val withPos = groups.map { case (b, ps) => scanGroup(b, ps) }
-      .reduce(_ unionByName _)
-    val joined = dv.fold(withPos)(dvDf =>
-      withPos.join(dvDf, Seq("__dv_f", "__dv_r"), "left_anti"))
-    val df = if (needPos && !keepDvPos) joined.drop("__dv_f", "__dv_r")
-      else joined
-    // pin the declared column order (partition discovery appends
-    // partition columns at the end regardless of schema order) and
-    // rename physical → logical where mapping is active
-    schema.fold(df)(s => df.select(
-      (s.fields.toSeq.map(f => col(physName(f)).as(f.name)) ++
-        (if (keepDvPos) Seq(col("__dv_f"), col("__dv_r")) else Nil) ++
-        (if (withRid) Seq(col(RidCol)) else Nil)): _*))
+  /** THE table read: one [[TxnLogHadoopFsRelation]] over a
+    * [[TxnLogFileIndex]] pinned to state `st` — the same relation
+    * `format("txnlog")` and SQL plan, so every read gets the vectorized
+    * `FileSourceScanExec`: log-decided file pruning, the declared
+    * schema (parquet matches by NAME, so files written before a schema
+    * evolution surface the new column as null, and a time-traveled read
+    * uses the OLD declared schema), column mapping at reader
+    * construction and DELETION VECTORS subtracted inside the reader.
+    * `files` restricts the scan to an explicit list (a writer's touched
+    * files, staged files, a snapshotWhere survivor set); over zero files
+    * it is the empty relation. `withRid` adds the nullable materialized
+    * row-id column [[RidCol]] to the READ schema (never the declared
+    * one): files that carry it surface it, files that don't read null. */
+  private[sources] def scan(spark: SparkSession, table: String, st: State,
+                            files: Option[Seq[String]] = None,
+                            withRid: Boolean = false): DataFrame = {
+    val index = new TxnLogFileIndex(spark, table, st, files = files,
+      withRid = withRid)
+    spark.baseRelationToDataFrame(
+      new TxnLogHadoopFsRelation(index, table, spark))
   }
 
-  /** The live-DV relation of a snapshot state: (leaf data-file name,
-    * row index) pairs, None when the state has no deletion vectors —
-    * the zero-cost common case every [[readFiles]] call threads
-    * through. */
-  private[sources] def dvOf(spark: SparkSession, table: String,
-                   st: State): Option[DataFrame] =
-    if (st.dvFiles.isEmpty) None
-    else Some(readFiles(spark, table, st.dvFiles, None))
+  /** Each row's physical position on a [[scan]]: `__dv_f` (leaf file
+    * name) and `__dv_r` (row index in the FILE) from the scan's own
+    * `_metadata`. The index is the parquet position before deletion
+    * vectors are subtracted, so a surviving row keeps its index after
+    * any number of DV deletes on its file. */
+  private def withPos(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, element_at, split}
+    df.withColumn("__dv_f",
+        element_at(split(col("_metadata.file_path"), "/"), -1))
+      .withColumn("__dv_r", col("_metadata.row_index"))
+  }
+
+  /** Side files (`_deletion_vectors/`, `_change_data/`) are not table
+    * reads: a plain parquet read of their committed relative paths. */
+  private def readSide(spark: SparkSession, table: String,
+                       relPaths: Seq[String]): DataFrame = {
+    val t = tablePath(table)
+    val base = fsOf(t).makeQualified(t)
+    spark.read.parquet(relPaths.map(f => new HPath(base, f).toString): _*)
+  }
 
   /** Per-file deleted-row skip sets (leaf data-file name → SORTED row
     * indexes), decoded from the journaled DV parquet under
     * `_deletion_vectors/`, memoized by the DV file list: DV files are
     * immutable once committed, so a given combination decodes once per
     * session no matter how many scans plan against it. This is the
-    * driver-side half of the VECTORIZED merge-on-read path — the sets
-    * ride to executors inside each file's [[org.apache.spark.sql
+    * driver-side half of merge-on-read — the sets ride to executors
+    * inside each file's [[org.apache.spark.sql
     * .execution.datasources.FileStatusWithMetadata]] (so a task carries
     * only ITS files' deletions, no global broadcast), and
     * [[TxnLogParquetFileFormat]] subtracts them against the parquet
@@ -1021,7 +968,7 @@ object TxnLog {
     var m = dvCache.get(key)
     if (m == null) {
       import org.apache.spark.sql.functions.{col, collect_list, sort_array}
-      m = readFiles(spark, table, dvFiles, None)
+      m = readSide(spark, table, dvFiles)
         .groupBy(col("__dv_f"))
         .agg(sort_array(collect_list(col("__dv_r"))).as("rs"))
         .collect() // ≤ |files with deletions| rows
@@ -1038,40 +985,33 @@ object TxnLog {
   private val dvCache = new java.util.concurrent.ConcurrentHashMap[
     (String, String), Map[String, Array[Long]]]()
 
-  /** Snapshot read, optionally time-traveled to an older version. */
+  /** Snapshot read, optionally time-traveled to an older version —
+    * pinned to the version resolved NOW: a later commit never changes
+    * what this DataFrame reads. A DDL-first table before its first load
+    * (or a fully deleted one) is the empty relation with the DECLARED
+    * schema, the same thing Delta serves. */
   def snapshot(spark: SparkSession, table: String,
-               asOf: Option[Long] = None): DataFrame = {
-    val st = stateAt(table, asOf)
-    val declared = st.declared
-    if (st.live.isEmpty)
-      // a DDL-first table before its first load (or a table whose
-      // contents were fully deleted): an empty relation with the
-      // DECLARED schema, the same thing Delta serves
-      return emptyDf(spark, declared.getOrElse(sys.error(
-        s"empty snapshot of $table with no declared schema")))
-    readFiles(spark, table, st.live, declared, dvOf(spark, table, st))
-  }
+               asOf: Option[Long] = None): DataFrame =
+    scan(spark, table, stateAt(table, asOf))
 
-  /** Declared-columns-plus-[[RidCol]] read of `files` in state `st`:
-    * each row's stable id attached as the physical [[RidCol]] column —
-    * the materialized value when the file carries one (a rewrite's
-    * output), else the file's committed `rowbase` + the parquet row
-    * index. ONE broadcast join against the ≤|files|-row base map; the
-    * scan itself resolves positions, so DV-surviving rows keep their
-    * ORIGINAL indexes (a deletion never renumbers its neighbours). */
-  private def readFilesWithRid(spark: SparkSession, table: String,
-                               files: Seq[String],
-                               declared: Option[StructType],
-                               st: State,
-                               keepPos: Boolean = false): DataFrame = {
+  /** [[scan]] of `files` in state `st` with each row's stable id
+    * attached as the physical [[RidCol]] column — the materialized value
+    * when the file carries one (a rewrite's output), else the file's
+    * committed `rowbase` + the parquet row index. ONE broadcast join
+    * against the ≤|files|-row base map; the scan itself resolves
+    * positions, so DV-surviving rows keep their ORIGINAL indexes (a
+    * deletion never renumbers its neighbours). `keepPos` keeps the
+    * position columns for the DV writers. */
+  private def scanWithRid(spark: SparkSession, table: String,
+                          files: Seq[String], st: State,
+                          keepPos: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col}
     import scala.jdk.CollectionConverters._
     val missing = files.filterNot(st.rowBases.contains)
     require(missing.isEmpty,
       s"row-tracking invariant broken on $table: live file(s) without " +
         s"a committed rowbase (first: ${missing.headOption.getOrElse("")})")
-    val raw = readFiles(spark, table, files, declared,
-      dvOf(spark, table, st), keepDvPos = true, withRid = true)
+    val raw = withPos(scan(spark, table, st, Some(files), withRid = true))
     // base map keys by LEAF name (the scan's __dv_f); leaves are
     // part-<uuid>.parquet, unique across partition directories
     val bases = spark.createDataFrame(
@@ -1108,22 +1048,9 @@ object TxnLog {
     require(rowTrackingOn(st),
       s"row tracking is not enabled on $table — ALTER TABLE … SET " +
         s"TBLPROPERTIES ('$RowTrackKey'='true') first")
-    val declared = st.declared
-    if (st.live.isEmpty)
-      return emptyDf(spark, StructType(
-        declared.getOrElse(sys.error(
-          s"empty snapshot of $table with no declared schema")).fields :+
-          StructField("_row_id", LongType, nullable = true)))
-    readFilesWithRid(spark, table, st.live, declared, st)
+    scanWithRid(spark, table, st.live, st)
       .withColumnRenamed(RidCol, "_row_id")
   }
-
-  /** Zero-row DataFrame with exactly `schema` (nullable-normalized —
-    * the shape every file-backed read of this table would surface). */
-  private[sources] def emptyDf(spark: SparkSession,
-                               schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(schema.fields.map(_.copy(nullable = true))))
 
   /** Data-skipping snapshot read: only files whose committed
     * [min, max] stats for `statsCol` intersect [lo, hi] (canonical-long
@@ -1147,7 +1074,8 @@ object TxnLog {
     * AND-of-range predicates against per-file stats; this is that,
     * minus expression parsing). Same superset contract: a file without
     * stats for some column is unprunable on that column, and the
-    * caller's own residual filter remains the correctness boundary. */
+    * caller's own residual filter remains the correctness boundary.
+    * The result's `inputFiles` are exactly the surviving files. */
   def snapshotWhereAll(spark: SparkSession, table: String,
                        intervals: Seq[(String, Long, Long)],
                        asOf: Option[Long] = None): DataFrame = {
@@ -1155,24 +1083,8 @@ object TxnLog {
     // a typo'd time-travel version must FAIL, not silently replay the
     // floor state and return plausible wrong data
     val st = stateAt(table, asOf)
-    val schema = st.declared
-    val keep = st.live.filter { f =>
-      intervals.forall { case (c, lo, hi) =>
-        st.stats.get((f, c)) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true // no stats → unprunable, never wrongly skipped
-        }
-      }
-    }
-    if (st.live.isEmpty)
-      emptyDf(spark, schema.getOrElse(sys.error(
-        s"empty snapshot of $table with no declared schema")))
-    else if (keep.isEmpty)
-      // every file provably disjoint: an empty relation with the
-      // table's schema (scan one file, read no rows)
-      readFiles(spark, table, Seq(st.live.head), schema)
-        .where(org.apache.spark.sql.functions.lit(false))
-    else readFiles(spark, table, keep, schema, dvOf(spark, table, st))
+    scan(spark, table, st, Some(st.live.filter(f =>
+      TxnLogFileIndex.survives(st, f, intervals, Nil))))
   }
 
   // ─── per-file bloom skipping ───────────────────────────────────────
@@ -1244,24 +1156,7 @@ object TxnLog {
     * catalyst XxHash64 the build side's `xxhash64(lit(i), col)` uses —
     * one expression, two call sites, so build and probe can never
     * drift. Values canonicalize through their Spark string cast
-    * (integral/string columns — the point-lookup types). */
-  /** Canonical string rendering of a probe value — the SAME Catalyst
-    * Cast-to-string the build side's `col.cast(StringType)` evaluates,
-    * so build and probe renderings can never drift (String.valueOf
-    * differs from Spark's cast on Decimal scale, Date/Timestamp, and
-    * Float/Double formatting — a drift here is a bloom FALSE NEGATIVE,
-    * i.e. files wrongly skipped and rows silently missing). Timestamps
-    * still assume build and probe sessions share a timezone — the one
-    * rendering input the expression can't pin. */
-  private def canonicalProbe(spark: SparkSession, value: Any): String = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-    val l = Literal(value)
-    if (l.dataType == StringType) String.valueOf(value)
-    else Cast(l, StringType,
-      Some(spark.sessionState.conf.sessionLocalTimeZone))
-      .eval(null).toString
-  }
-
+    * ([[TxnLogFileIndex.probeString]]). */
   private[sources] def bloomPos(i: Int, probe: String, m: Int): Int = {
     val h = org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(
       org.apache.spark.sql.catalyst.expressions.Literal(i),
@@ -1269,6 +1164,17 @@ object TxnLog {
         org.apache.spark.unsafe.types.UTF8String.fromString(probe),
         StringType)), 42L).eval(null).asInstanceOf[Long]
     (((h % m) + m) % m).toInt
+  }
+
+  /** An EXTERNAL value (a Row field, a caller's literal) as the
+    * index's bloom probe and canonical long, through its Catalyst
+    * literal. */
+  private def probeOf(spark: SparkSession,
+                      value: Any): (String, Option[Long]) = {
+    val l = org.apache.spark.sql.catalyst.expressions.Literal(value)
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    (TxnLogFileIndex.probeString(l.dataType, l.value, tz),
+      TxnLogFileIndex.canonLong(l.dataType, l.value, tz))
   }
 
   /** Equality file skipping: scan only the files whose committed bloom
@@ -1282,28 +1188,10 @@ object TxnLog {
                       value: Any, asOf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val st = stateAt(table, asOf)
-    val schema = st.declared
-    if (st.live.isEmpty)
-      // DDL-first table before its first load / fully-deleted table:
-      // same empty-relation contract as snapshot/snapshotWhere
-      return emptyDf(spark, schema.getOrElse(sys.error(
-        s"empty snapshot of $table with no declared schema")))
-        .filter(col(colName) === lit(value))
-    val probe = canonicalProbe(spark, value)
-    val keep = st.live.filter { f =>
-      st.blooms.get((f, colName)) match {
-        case Some((m, k, bits)) => (1 to k).forall { i =>
-          val p = bloomPos(i, probe, m)
-          (bits(p >>> 6) & (1L << (p & 63))) != 0L
-        }
-        case None => true // no bloom → unprunable, never wrongly skipped
-      }
-    }
-    val base =
-      if (keep.isEmpty)
-        readFiles(spark, table, Seq(st.live.head), schema).where(lit(false))
-      else readFiles(spark, table, keep, schema, dvOf(spark, table, st))
-    base.filter(col(colName) === lit(value))
+    val eq = Seq((colName, probeOf(spark, value)._1))
+    scan(spark, table, st, Some(st.live.filter(f =>
+      TxnLogFileIndex.survives(st, f, Nil, eq))))
+      .filter(col(colName) === lit(value))
   }
 
   /** Per-file bloom lines for `bloomCols`: ONE job over the freshly
@@ -2749,7 +2637,7 @@ object TxnLog {
     // write time, not land as silent nulls — and a partitioned table's
     // batches stage through the hive layout like every other writer (a
     // root file would violate the uniform-partition-path invariant
-    // readFiles/partitionColsOf depend on). No mergeSchema path: an
+    // the scan and partitionColsOf depend on). No mergeSchema path: an
     // evolving commit is not valid against arbitrary snapshots, which is
     // exactly what this writer's blind publish retry assumes.
     val declared = st.declared
@@ -2888,52 +2776,21 @@ object TxnLog {
         val vals = updates.select(col(c)).where(col(c).isNotNull)
           .distinct().limit(MergeBloomProbeCap + 1).collect().map(_.get(0))
         if (vals.length > MergeBloomProbeCap) None
-        else Some(c -> vals.toSeq.map(v =>
-          (canonicalProbe(spark, v), canonLongOf(v))))
+        else Some(c -> vals.toSeq.map(probeOf(spark, _)))
       }.toMap
     st.live.filter { f =>
       val statsOk = intervals.forall { case (c, (lo, hi)) =>
-        st.stats.get((f, c)) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true // unprunable, never wrongly excluded
-        }
-      }
+        TxnLogFileIndex.statsOverlap(st, f, c, lo, hi) }
+      // a value the file's stats interval excludes need not ask the
+      // bloom (and cannot false-positive there)
       val bloomOk = probes.forall { case (c, vals) =>
-        st.blooms.get((f, c)) match {
-          case Some((m, k, bits)) =>
-            val iv = st.stats.get((f, c))
-            vals.exists { case (v, cl) =>
-              val inRange = (iv, cl) match {
-                // stats prove this value cannot be in this file: the
-                // bloom need not be asked (and cannot false-positive)
-                case (Some((mn, mx)), Some(x)) => x >= mn && x <= mx
-                case _ => true // unprovable either way: ask the bloom
-              }
-              inRange && (1 to k).forall { i =>
-                val p = bloomPos(i, v, m)
-                (bits(p >>> 6) & (1L << (p & 63))) != 0L
-              }
-            }
-          case None => true
+        !st.blooms.contains((f, c)) || vals.exists { case (v, cl) =>
+          cl.forall(x => TxnLogFileIndex.statsOverlap(st, f, c, x, x)) &&
+            TxnLogFileIndex.bloomMayContain(st, f, c, v)
         }
       }
       statsOk && bloomOk
     }
-  }
-
-  /** Driver-side canonical-long of a probe value — the SAME rendering
-    * [[canonicalCol]] records stats in (integrals as-is, dates as
-    * epoch days). None for types the stats writer does not
-    * canonicalize (the caller then probes the bloom unconditionally —
-    * superset-safe). */
-  private def canonLongOf(value: Any): Option[Long] = value match {
-    case n: java.lang.Byte => Some(n.longValue)
-    case n: java.lang.Short => Some(n.longValue)
-    case n: java.lang.Integer => Some(n.longValue)
-    case n: java.lang.Long => Some(n.longValue)
-    case d: java.sql.Date => Some(d.toLocalDate.toEpochDay)
-    case d: java.time.LocalDate => Some(d.toEpochDay)
-    case _ => None
   }
 
   /** Copy-on-write MERGE: last-writer-wins upsert of `updates` into the
@@ -3036,8 +2893,7 @@ object TxnLog {
       // no file can match (or all-new partitions): pure insert
       (u, u.withColumn("_change_type", lit("insert")))
     } else {
-      val baseDf = withNewCols(readFiles(spark, table, touchedFiles,
-        declared, dvOf(spark, table, st)))
+      val baseDf = withNewCols(scan(spark, table, st, Some(touchedFiles)))
       (graft.ops.Merge.upsert(baseDf, u, keys), upsertCdc(baseDf, u, keys))
     }
     val named = stageChecked(spark, table, merged, st.checks,
@@ -3162,8 +3018,7 @@ object TxnLog {
       .select(struct(source.columns.toSeq.map(col): _*).as("__s"),
         col("__scnt"))
     val joined = (if (touchedFiles.isEmpty) None
-      else Some(readFiles(spark, table, touchedFiles, declared,
-        dvOf(spark, table, st)))) match {
+      else Some(scan(spark, table, st, Some(touchedFiles)))) match {
       case Some(b) =>
         b.select(struct(b.columns.toSeq.map(col): _*).as("__t"))
           .join(srcS, keys.zip(sKeys).map { case (tk, sk) =>
@@ -3353,12 +3208,11 @@ object TxnLog {
     // journaled insert set is byte-exactly what the table now holds
     val oldRows =
       if (removes.isEmpty) None
-      else Some(readFiles(spark, table, removes, declared,
-        dvOf(spark, table, st))
+      else Some(scan(spark, table, st, Some(removes))
         .withColumn("_change_type", lit("delete")))
     val newRows =
       if (named.isEmpty) None // static truncate of an empty source
-      else Some(readFiles(spark, table, named, declared)
+      else Some(scan(spark, table, st, Some(named))
         .withColumn("_change_type", lit("insert")))
     val cdc = (oldRows, newRows) match {
       case (Some(o), Some(n)) => Some(o.unionByName(n))
@@ -3385,8 +3239,6 @@ object TxnLog {
     import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo,
       Expression, GreaterThan, GreaterThanOrEqual, LessThan,
       LessThanOrEqual, Literal}
-    import org.apache.spark.sql.types.{ByteType, DateType, IntegerType,
-      ShortType, TimestampType}
     val tz = spark.sessionState.conf.sessionLocalTimeZone
     def conj(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conj(l) ++ conj(r)
@@ -3399,16 +3251,6 @@ object TxnLog {
         .UnresolvedAttribute => Some(u.nameParts.last)
       case _ => None
     }
-    def canonOf(dt: DataType, v: Any): Option[Long] = dt match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        Some(v.asInstanceOf[Number].longValue)
-      case DateType => Some(v.asInstanceOf[Number].longValue) // days
-      case TimestampType =>
-        Some(org.apache.spark.sql.catalyst.util.DateTimeUtils.microsToDays(
-          v.asInstanceOf[Number].longValue,
-          java.time.ZoneId.of(tz)).toLong)
-      case _ => None
-    }
     // literal rendered in the DECLARED column's type first (a SQL
     // date predicate arrives as a string literal), then canonicalized
     // into the space statsLines records
@@ -3418,7 +3260,8 @@ object TxnLog {
           val v = if (l.dataType == f.dataType) l.value
             else scala.util.Try(
               Cast(l, f.dataType, Some(tz)).eval(null)).getOrElse(null)
-          if (v == null) None else canonOf(f.dataType, v)
+          if (v == null) None
+          else TxnLogFileIndex.canonLong(f.dataType, v, tz)
         }
     val iv = scala.collection.mutable.ArrayBuffer
       .empty[(String, Long, Long)]
@@ -3446,13 +3289,7 @@ object TxnLog {
           add(a, l, lo = true, hi = false)
         case _ => () // unprunable conjunct — superset keeps the file
       }
-    if (iv.isEmpty) st.live
-    else st.live.filter(f => iv.forall { case (c, lo, hi) =>
-      st.stats.get((f, c)) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    })
+    st.live.filter(TxnLogFileIndex.survives(st, _, iv.toSeq, Nil))
   }
 
   /** ARBITRARY-PREDICATE REPLACE (Delta's `replaceWhere` beyond
@@ -3491,8 +3328,7 @@ object TxnLog {
       if (candidates.isEmpty) Nil
       else {
         val byLeaf = candidates.map(n => n.split('/').last -> n).toMap
-        readFiles(spark, table, candidates, declared,
-          dvOf(spark, table, st))
+        scan(spark, table, st, Some(candidates))
           .filter(hit).select(input_file_name().as("__f"))
           .distinct().collect().toSeq // ≤ |candidates| metadata rows
           .map(r => byLeaf(r.getString(0).split('/').last))
@@ -3500,8 +3336,7 @@ object TxnLog {
     val (survivors, deleted) =
       if (victims.isEmpty) (None, None)
       else {
-        val v = readFiles(spark, table, victims, declared,
-          dvOf(spark, table, st))
+        val v = scan(spark, table, st, Some(victims))
         (Some(v.filter(!hit)), Some(v.filter(hit)))
       }
     // batch-satisfies-predicate rides the SAME observe pass as the
@@ -3512,7 +3347,7 @@ object TxnLog {
       stageChecked(spark, table, sv, Map.empty, pcols, declared))
     val insRows =
       if (namedNew.isEmpty) None
-      else Some(readFiles(spark, table, namedNew, declared)
+      else Some(scan(spark, table, st, Some(namedNew))
         .withColumn("_change_type", lit("insert")))
     val delRows = deleted.map(_.withColumn("_change_type", lit("delete")))
     val cdc = (delRows, insRows) match {
@@ -3656,9 +3491,8 @@ object TxnLog {
     // the declared read schema and never see it.
     val snap0 =
       if (rowTrackingOn(st))
-        readFilesWithRid(spark, table, scope, declared, st)
-      else readFiles(spark, table, scope, declared,
-        dvOf(spark, table, st))
+        scanWithRid(spark, table, scope, st)
+      else scan(spark, table, st, Some(scope))
     val sc = if (statsCols.nonEmpty) statsCols else clusterBy
     checkStatsCols(snap0.schema, sc)
     // clusterBy = Delta's OPTIMIZE ZORDER in its range-cluster form:
@@ -3837,8 +3671,8 @@ object TxnLog {
     * holds a victim row — copy-on-write's write amplification, which on
     * a 100 TB table can turn a 0.01% delete into a full-table rewrite —
     * the commit journals the victims' (file, row index) positions under
-    * `_deletion_vectors/` and every subsequent read subtracts them with
-    * one anti join ([[readFiles]]). ZERO data files touched; the
+    * `_deletion_vectors/` and every subsequent read subtracts them
+    * inside the parquet reader ([[scan]]). ZERO data files touched; the
     * deleted rows are also journaled as `delete` change-feed entries,
     * so [[changesBetween]] serves the window identically to the
     * copy-on-write [[deleteWhere]]. Per-file victim counts ride the
@@ -3846,9 +3680,8 @@ object TxnLog {
     *
     * The read tax is proportional to accumulated DV rows; [[compact]]
     * materializes the deletes away (it reads DV-aware and commits a
-    * `dvclear` — Delta's REORG PURGE), which is also the escape hatch
-    * the SQL relation ([[TxnLogFileIndex]]) points to, since a plain
-    * file scan cannot apply row-level subtraction. SQL NULL-predicate
+    * `dvclear` — Delta's REORG PURGE), which gives the scan back its
+    * columnar batch handoff. SQL NULL-predicate
     * semantics match [[deleteWhere]]: only cond === TRUE rows die.
     * CAS-pinned like every snapshot-derived commit. */
   def deleteWhereDV(spark: SparkSession, table: String, cond: Column,
@@ -3881,8 +3714,8 @@ object TxnLog {
   /** The merge-on-read DML both DV writers share — a delete is an
     * update with no post-image: ONE DV-aware victim scan (rows an
     * earlier DV already deleted cannot be victimized twice, so per-file
-    * counts stay exact; positions are captured in the scan pass —
-    * `_metadata` does not resolve through the anti join) pinned once to
+    * counts stay exact; positions are the scan's own `_metadata`, the
+    * physical row index before DV subtraction) pinned once to
     * feed the DV file, the per-file counts, the CDF and, for an update,
     * the touch-up file. The DECLARED schema pins the scan like every
     * other reader. On a row-tracking table the scan also surfaces
@@ -3906,10 +3739,9 @@ object TxnLog {
     val tracking = rowTrackingOn(st)
     val raw =
       if (tracking)
-        readFilesWithRid(spark, table, st.live, declared, st,
-          keepPos = true).withColumn("_row_id", col(RidCol))
-      else readFiles(spark, table, st.live, declared,
-        dvOf(spark, table, st), keepDvPos = true)
+        scanWithRid(spark, table, st.live, st, keepPos = true)
+          .withColumn("_row_id", col(RidCol))
+      else withPos(scan(spark, table, st))
     val victims = raw.filter(coalesce(cond, lit(false)))
       .localCheckpoint(true)
     try {
@@ -3978,7 +3810,7 @@ object TxnLog {
       if (acts.exists(_.sameElements(Array("nochange"))))
         None // layout-only commit (compaction): rows unchanged by contract
       else if (cdcF.nonEmpty)
-        Some(readFiles(spark, table, cdcF, None)
+        Some(readSide(spark, table, cdcF)
           .withColumn("_commit_version", lit(v)))
       else if (opName.contains("restore") && removes.nonEmpty) {
         // a RESTORE is metadata-only (add+remove, no journaled change
@@ -4030,10 +3862,7 @@ object TxnLog {
         // appends (a DV can only mask files OLDER than itself), but a
         // DV-carrying SHALLOW CLONE's v1 arrives with adds and masks
         // together — its insert feed must not resurrect deleted rows.
-        val stv = replayState(table, v)
-        val sch = stv.declared
-        Some(readFiles(spark, table, adds, sch,
-            dv = dvOf(spark, table, stv))
+        Some(scan(spark, table, replayState(table, v), Some(adds))
           .withColumn("_change_type", lit("insert"))
           .withColumn("_commit_version", lit(v)))
       }

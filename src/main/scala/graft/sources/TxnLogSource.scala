@@ -11,10 +11,8 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.datasources.{FileIndex,
   FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider,
-  DataSourceRegister, InsertableRelation, PrunedFilteredScan,
-  RelationProvider}
+  DataSourceRegister, InsertableRelation, RelationProvider}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -43,13 +41,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`src/etl/spark_deltalake_sync.py:139,208`); this is that surface
   * for the TxnLog format.
   *
-  * Snapshots with LIVE DELETION VECTORS cannot be served by a plain
-  * file scan (row-level subtraction doesn't fit a FileSourceScanExec),
-  * so [[createRelation]] routes them to [[TxnLogScanRelation]] — the v1
-  * `PrunedFilteredScan` shape whose buildScan runs the same
-  * log-pruned, DV-subtracting plan [[TxnLog.snapshot]] builds. The DV
-  * read tax there is the row-conversion boundary; `compact()` (REORG
-  * PURGE) returns the table to the vectorized fast path.
+  * This relation is the ONLY read path: [[TxnLog.snapshot]], every
+  * writer's internal read and the streaming source build the same
+  * [[TxnLogHadoopFsRelation]] over a [[TxnLogFileIndex]] pinned to one
+  * resolved state. Column mapping and live DELETION VECTORS are both
+  * handled inside the vectorized reader ([[TxnLogParquetFileFormat]]);
+  * DVs cost only the columnar batch handoff above the scan, which
+  * `compact()` (REORG PURGE) restores.
   *
   * The WRITE half ([[CreatableRelationProvider]]) makes
   * `df.write.format("txnlog")` work (the reference writes through the
@@ -194,22 +192,13 @@ final class TxnLogSource extends RelationProvider
         .getOrElse(vs0.last)
       return new TxnLogChangesRelation(sqlContext, table, from - 1, to)
     }
-    val asOf = asOfOf(table, parameters)
-    val spark = sqlContext.sparkSession
-    val vs = TxnLog.versions(table)
-    require(vs.nonEmpty, s"not a TxnLog table: $table")
-    val upTo = asOf.getOrElse(vs.last)
-    require(vs.contains(upTo), s"version $upTo not in log (have $vs)")
     // EVERY snapshot shape takes the vectorized HadoopFsRelation path:
     // column mapping is a rename at reader construction and DV
     // subtraction a per-file row-index filter, both folded into
-    // [[TxnLogParquetFileFormat]] — merge-on-read and renamed tables
-    // keep the vectorized parquet scan (the round-12 fallback to an
-    // external-row PrunedFilteredScan is retired; the class remains as
-    // [[TxnLogScanRelation]] for its pruning spec and as the documented
-    // alternative shape)
-    val index = new TxnLogFileIndex(spark, table, asOf)
-    new TxnLogHadoopFsRelation(index, table, spark)
+    // [[TxnLogParquetFileFormat]]
+    val spark = sqlContext.sparkSession
+    new TxnLogHadoopFsRelation(
+      TxnLogFileIndex(spark, table, asOfOf(table, parameters)), table, spark)
   }
 
   /** `df.write.format("txnlog")`: SaveMode mapped onto the log's
@@ -339,9 +328,9 @@ private[graft] final class TxnLogSink(table: String,
   * window — deterministic replay from immutable log files, so a
   * restarted query's checkpointed offset window rebuilds the identical
   * micro-batch (the property Spark's exactly-once sink contract needs
-  * from a source). The batch plan is [[TxnLog.readFiles]] — the same
-  * pruned, schema-pinned, mapping-aware reader every batch consumer
-  * uses — re-rooted as a streaming DataFrame
+  * from a source). The batch plan is [[TxnLog.scan]] — the same
+  * schema-pinned, mapping- and DV-aware relation every batch consumer
+  * reads through — re-rooted as a streaming DataFrame
   * ([[org.apache.spark.sql.GraftShim.asStreaming]], the Kafka-source
   * materialization). */
 private[graft] final class TxnLogStreamSource(sqlCtx: SQLContext,
@@ -422,22 +411,18 @@ private[graft] final class TxnLogStreamSource(sqlCtx: SQLContext,
         } else if (selfMasked) selfMaskedVs += ((v, adds))
         else files ++= adds
       }
-    val plain =
-      if (files.isEmpty) None
-      else Some(TxnLog.readFiles(spark, table, files.toSeq, Some(declared)))
+    // every part reads under the schema pinned at stream start: plain
+    // appends serve their rows as committed (an empty state: no masks,
+    // layout from the paths), a self-masked version under the masks of
+    // its own state
+    def read(st: TxnLog.State, adds: Seq[String]): DataFrame =
+      TxnLog.scan(spark, table, st.copy(schemaJson = Some(declared.json)),
+        Some(adds))
+    val plain = read(TxnLog.State(), files.toSeq)
     val masked = selfMaskedVs.toSeq.map { case (v, adds) =>
-      val stv = TxnLog.replayState(table, v)
-      TxnLog.readFiles(spark, table, adds, Some(declared),
-        dv = TxnLog.dvOf(spark, table, stv))
-    }
-    val parts = plain.toSeq ++ masked
-    val batch =
-      if (parts.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row],
-          StructType(declared.fields.map(_.copy(nullable = true))))
-      else parts.reduce(_ unionByName _)
-    org.apache.spark.sql.GraftShim.asStreaming(batch)
+      read(TxnLog.replayState(table, v), adds) }
+    org.apache.spark.sql.GraftShim.asStreaming(
+      (plain +: masked).reduce(_ unionByName _))
   }
 
   override def commit(
@@ -532,243 +517,150 @@ private[graft] class TxnLogHadoopFsRelation(index: TxnLogFileIndex,
     else TxnLog.append(spark, table, data)
 }
 
-/** DV-aware v1 relation ([[PrunedFilteredScan]]): serves snapshots
-  * with live deletion vectors by running the SAME plan
-  * [[TxnLog.snapshot]] builds — log-pruned file list, parquet scan,
-  * one anti join on the journaled (file, row-index) pairs — and
-  * handing Spark the resulting rows. File pruning still happens from
-  * the committed stats/blooms (see [[prunedFiles]], spec-pinned);
-  * recognized pushed filters are ALSO applied inside the inner plan so
-  * parquet row-group pushdown keeps working; Spark re-applies every
-  * filter on top (the v1 superset contract), so unrecognized shapes
-  * are never wrong, just unpruned. */
-private[graft] final class TxnLogScanRelation(sqlCtx: SQLContext,
-                                              table: String,
-                                              asOf: Option[Long])
-    extends BaseRelation with PrunedFilteredScan with InsertableRelation {
-  override def sqlContext: SQLContext = sqlCtx
-  private[graft] def tableDir: String = table
-  private def spark = sqlCtx.sparkSession
-
-  private def state(): TxnLog.State = {
-    val vs = TxnLog.versions(table)
-    require(vs.nonEmpty, s"not a TxnLog table: $table")
-    val upTo = asOf.getOrElse(vs.last)
-    require(vs.contains(upTo), s"version $upTo not in log (have $vs)")
-    TxnLog.replayState(table, upTo)
-  }
-
-  override val schema: StructType = state().schemaJson
-    .map(DataType.fromJson(_).asInstanceOf[StructType])
-    .getOrElse(sys.error(
-      s"txnlog relation requires a declared schema in the log: $table"))
-
-  override def sizeInBytes: Long = {
-    val st = state()
-    val known = st.sizes.values.sum
-    if (known > 0) known else super.sizeInBytes
-  }
-
-  /** Canonical-long rendering of an EXTERNAL filter value (v1 filters
-    * carry external types: java.sql.Date, not epoch days), mirroring
-    * the stats writer's epoch-day canonicalization. */
-  private def canonLong(dt: DataType, v: Any): Option[Long] = (dt, v) match {
-    case (ByteType | ShortType | IntegerType | LongType, n: Number) =>
-      Some(n.longValue)
-    case (DateType, d: java.sql.Date) => Some(d.toLocalDate.toEpochDay)
-    case (DateType, d: java.time.LocalDate) => Some(d.toEpochDay)
-    case (TimestampType, t: java.sql.Timestamp) =>
-      Some(DateTimeUtils.microsToDays(DateTimeUtils.fromJavaTimestamp(t),
-        java.time.ZoneId.of(
-          spark.sessionState.conf.sessionLocalTimeZone)).toLong)
-    case (TimestampType, t: java.time.Instant) =>
-      Some(DateTimeUtils.microsToDays(DateTimeUtils.instantToMicros(t),
-        java.time.ZoneId.of(
-          spark.sessionState.conf.sessionLocalTimeZone)).toLong)
-    case _ => None
-  }
-
-  private def probeString(dt: DataType, v: Any): String = {
-    val lit = Literal.create(v, dt)
-    if (dt == StringType) String.valueOf(v)
-    else Cast(lit, StringType,
-      Some(spark.sessionState.conf.sessionLocalTimeZone)).eval(null).toString
-  }
-
-  private def dtOf(a: String): Option[DataType] =
-    schema.fields.find(_.name == a).map(_.dataType)
-
-  /** The file subset that survives stats/bloom pruning for the pushed
-    * filters — the spec pins that DV-mode reads still prune. */
-  private[graft] def prunedFiles(filters: Array[sources.Filter])
-      : Seq[String] = prunedFiles(filters, state())
-
-  /** State-threaded form: [[buildScan]] resolves the replay state ONCE
-    * and passes it here, so a commit landing mid-planning can never mix
-    * one version's live-file/stats set with another version's DV set —
-    * the scan always corresponds to a single committed version. */
-  private[graft] def prunedFiles(filters: Array[sources.Filter],
-                                 st: TxnLog.State): Seq[String] = {
-    val iv = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    val eq = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    filters.foreach {
-      case sources.EqualTo(a, v) if v != null =>
-        dtOf(a).foreach { dt =>
-          canonLong(dt, v).foreach(x => iv += ((a, x, x)))
-          eq += ((a, probeString(dt, v)))
-        }
-      case sources.GreaterThan(a, v) if v != null =>
-        dtOf(a).flatMap(canonLong(_, v))
-          .foreach(x => iv += ((a, x, Long.MaxValue)))
-      case sources.GreaterThanOrEqual(a, v) if v != null =>
-        dtOf(a).flatMap(canonLong(_, v))
-          .foreach(x => iv += ((a, x, Long.MaxValue)))
-      case sources.LessThan(a, v) if v != null =>
-        dtOf(a).flatMap(canonLong(_, v))
-          .foreach(x => iv += ((a, Long.MinValue, x)))
-      case sources.LessThanOrEqual(a, v) if v != null =>
-        dtOf(a).flatMap(canonLong(_, v))
-          .foreach(x => iv += ((a, Long.MinValue, x)))
-      case _ => () // unrecognized → unprunable, never wrong
-    }
-    st.live.filter { f =>
-      val statsOk = iv.forall { case (c, lo, hi) =>
-        st.stats.get((f, c)) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true
-        }
-      }
-      val bloomOk = eq.forall { case (c, probe) =>
-        st.blooms.get((f, c)) match {
-          case Some((m, k, bits)) => (1 to k).forall { i =>
-            val p = TxnLog.bloomPos(i, probe, m)
-            (bits(p >>> 6) & (1L << (p & 63))) != 0L
-          }
-          case None => true
-        }
-      }
-      statsOk && bloomOk
-    }
-  }
-
-  /** Pushed filters a Column can be built for — applied INSIDE the
-    * inner plan so parquet row-group pushdown works; Spark re-applies
-    * everything on top, so this is purely an I/O optimization. */
-  private def innerFilter(fs: Array[sources.Filter])
-      : Option[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val conds = fs.flatMap {
-      case sources.EqualTo(a, v) if v != null => Some(col(a) === lit(v))
-      case sources.GreaterThan(a, v) if v != null => Some(col(a) > lit(v))
-      case sources.GreaterThanOrEqual(a, v) if v != null =>
-        Some(col(a) >= lit(v))
-      case sources.LessThan(a, v) if v != null => Some(col(a) < lit(v))
-      case sources.LessThanOrEqual(a, v) if v != null =>
-        Some(col(a) <= lit(v))
-      case sources.IsNotNull(a) => Some(col(a).isNotNull)
-      case sources.IsNull(a) => Some(col(a).isNull)
-      case sources.In(a, vs) if vs.nonEmpty && vs.forall(_ != null) =>
-        Some(col(a).isin(vs.toSeq: _*))
-      case _ => None
-    }
-    conds.reduceOption(_ && _)
-  }
-
-  override def buildScan(requiredColumns: Array[String],
-                         filters: Array[sources.Filter]): RDD[Row] = {
-    import org.apache.spark.sql.functions.col
-    val st = state()
-    val keep = prunedFiles(filters, st)
-    val base =
-      if (st.live.isEmpty)
-        // empty table (DDL-first, or fully deleted): zero-row relation
-        // with the declared schema — st.live.head would throw
-        TxnLog.emptyDf(spark, schema)
-      else if (keep.isEmpty)
-        TxnLog.readFiles(spark, table, Seq(st.live.head), Some(schema))
-          .where(org.apache.spark.sql.functions.lit(false))
-      else TxnLog.readFiles(spark, table, keep, Some(schema),
-        TxnLog.dvOf(spark, table, st))
-    val filtered = innerFilter(filters).fold(base)(base.filter)
-    filtered.select(requiredColumns.toSeq.map(col): _*).rdd
-  }
-
-  override def insert(data: DataFrame, overwrite: Boolean): Unit =
-    if (overwrite) TxnLog.overwrite(spark, table, data)
-    else TxnLog.append(spark, table, data)
-}
-
 /** Log-planned [[FileIndex]]: the live file set of one TxnLog snapshot,
   * with `listFiles` applying (a) hive partition pruning from Catalyst's
   * partitionFilters and (b) per-file stats-interval + bloom skipping
-  * from its dataFilters. SUPERSET contract throughout, exactly like
-  * [[TxnLog.snapshotWhereAll]]: a file survives unless its committed
-  * metadata PROVES no row can match; the scan re-applies every filter
-  * to the rows it reads, so pruning is purely an I/O optimization. */
+  * from its dataFilters. SUPERSET contract throughout: a file survives
+  * unless its committed metadata PROVES no row can match; the scan
+  * re-applies every filter to the rows it reads, so pruning is purely
+  * an I/O optimization.
+  *
+  * Every TxnLog table read is a relation over one of these. A
+  * `format("txnlog")`/SQL view follows the head ([[TxnLogFileIndex.apply]]);
+  * everything else ([[TxnLog.snapshot]], time travel, the writers'
+  * internal reads, stream batches) pins one resolved state, optionally
+  * restricted to an explicit file list, and never lists the log again.
+  * The pruning helpers below are the only copies of the stats/bloom
+  * survival test the engine has. */
 object TxnLogFileIndex {
   /** logical → physical renames of a declared schema (only the fields
     * where they differ; empty = mapping inactive). */
   private[sources] def physMapOf(s: StructType): Map[String, String] =
     s.fields.iterator.map(f => f.name -> TxnLog.physName(f))
       .filter { case (l, p) => l != p }.toMap
+
+  /** A `format("txnlog")`/SQL view: pinned to `asOf` when given (time
+    * travel), else following the head. */
+  def apply(spark: SparkSession, table: String,
+            asOf: Option[Long]): TxnLogFileIndex = {
+    val vs = TxnLog.versions(table)
+    require(vs.nonEmpty, s"not a TxnLog table: $table")
+    val v = asOf.getOrElse(vs.last)
+    require(vs.contains(v), s"version $v not in log (have $vs)")
+    new TxnLogFileIndex(spark, table, TxnLog.replayState(table, v),
+      head = if (asOf.isEmpty) Some(v) else None)
+  }
+
+  /** Canonical-long rendering of a Catalyst (internal) value, mirroring
+    * the stats writer ([[TxnLog]] statsLines): temporal → epoch days
+    * (conservative day floor), integrals → the value. None = the type
+    * is not stats-canonicalizable → unprunable. */
+  private[sources] def canonLong(dt: DataType, value: Any,
+                                 tz: String): Option[Long] = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType =>
+      Some(value.asInstanceOf[Number].longValue) // dates: epoch days
+    case TimestampType => Some(DateTimeUtils.microsToDays(
+      value.asInstanceOf[Number].longValue,
+      java.time.ZoneId.of(tz)).toLong)
+    case _ => None
+  }
+
+  /** The bloom probe rendering of a Catalyst value: the SAME Catalyst
+    * cast-to-string the build side hashes (`col.cast(StringType)`), so
+    * build and probe renderings can never drift (a drift is a bloom
+    * FALSE NEGATIVE: files wrongly skipped, rows silently missing).
+    * Timestamps assume build and probe sessions share a timezone. */
+  private[sources] def probeString(dt: DataType, value: Any,
+                                   tz: String): String = dt match {
+    case StringType => value.toString
+    case _ => Cast(Literal(value, dt), StringType, Some(tz))
+      .eval(null).toString
+  }
+
+  /** Whether file `f`'s committed [min, max] stats for `c` may hold a
+    * value in [lo, hi]; a file without stats is unprunable. */
+  private[sources] def statsOverlap(st: TxnLog.State, f: String, c: String,
+                                    lo: Long, hi: Long): Boolean =
+    st.stats.get((f, c)).forall { case (mn, mx) => mx >= lo && mn <= hi }
+
+  /** Whether file `f`'s committed bloom for `c` may contain `probe`; a
+    * file without a bloom is unprunable. */
+  private[sources] def bloomMayContain(st: TxnLog.State, f: String,
+                                       c: String, probe: String): Boolean =
+    st.blooms.get((f, c)).forall { case (m, k, bits) =>
+      (1 to k).forall { i =>
+        val p = TxnLog.bloomPos(i, probe, m)
+        (bits(p >>> 6) & (1L << (p & 63))) != 0L
+      }
+    }
+
+  /** The survival test: every (column, lo, hi) interval overlaps the
+    * file's stats and every (column, probe) may be in its bloom. */
+  private[sources] def survives(st: TxnLog.State, f: String,
+                                iv: Seq[(String, Long, Long)],
+                                eq: Seq[(String, String)]): Boolean =
+    iv.forall { case (c, lo, hi) => statsOverlap(st, f, c, lo, hi) } &&
+      eq.forall { case (c, probe) => bloomMayContain(st, f, c, probe) }
 }
 
-final class TxnLogFileIndex(spark: SparkSession, table: String,
-                            asOf: Option[Long]) extends FileIndex {
-  private val vs0 = TxnLog.versions(table)
-  require(vs0.nonEmpty, s"not a TxnLog table: $table")
-  asOf.foreach(v => require(vs0.contains(v),
-    s"version $v not in log (have $vs0)"))
+/** `st0` is the resolved state the index starts from; `head` = Some(v)
+  * makes it a view that re-resolves when the head moves past v, None
+  * pins it. `files` restricts a pinned index to an explicit file list
+  * (relative or clone-absolute committed paths, or freshly staged
+  * ones); `withRid` appends the nullable materialized row-id column
+  * ([[TxnLog.RidCol]]) to the read schema of a row-tracking read. */
+final class TxnLogFileIndex private[sources] (
+    spark: SparkSession, table: String, st0: TxnLog.State,
+    head: Option[Long] = None, files: Option[Seq[String]] = None,
+    withRid: Boolean = false) extends FileIndex {
+  import TxnLogFileIndex.{canonLong, probeString, survives}
 
   private val base: HPath = {
     val t = new HPath(table)
     TxnLog.fsOf(t).makeQualified(t)
   }
 
-  /** One resolved snapshot: the replay state plus the per-file statuses
-    * the planner consumes. File sizes come from the LOG (`fsize`
-    * actions — Delta's add.size): planning never stats a data file;
-    * only files committed before size recording fall back to one
-    * filesystem call each. */
+  /** One resolved snapshot: the replay state, the files it lists and
+    * their statuses. File sizes come from the LOG (`fsize` actions —
+    * Delta's add.size): planning never stats a data file; only files
+    * committed before size recording (or staged, not yet committed)
+    * fall back to one filesystem call each. */
   private final class Snap(val version: Long, val st: TxnLog.State,
+                           val files: Seq[String],
                            val statuses: Map[String, FileStatus])
-  private def resolve(v: Long): Snap = {
-    val st = TxnLog.replayState(table, v)
+  private def snapOf(v: Long, st: TxnLog.State): Snap = {
     lazy val fs = TxnLog.fsOf(base)
-    val statuses = st.live.map { f =>
+    val fl = files.getOrElse(st.live)
+    val statuses = fl.map { f =>
       val p = new HPath(base, f)
       val len = st.sizes.getOrElse(f, fs.getFileStatus(p).getLen)
       f -> new FileStatus(len, false, 1, 128L * 1024 * 1024, 0L, p)
     }.toMap
-    new Snap(v, st, statuses)
+    new Snap(v, st, fl, statuses)
   }
 
-  @volatile private var snap: Snap = resolve(asOf.getOrElse(vs0.last))
+  @volatile private var snap: Snap = snapOf(head.getOrElse(-1L), st0)
 
-  /** HEAD reads re-resolve the log per planning pass (Delta's
+  /** HEAD views re-resolve the log per planning pass (Delta's
     * TahoeFileIndex re-resolves per snapshot): a persistent temp view
     * keeps seeing new commits, and a compact+vacuum cannot strand the
-    * view on a pinned file list of deleted files. An EXPLICIT `version`
-    * option pins forever — that is what time travel means (and vacuum
-    * reclaiming the pinned snapshot fails its scans, same contract as
-    * [[TxnLog.snapshot]]). */
+    * view on a pinned file list of deleted files. A pinned index never
+    * lists the log — that is what a snapshot and time travel mean (and
+    * vacuum reclaiming the pinned files fails their scans). */
   private def current(): Snap = {
-    if (asOf.isDefined) snap
-    else {
-      val head = TxnLog.versions(table).last
-      if (head != snap.version) snap = resolve(head)
-      snap
+    if (head.isDefined) {
+      val h = TxnLog.versions(table).last
+      if (h != snap.version) snap = snapOf(h, TxnLog.replayState(table, h))
     }
+    snap
   }
 
-  // the SCHEMA is pinned at construction (analysis time): a resolved
-  // plan cannot change shape mid-query, and post-evolution files simply
-  // surface their extra columns as unread (parquet matches by name) —
-  // re-create the view to pick up an evolved declaration
-  private val st0 = snap.st
-
   /** SQL reads need the log-declared schema: schema-on-read inference
-    * would have to open footers (and would mis-order evolved columns). */
+    * would have to open footers (and would mis-order evolved columns).
+    * The SCHEMA is pinned at construction (analysis time): a resolved
+    * plan cannot change shape mid-query, and post-evolution files simply
+    * surface their extra columns as unread (parquet matches by name) —
+    * re-create the view to pick up an evolved declaration. */
   // data columns surface NULLABLE regardless of the declared flag:
   // files written before a schema evolution legitimately lack the
   // evolved columns (they read as null), and a non-nullable field in
@@ -797,9 +689,11 @@ final class TxnLogFileIndex(spark: SparkSession, table: String,
 
   /** Partition directory names are PHYSICAL column names (writers
     * stage through the physical projection); each maps back to the
-    * declared logical field carried by [[partitionSchema]]. */
+    * declared logical field carried by [[partitionSchema]]. An explicit
+    * file list (staged files, stream adds) carries its own layout. */
   private val partCols: Seq[String] =
-    TxnLog.partitionColsOf(st0).getOrElse(Nil)
+    files.flatMap(fl => TxnLog.partitionColsOf(fl))
+      .orElse(TxnLog.partitionColsOf(st0)).getOrElse(Nil)
   private def logicalOf(pc: String): StructField =
     declared.fields.find(f => TxnLog.physName(f) == pc).getOrElse(
       sys.error(s"partition column $pc of $table is not in the " +
@@ -807,43 +701,26 @@ final class TxnLogFileIndex(spark: SparkSession, table: String,
 
   override val partitionSchema: StructType =
     StructType(partCols.map(logicalOf))
-  val dataSchema: StructType = {
-    val physPart = partCols.toSet
-    StructType(declared.filterNot(f => physPart.contains(TxnLog.physName(f))))
-  }
+  /** The relation's data schema is the WHOLE declared schema (plus the
+    * row-id column): partition columns overlap it, and `HadoopFsRelation`
+    * keeps overlapping partition columns at their data-schema position
+    * (reading them from the directory, never from the file) — so every
+    * read surfaces the declared column order. */
+  val dataSchema: StructType =
+    if (withRid) declared.add(StructField(TxnLog.RidCol, LongType))
+    else declared
 
   override def rootPaths: Seq[HPath] = Seq(base)
   override def inputFiles: Array[String] =
-    current().st.live.map(f => new HPath(base, f).toString).toArray
-  override def refresh(): Unit =
-    if (asOf.isEmpty) snap = resolve(TxnLog.versions(table).last)
+    current().files.map(f => new HPath(base, f).toString).toArray
+  override def refresh(): Unit = head.foreach { _ =>
+    val h = TxnLog.versions(table).last
+    snap = snapOf(h, TxnLog.replayState(table, h))
+  }
   override def sizeInBytes: Long =
     current().statuses.values.map(_.getLen).sum
 
   private def tz = spark.sessionState.conf.sessionLocalTimeZone
-
-  /** Canonical-long rendering of a pushed comparison bound, mirroring
-    * the stats writer ([[TxnLog]] statsLines): temporal → epoch days
-    * (conservative day floor), integrals → the value. None = the type
-    * is not stats-canonicalizable → unprunable. */
-  private def canonLong(dt: DataType, value: Any): Option[Long] = dt match {
-    case ByteType | ShortType | IntegerType | LongType =>
-      Some(value.asInstanceOf[Number].longValue)
-    case DateType => Some(value.asInstanceOf[Number].longValue) // days
-    case TimestampType => Some(DateTimeUtils.microsToDays(
-      value.asInstanceOf[Number].longValue,
-      java.time.ZoneId.of(tz)).toLong)
-    case _ => None
-  }
-
-  /** The bloom probe rendering: the SAME Catalyst cast-to-string the
-    * build side hashes (see [[TxnLog]] canonicalProbe — this is its
-    * internal-value twin for pushed literals). */
-  private def probeString(dt: DataType, value: Any): String = dt match {
-    case StringType => value.toString
-    case _ => Cast(Literal(value, dt), StringType, Some(tz))
-      .eval(null).toString
-  }
 
   /** (column, lo, hi) intervals + (column, probe) equality probes
     * extracted from the pushed data filters. Conjuncts arrive already
@@ -852,59 +729,33 @@ final class TxnLogFileIndex(spark: SparkSession, table: String,
       : (Seq[(String, Long, Long)], Seq[(String, String)]) = {
     val iv = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
     val eq = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    def bound(a: AttributeReference, l: Literal)(f: Long => (Long, Long))
+        : Unit =
+      canonLong(a.dataType, l.value, tz).foreach { v =>
+        val (lo, hi) = f(v); iv += ((a.name, lo, hi)) }
     dataFilters.foreach {
       case EqualTo(a: AttributeReference, l: Literal) if l.value != null =>
-        canonLong(a.dataType, l.value).foreach(v => iv += ((a.name, v, v)))
-        eq += ((a.name, probeString(l.dataType, l.value)))
+        bound(a, l)(v => (v, v))
+        eq += ((a.name, probeString(l.dataType, l.value, tz)))
       case EqualTo(l: Literal, a: AttributeReference) if l.value != null =>
-        canonLong(a.dataType, l.value).foreach(v => iv += ((a.name, v, v)))
-        eq += ((a.name, probeString(l.dataType, l.value)))
+        bound(a, l)(v => (v, v))
+        eq += ((a.name, probeString(l.dataType, l.value, tz)))
       case GreaterThan(a: AttributeReference, l: Literal)
-          if l.value != null =>
-        canonLong(a.dataType, l.value)
-          .foreach(v => iv += ((a.name, v, Long.MaxValue)))
+          if l.value != null => bound(a, l)(v => (v, Long.MaxValue))
       case GreaterThanOrEqual(a: AttributeReference, l: Literal)
-          if l.value != null =>
-        canonLong(a.dataType, l.value)
-          .foreach(v => iv += ((a.name, v, Long.MaxValue)))
+          if l.value != null => bound(a, l)(v => (v, Long.MaxValue))
       case LessThan(a: AttributeReference, l: Literal) if l.value != null =>
-        canonLong(a.dataType, l.value)
-          .foreach(v => iv += ((a.name, Long.MinValue, v)))
+        bound(a, l)(v => (Long.MinValue, v))
       case LessThanOrEqual(a: AttributeReference, l: Literal)
-          if l.value != null =>
-        canonLong(a.dataType, l.value)
-          .foreach(v => iv += ((a.name, Long.MinValue, v)))
+          if l.value != null => bound(a, l)(v => (Long.MinValue, v))
       case GreaterThan(l: Literal, a: AttributeReference)
           if l.value != null => // lit > col ⇒ col < lit
-        canonLong(a.dataType, l.value)
-          .foreach(v => iv += ((a.name, Long.MinValue, v)))
+        bound(a, l)(v => (Long.MinValue, v))
       case LessThan(l: Literal, a: AttributeReference) if l.value != null =>
-        canonLong(a.dataType, l.value)
-          .foreach(v => iv += ((a.name, v, Long.MaxValue)))
+        bound(a, l)(v => (v, Long.MaxValue))
       case _ => () // IsNotNull, OR-trees, UDF-ish — unprunable, fine
     }
     (iv.toSeq, eq.toSeq)
-  }
-
-  private def survives(st: TxnLog.State, f: String,
-                       iv: Seq[(String, Long, Long)],
-                       eq: Seq[(String, String)]): Boolean = {
-    val statsOk = iv.forall { case (c, lo, hi) =>
-      st.stats.get((f, c)) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }
-    val bloomOk = eq.forall { case (c, probe) =>
-      st.blooms.get((f, c)) match {
-        case Some((m, k, bits)) => (1 to k).forall { i =>
-          val p = TxnLog.bloomPos(i, probe, m)
-          (bits(p >>> 6) & (1L << (p & 63))) != 0L
-        }
-        case None => true
-      }
-    }
-    statsOk && bloomOk
   }
 
   /** Cast one hive path segment value to the partition column's type
@@ -954,7 +805,7 @@ final class TxnLogFileIndex(spark: SparkSession, table: String,
       FileStatusWithMetadata(statuses(f), md)
     }
     val (iv, eq) = pruningHints(dataFilters)
-    val pruned = st.live.filter(survives(st, _, iv, eq))
+    val pruned = cur.files.filter(survives(st, _, iv, eq))
     if (partCols.isEmpty) {
       Seq(PartitionDirectory(InternalRow.empty, pruned.map(withMeta)))
     } else {

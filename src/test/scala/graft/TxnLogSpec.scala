@@ -1553,13 +1553,141 @@ class TxnLogSpec extends SparkSpec {
         .select("o_orderkey", "o_totalprice").orderBy("o_orderkey")))
     assert(spark.table("txn_dv_v").count() == expect.count())
     // file pruning is STILL decided from the log with DVs live: the
-    // narrow-key filter keeps one of the four range-clustered files
-    val rel = new graft.sources.TxnLogScanRelation(
-      spark.sqlContext, t, None)
-    assert(rel.prunedFiles(Array(
-      org.apache.spark.sql.sources.LessThanOrEqual("o_orderkey", 7L)))
-      .size == 1)
-    assert(rel.prunedFiles(Array.empty).size == 4)
+    // narrow-key filter keeps one of the four range-clustered files —
+    // the files the view's index selects for the scan's own filters
+    def selected(df: org.apache.spark.sql.DataFrame): Int = {
+      val scan = df.queryExecution.executedPlan.collectFirst {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }.getOrElse(fail("expected a FileSourceScanExec"))
+      scan.relation.location
+        .listFiles(scan.partitionFilters, scan.dataFilters)
+        .map(_.files.size).sum
+    }
+    assert(selected(spark.table("txn_dv_v")
+      .filter(col("o_orderkey") <= 7)) == 1)
+    assert(selected(spark.table("txn_dv_v")) == 4)
+  }
+
+  test("DV subtraction keeps each surviving row's physical row index") {
+    val t = freshTable()
+    TxnLog.create(spark, t, spark.range(0, 300, 1, 1)
+      .select(col("id").as("k"), (col("id") * 10).as("v")))
+    TxnLog.setProperties(spark, t, Map(TxnLog.RowTrackKey -> "true"))
+    // (k → parquet row index) and (k → stable row id), read through the
+    // one table read (`_metadata` on the snapshot's own scan)
+    def positions(): Map[Long, Long] = TxnLog.snapshot(spark, t)
+      .select(col("k"), col("_metadata.row_index")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def ids(): Map[Long, Long] = TxnLog.snapshotWithRowIds(spark, t)
+      .select("k", "_row_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val pos0 = positions()
+    val ids0 = ids()
+    assert(pos0.values.toSeq.sorted == (0L until 300L),
+      "one file: every row has its own physical position")
+    TxnLog.deleteWhereDV(spark, t, col("k") % 7 === 3 && col("k") < 150)
+    // the second delete hits rows AFTER the first's, on the same file: a
+    // DV written against post-subtraction positions would mask the
+    // wrong rows (each earlier deletion shifts later rows down by one)
+    TxnLog.deleteWhereDV(spark, t, col("k") >= 200 && col("k") % 5 === 0)
+    assert(TxnLog.files(t).size == 1, "DV deletes rewrite no file")
+    val keep = (0L until 300L)
+      .filterNot(k => (k % 7 == 3 && k < 150) || (k >= 200 && k % 5 == 0))
+    assert(rowsOf(TxnLog.snapshot(spark, t).orderBy("k")) ==
+      keep.map(k => Seq(k, k * 10)))
+    assert(positions() == pos0.filter { case (k, _) => keep.contains(k) },
+      "a surviving row keeps its physical row index under DV subtraction")
+    assert(ids() == ids0.filter { case (k, _) => keep.contains(k) },
+      "kept rows keep their stable row ids across both deletes")
+  }
+
+  test("one read path: snapshot equals format(\"txnlog\") on every shape") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Plans
+      extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def txnlog(t: String, version: Option[Long] = None): DataFrame =
+      version.foldLeft(spark.read.format("txnlog"))((r, v) =>
+        r.option("version", v)).load(t)
+    def sorted(df: DataFrame): Seq[Seq[Any]] =
+      rowsOf(df.orderBy(df.columns.toSeq.map(col): _*))
+    val nationX = nation.select(col("n_nationkey"), col("n_name"),
+      col("n_regionkey"), (col("n_nationkey") * 7).as("n_code"))
+    val plain = freshTable()
+    TxnLog.create(spark, plain, nationX)
+    val parted = freshTable()
+    TxnLog.create(spark, parted, nationX, partitionBy = Seq("n_regionkey"))
+    val renamed = freshTable()
+    TxnLog.create(spark, renamed, nationX)
+    TxnLog.renameColumn(spark, renamed, "n_name", "name")
+    val masked = freshTable()
+    TxnLog.create(spark, masked, nationX)
+    TxnLog.deleteWhereDV(spark, masked, col("n_regionkey") === 0)
+    // a clone of a partitioned DV table, then its own append and delete:
+    // its live files mix the source's absolute paths and its own
+    val src = freshTable()
+    TxnLog.create(spark, src, nationX, partitionBy = Seq("n_regionkey"))
+    TxnLog.deleteWhereDV(spark, src, col("n_nationkey") % 3 === 0)
+    val clone = freshTable()
+    TxnLog.shallowClone(spark, src, clone)
+    TxnLog.append(spark, clone,
+      nationX.withColumn("n_nationkey", col("n_nationkey") + 100))
+    TxnLog.deleteWhereDV(spark, clone, col("n_nationkey") % 5 === 1)
+    def absolute(f: String): Boolean = f.startsWith("/") || f.contains(":/")
+    assert(TxnLog.files(clone).exists(absolute) &&
+      TxnLog.files(clone).exists(!absolute(_)),
+      "the clone must mix two bases")
+    val evolved = freshTable()
+    TxnLog.create(spark, evolved, nationX)
+    TxnLog.addColumns(spark, evolved,
+      Seq(("n_extra", org.apache.spark.sql.types.StringType, None)))
+    val empty = freshTable()
+    TxnLog.createEmpty(spark, empty, nationX.schema)
+    val cases: Seq[(String, DataFrame, DataFrame, Long)] = Seq(
+      ("plain", TxnLog.snapshot(spark, plain), txnlog(plain), 25L),
+      ("hive-partitioned", TxnLog.snapshot(spark, parted), txnlog(parted),
+        25L),
+      ("renamed", TxnLog.snapshot(spark, renamed), txnlog(renamed), 25L),
+      ("DV-masked", TxnLog.snapshot(spark, masked), txnlog(masked), 20L),
+      ("clone of a partitioned DV table", TxnLog.snapshot(spark, clone),
+        txnlog(clone), 33L),
+      ("time travel before an evolution",
+        TxnLog.snapshot(spark, evolved, Some(1L)), txnlog(evolved, Some(1L)),
+        25L),
+      ("empty DDL-first", TxnLog.snapshot(spark, empty), txnlog(empty), 0L))
+    cases.foreach { case (name, snap, viaFormat, n) =>
+      assert(snap.schema == viaFormat.schema, name)
+      assert(snap.count() == n, name)
+      assert(sorted(snap) == sorted(viaFormat), name)
+      if (n > 0) {
+        val plan = snap.queryExecution.executedPlan
+        assert(Plans.collect(plan) { case s: FileSourceScanExec => s }
+          .nonEmpty, s"$name: expected a FileSourceScanExec")
+        assert(Plans.collect(plan) { case j: BaseJoinExec => j }.isEmpty,
+          s"$name: the snapshot plan must hold no join\n$plan")
+      }
+    }
+    assert(TxnLog.snapshot(spark, parted).columns.toSeq ==
+      nationX.columns.toSeq, "declared column order, partitions included")
+    assert(TxnLog.snapshot(spark, evolved, Some(1L)).columns.toSeq ==
+      nationX.columns.toSeq)
+  }
+
+  test("q321 keeps its file-pruning require at sf0.001 and its oracle") {
+    // the key bands are fractions of the largest key, so the narrow-key
+    // merge touches the same few range files at every scale factor
+    val name = "q321_txn_sql_merge_recency"
+    val got = rowsOf(SparkEntry.queries(name)(spark, sf0001))
+    Tables.load(spark, sf0001, "orders").createOrReplaceTempView("orders")
+    val want =
+      try rowsOf(spark.sql(SparkEntry.oracleSql(name)))
+      finally spark.catalog.dropTempView("orders")
+    assert(got.map(_.take(2)) == want.map(_.take(2)))
+    got.zip(want).foreach { case (g, w) =>
+      assert(math.abs(g(2).asInstanceOf[Double] -
+        w(2).asInstanceOf[Double]) < 0.005, s"$g vs $w")
+    }
   }
 
   test("vectorized merge-on-read: DV and mapped reads keep FileSourceScan") {
