@@ -948,37 +948,60 @@ object TxnLog {
   }
 
   /** Per-file deleted-row skip sets (leaf data-file name → SORTED row
-    * indexes), decoded from the journaled DV parquet under
-    * `_deletion_vectors/`, memoized by the DV file list: DV files are
-    * immutable once committed, so a given combination decodes once per
-    * session no matter how many scans plan against it. This is the
-    * driver-side half of merge-on-read — the sets ride to executors
-    * inside each file's [[org.apache.spark.sql
+    * indexes) of the journaled DV files under `_deletion_vectors/`.
+    * This is the driver-side half of merge-on-read — the sets ride to
+    * executors inside each file's [[org.apache.spark.sql
     * .execution.datasources.FileStatusWithMetadata]] (so a task carries
     * only ITS files' deletions, no global broadcast), and
     * [[TxnLogParquetFileFormat]] subtracts them against the parquet
-    * reader's generated row indexes. Memory is ∝ deleted-but-uncompacted
+    * reader's generated row indexes. No Spark job: each DV file is
+    * decoded once ([[dvFileRows]]). Memory is ∝ deleted-but-uncompacted
     * rows at 8 B each; `compact()`'s dvclear resets it — the same bound
     * Delta's in-memory DV descriptors live under. */
-  private[sources] def dvSkipSets(spark: SparkSession, table: String,
-                                  dvFiles: Seq[String])
-      : Map[String, Array[Long]] = {
-    if (dvFiles.isEmpty) return Map.empty
-    val key = (table, dvFiles.sorted.mkString("\u0000"))
-    var m = dvCache.get(key)
-    if (m == null) {
-      import org.apache.spark.sql.functions.{col, collect_list, sort_array}
-      m = readSide(spark, table, dvFiles)
-        .groupBy(col("__dv_f"))
-        .agg(sort_array(collect_list(col("__dv_r"))).as("rs"))
-        .collect() // ≤ |files with deletions| rows
-        .map(r => r.getString(0) ->
-          r.getSeq[Long](1).toArray)
-        .toMap
-      if (dvCache.size > 64) dvCache.clear() // crude bound; re-decode is cheap
-      val prev = dvCache.putIfAbsent(key, m)
-      if (prev != null) m = prev
+  private[sources] def dvSkipSets(table: String, dvFiles: Seq[String])
+      : Map[String, Array[Long]] =
+    dvFiles.map(dvFileRows(table, _)) match {
+      case Seq() => Map.empty
+      case Seq(one) => one
+      case many => many.flatten.groupBy(_._1).map { case (leaf, parts) =>
+        val rows = parts.flatMap(_._2).toArray
+        java.util.Arrays.sort(rows)
+        leaf -> rows
+      }
     }
+
+  /** One DV file (`__dv_f` leaf name, `__dv_r` row index) decoded on
+    * the driver with the parquet reader, as [[readFooters]] reads
+    * footers. DV files are immutable once written, so each decodes once
+    * per JVM; the DV writers decode their own staged file
+    * ([[stageDv]]), which seeds this cache before the commit lands. */
+  private def dvFileRows(table: String, rel: String)
+      : Map[String, Array[Long]] = {
+    val key = (table, rel)
+    val hit = dvCache.get(key)
+    if (hit != null) return hit
+    val t = tablePath(table)
+    val reader = org.apache.parquet.hadoop.ParquetReader.builder(
+      new org.apache.parquet.hadoop.example.GroupReadSupport(),
+      fsOf(t).makeQualified(new HPath(t, rel))).withConf(ioConf).build()
+    val acc = scala.collection.mutable.HashMap.empty[String,
+      scala.collection.mutable.ArrayBuilder.ofLong]
+    try {
+      var g = reader.read()
+      while (g != null) {
+        acc.getOrElseUpdate(g.getString("__dv_f", 0),
+          new scala.collection.mutable.ArrayBuilder.ofLong) +=
+          g.getLong("__dv_r", 0)
+        g = reader.read()
+      }
+    } finally reader.close()
+    val m = acc.map { case (leaf, b) =>
+      val rows = b.result()
+      java.util.Arrays.sort(rows)
+      leaf -> rows
+    }.toMap
+    if (dvCache.size > 256) dvCache.clear() // crude bound; re-decode is cheap
+    dvCache.putIfAbsent(key, m)
     m
   }
 
@@ -1089,15 +1112,6 @@ object TxnLog {
 
   // ─── per-file bloom skipping ───────────────────────────────────────
 
-  /** Per-file bloom geometry: 2¹⁸ bits (32 KB per file per column) × 5
-    * hashes ≈ 0.2% false positives at ~20k distinct values per file —
-    * the point-lookup analogue of min/max stats (Iceberg/Parquet bloom
-    * metadata, lifted into the LOG so planning never opens a footer).
-    * Min/max prunes ranges; a high-cardinality key scattered across
-    * every file (an orderkey in a date-clustered table) has min≈global
-    * min and max≈global max in EVERY file, so range stats prune
-    * nothing — the bloom is what makes an equality probe touch one
-    * file instead of all of them. */
   /** The log protocol this build can read (Delta's minReaderVersion
     * shape): `minreader` actions above it refuse replay descriptively.
     * Raise it only alongside a semantic the old reader would silently
@@ -1138,6 +1152,16 @@ object TxnLog {
       Seq("minreader\t2", "minwriter\t2")
     else Seq("minreader\t1", "minwriter\t1")
 
+  /** Per-file bloom geometry: at most 2¹⁸ bits (32 KB per file per
+    * column) × 5 hashes ≈ 0.2% false positives at ~20k distinct values
+    * per file; a file with fewer values gets a narrower line
+    * ([[bloomLines]]) — the point-lookup analogue of min/max stats
+    * (Iceberg/Parquet bloom metadata, lifted into the LOG so planning
+    * never opens a footer). Min/max prunes ranges; a high-cardinality
+    * key scattered across every file (an orderkey in a date-clustered
+    * table) has min≈global min and max≈global max in EVERY file, so
+    * range stats prune nothing — the bloom is what makes an equality
+    * probe touch one file instead of all of them. */
   val BloomBits: Int = 1 << 18
   val BloomHashes: Int = 5
 
@@ -1152,18 +1176,26 @@ object TxnLog {
     Array.fill(bb.remaining() / 8)(bb.getLong())
   }
 
-  /** The probe-side hash, evaluated DRIVER-side through the same
+  /** The probe-side hashes of one value, one per hash seed
+    * 1..[[BloomHashes]], evaluated DRIVER-side through the same
     * catalyst XxHash64 the build side's `xxhash64(lit(i), col)` uses —
     * one expression, two call sites, so build and probe can never
     * drift. Values canonicalize through their Spark string cast
-    * ([[TxnLogFileIndex.probeString]]). */
-  private[sources] def bloomPos(i: Int, probe: String, m: Int): Int = {
-    val h = org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(
-      org.apache.spark.sql.catalyst.expressions.Literal(i),
-      org.apache.spark.sql.catalyst.expressions.Literal(
-        org.apache.spark.unsafe.types.UTF8String.fromString(probe),
-        StringType)), 42L).eval(null).asInstanceOf[Long]
-    (((h % m) + m) % m).toInt
+    * ([[TxnLogFileIndex.probeString]]). A file's bit for seed i is
+    * `pmod(h_i, m)` under that file's own width m, so a probe is hashed
+    * once however many files it is tested against. */
+  private[sources] def bloomHashes(probe: String): Array[Long] = {
+    val row = org.apache.spark.sql.catalyst.InternalRow(
+      org.apache.spark.unsafe.types.UTF8String.fromString(probe))
+    bloomHashExprs.map(_.eval(row).asInstanceOf[Long])
+  }
+
+  private lazy val bloomHashExprs: Array[
+      org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+      Literal, XxHash64}
+    val v = BoundReference(0, StringType, nullable = false)
+    Array.tabulate(BloomHashes)(j => XxHash64(Seq(Literal(j + 1), v), 42L))
   }
 
   /** An EXTERNAL value (a Row field, a caller's literal) as the
@@ -1188,7 +1220,7 @@ object TxnLog {
                       value: Any, asOf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val st = stateAt(table, asOf)
-    val eq = Seq((colName, probeOf(spark, value)._1))
+    val eq = Seq((colName, bloomHashes(probeOf(spark, value)._1)))
     scan(spark, table, st, Some(st.live.filter(f =>
       TxnLogFileIndex.survives(st, f, Nil, eq))))
       .filter(col(colName) === lit(value))
@@ -1198,7 +1230,13 @@ object TxnLog {
     * staged files (grouped by input_file_name, like [[statsLines]]) —
     * per hash seed a collect_set of bit positions, bounded by
     * [[BloomBits]] per file per column, OR-folded into the bitset
-    * driver-side. */
+    * driver-side. Each line is sized to the values its file holds:
+    * m = min([[BloomBits]], nextPow2(64 n)) bits, n the largest
+    * per-seed position set, and positions fold `mod m` — exact, since
+    * m divides [[BloomBits]]. At 64 bits per value and 5 hashes the
+    * false-positive rate is ≤ 2.4e-6, so a file probed with 4,096
+    * values expects < 0.01 false hits; a small file's line shrinks
+    * from 32 KB to a few hundred bytes. */
   private def bloomLines(spark: SparkSession, table: String,
                          footers: Seq[StagedFooter],
                          bloomCols: Seq[String],
@@ -1206,7 +1244,7 @@ object TxnLog {
       : Seq[String] = {
     if (bloomCols.isEmpty || footers.isEmpty) return Nil
     import org.apache.spark.sql.functions._
-    val m = BloomBits; val k = BloomHashes
+    val k = BloomHashes
     val byLeaf = footers.map(f => f.name.split('/').last -> f.name).toMap
     val df = readStaged(spark, table, footers)
     // staged files carry PHYSICAL names; lines are keyed by the LOGICAL
@@ -1216,19 +1254,22 @@ object TxnLog {
       .filter { case (_, pc) => df.columns.contains(pc) }
     if (cols.isEmpty) return Nil
     val aggs = cols.flatMap { case (c, pc) => (1 to k).map(i =>
-      collect_set(pmod(xxhash64(lit(i), col(pc).cast(StringType)), lit(m)))
-        .as(s"__bl_${c}_$i")) }
+      collect_set(pmod(xxhash64(lit(i), col(pc).cast(StringType)),
+        lit(BloomBits))).as(s"__bl_${c}_$i")) }
     val rows = df.groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*).collect() // ≤ |files| rows
     rows.toSeq.flatMap { r =>
       val fname = byLeaf(r.getAs[String]("__f").split('/').last)
       cols.map { case (c, _) =>
+        val sets = (1 to k).map(i =>
+          r.getSeq[Long](r.fieldIndex(s"__bl_${c}_$i")))
+        val n = math.max(1, sets.map(_.size).max)
+        val m = math.min(BloomBits, Integer.highestOneBit(64 * n - 1) << 1)
         val bits = new Array[Long](m / 64)
-        (1 to k).foreach { i =>
-          r.getSeq[Long](r.fieldIndex(s"__bl_${c}_$i")).foreach { p =>
-            bits((p >>> 6).toInt) |= 1L << (p & 63)
-          }
-        }
+        sets.foreach(_.foreach { p0 =>
+          val p = p0 % m
+          bits((p >>> 6).toInt) |= 1L << (p & 63)
+        })
         s"bloom\t$fname\t$c\t$m\t$k\t${bitsToB64(bits)}"
       }
     }
@@ -2103,6 +2144,30 @@ object TxnLog {
                        rows: DataFrame): Seq[String] =
     stage(spark, table, rows, subdir = Some("_change_data"))
 
+  /** Stage the `__dv_f`/`__dv_r` positions of `rows` (live files of
+    * `st`) as ONE file under `_deletion_vectors/` and return the commit's
+    * mask lines: `dv` plus one `dvcount` per masked file, counted by the
+    * driver-side decode of the staged file ([[dvFileRows]], which also
+    * serves the next snapshot's planning). No rows: the empty file is
+    * deleted and there are no lines. */
+  private def stageDv(spark: SparkSession, table: String, st: State,
+                      rows: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.functions.col
+    val named = stage(spark, table,
+      rows.select(col("__dv_f"), col("__dv_r")).coalesce(1),
+      subdir = Some("_deletion_vectors"))
+    val decoded = named.map(n => n -> dvFileRows(table, n))
+    val (empty, masks) = decoded.partition(_._2.isEmpty)
+    val t = tablePath(table)
+    empty.foreach { case (n, _) => fsOf(t).delete(new HPath(t, n), false) }
+    // leaf name → committed relative path (partitioned files live in
+    // col=val dirs; the DV keys use the leaf, counts key the log path)
+    val byLeaf = st.live.map(f => f.split('/').last -> f).toMap
+    masks.map("dv\t" + _._1) ++ masks.flatMap(_._2)
+      .groupMapReduce(_._1)(_._2.length.toLong)(_ + _).toSeq.sortBy(_._1)
+      .map { case (leaf, n) => s"dvcount\t${byLeaf(leaf)}\t$n" }
+  }
+
   // ─── writers ───────────────────────────────────────────────────────
 
   /** Create the table from `df`; fails if it already exists. The
@@ -2725,24 +2790,99 @@ object TxnLog {
     pre.unionByName(post).unionByName(ins)
   }
 
-  /** How many distinct update-key values a merge will collect for
-    * driver-side bloom probing before giving up on bloom pruning for
-    * that column (stats-interval pruning still applies). A daily merge
-    * batch with millions of keys keeps range pruning; a point-fix batch
-    * gets per-file bloom precision. */
+  /** How many distinct key tuples a merge collects for driver-side
+    * file pruning. Under the cap each tuple is tested against every
+    * file as a whole; over it the keys are tested one column at a time
+    * ([[touchedByColumns]]) and the merge copies every touched file on
+    * write. A daily merge batch with millions of keys keeps range
+    * pruning; a point-fix batch gets per-file bloom precision. */
   val MergeBloomProbeCap: Int = 4096
+
+  /** θ of [[merge]]'s write strategy: a touched file is masked with a
+    * deletion vector while (its masked rows + the key tuples that pass
+    * its pruning test) ≤ θ × its rows, and copied on write past that.
+    * θ = 0.1 because masked rows are a tax on every later read of the
+    * file (decoded, then dropped, and the scan loses its columnar batch
+    * handoff) while a rewrite is paid once: at a tenth the tax stays
+    * small and the mask saves rewriting at least nine rows per row it
+    * stages. The tuple count over-counts matches (a tuple passes every
+    * file whose stats and bloom admit it, and lives in at most one), so
+    * this sits near Delta's 5% purge threshold on rows actually masked.
+    * Counting earlier masks bounds the read tax: a file is rewritten,
+    * and its masks dropped, once they pass θ. */
+  val MergeDvFraction: Double = 0.1
 
   /** The live files a merge of `updates` on `keys` can possibly touch —
     * Delta MERGE's file-pruning step, decided entirely from the LOG's
-    * committed per-file stats and blooms (zero data I/O on the target).
-    * SUPERSET contract: a file is excluded only when it provably
-    * contains no matching key — its stats interval is disjoint from the
-    * update batch's key range on some key column, or its bloom rejects
-    * every distinct update value of a key column. Files without
-    * stats/blooms on the keys are unprunable and always touched. */
+    * committed per-file stats, blooms and partition paths (zero data
+    * I/O on the target) — and, under [[MergeBloomProbeCap]], how many
+    * of the batch's key tuples each touched file admits: an upper bound
+    * on the file's matches. SUPERSET contract: a file is excluded only
+    * when it provably holds no matching key.
+    *
+    * ONE job (none for a batch already held on the driver) collects
+    * the distinct key tuples with no null key (a null key never
+    * matches, so such a row is a pure insert). A file is
+    * touched iff some tuple passes EVERY stats-covered key interval,
+    * EVERY bloom-covered key bloom and — when every partition column is
+    * a key — the file's partition values. Sound, because a matching
+    * target row carries exactly that tuple; and stronger than testing
+    * each column alone: a batch of old symbols on new dates plus new
+    * symbols on old dates passes a history file's date stats and its
+    * symbol bloom column by column, yet no tuple passes both. Each probe
+    * is hashed once for all files. Over the cap the per-column test
+    * runs and no bound is known (None). */
   private def touchedByKeys(spark: SparkSession, st: State,
-                            updates: DataFrame,
-                            keys: Seq[String]): Seq[String] = {
+                            updates: DataFrame, keys: Seq[String])
+      : (Seq[String], Option[Map[String, Int]]) = {
+    import org.apache.spark.sql.functions.col
+    val pcols = partitionColsOf(st).filter(_.forall(keys.contains))
+      .getOrElse(Nil)
+    val keyRows = updates.select(keys.map(col): _*)
+      .where(keys.map(col(_).isNotNull).reduce(_ && _))
+    // a batch already held on the driver is enumerated without a job
+    val tuples =
+      if (keyRows.queryExecution.optimizedPlan.isInstanceOf[
+          org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+        keyRows.collect().distinct.take(MergeBloomProbeCap + 1)
+      else keyRows.distinct().limit(MergeBloomProbeCap + 1).collect()
+    if (tuples.length > MergeBloomProbeCap)
+      return (touchedByColumns(spark, st, updates, keys, pcols), None)
+    val bloomed = keys.map(c => st.blooms.keys.exists(_._2 == c))
+    val pIdx = pcols.map(keys.indexOf)
+    // per tuple and key: (partition rendering, canonical long, hashes),
+    // the rendering only where a partition or a bloom needs it
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val probes = tuples.map(r => keys.indices.map { i =>
+      val l = org.apache.spark.sql.catalyst.expressions.Literal(r.get(i))
+      val s = if (bloomed(i) || pIdx.contains(i))
+        TxnLogFileIndex.probeString(l.dataType, l.value, tz) else ""
+      (s, TxnLogFileIndex.canonLong(l.dataType, l.value, tz),
+        if (bloomed(i)) bloomHashes(s) else Array.emptyLongArray)
+    })
+    val counts = st.live.flatMap { f =>
+      val pv = partValuesOf(f).map(_._2)
+      val n = probes.count(t =>
+        (pIdx.isEmpty || pIdx.map(t(_)._1) == pv) &&
+          keys.indices.forall { i =>
+            val (_, cl, h) = t(i)
+            cl.forall(x =>
+              TxnLogFileIndex.statsOverlap(st, f, keys(i), x, x)) &&
+              TxnLogFileIndex.bloomMayContain(st, f, keys(i), h)
+          })
+      if (n > 0) Some(f -> n) else None
+    }
+    (counts.map(_._1), Some(counts.toMap))
+  }
+
+  /** [[touchedByKeys]] over the probe cap: each key column alone — the
+    * batch's canonical range against every stats-covered key, up to
+    * [[MergeBloomProbeCap]] distinct values against every bloom-covered
+    * key, and the batch's distinct values of the `pcols` partition
+    * columns (all keys) against each file's partition path. */
+  private def touchedByColumns(spark: SparkSession, st: State,
+                               updates: DataFrame, keys: Seq[String],
+                               pcols: Seq[String]): Seq[String] = {
     import org.apache.spark.sql.functions.{col, max, min}
     // canonical [lo, hi] of the batch per stats-covered key column —
     // ONE tiny agg job over the updates (the merge scans them anyway)
@@ -2763,33 +2903,40 @@ object TxnLog {
     // capped distinct probe values per bloom-covered key column (a
     // null-keyed update never matches any target row, so nulls are
     // pure inserts and need no file). Each probe carries its
-    // canonical-long alongside the bloom rendering so the per-file
+    // canonical-long alongside its bloom hashes so the per-file
     // check below can SKIP values the file's stats interval already
     // excludes: a mixed update+insert batch (new keys far above every
     // file's range — the daily-merge norm) would otherwise probe
     // hundreds of values per file and accumulate bloom false
-    // positives until nothing prunes (observed at sf0.1: ~575 probes
-    // × 0.2% FP ≈ 1 hit per file — every file touched).
+    // positives until nothing prunes.
     val bloomKeyCols = keys.filter(c => st.blooms.keys.exists(_._2 == c))
-    val probes: Map[String, Seq[(String, Option[Long])]] =
+    val probes: Map[String, Seq[(Array[Long], Option[Long])]] =
       bloomKeyCols.flatMap { c =>
         val vals = updates.select(col(c)).where(col(c).isNotNull)
           .distinct().limit(MergeBloomProbeCap + 1).collect().map(_.get(0))
         if (vals.length > MergeBloomProbeCap) None
-        else Some(c -> vals.toSeq.map(probeOf(spark, _)))
+        else Some(c -> vals.toSeq.map { v =>
+          val (s, cl) = probeOf(spark, v); (bloomHashes(s), cl) })
       }.toMap
+    val parts: Option[Set[Seq[String]]] =
+      if (pcols.isEmpty) None
+      else Some(updates.select(pcols.map(c => col(c).cast("string")): _*)
+        .where(pcols.map(c => col(c).isNotNull).reduce(_ && _))
+        .distinct().collect()
+        .map(r => pcols.indices.map(r.getString)).toSet)
     st.live.filter { f =>
       val statsOk = intervals.forall { case (c, (lo, hi)) =>
         TxnLogFileIndex.statsOverlap(st, f, c, lo, hi) }
       // a value the file's stats interval excludes need not ask the
       // bloom (and cannot false-positive there)
       val bloomOk = probes.forall { case (c, vals) =>
-        !st.blooms.contains((f, c)) || vals.exists { case (v, cl) =>
+        !st.blooms.contains((f, c)) || vals.exists { case (h, cl) =>
           cl.forall(x => TxnLogFileIndex.statsOverlap(st, f, c, x, x)) &&
-            TxnLogFileIndex.bloomMayContain(st, f, c, v)
+            TxnLogFileIndex.bloomMayContain(st, f, c, h)
         }
       }
-      statsOk && bloomOk
+      statsOk && bloomOk &&
+        parts.forall(_.contains(partValuesOf(f).map(_._2)))
     }
   }
 
@@ -2875,7 +3022,7 @@ object TxnLog {
         // daily batch hits a narrow key range rewrites ∝ that range,
         // not the table; with nothing prunable (no stats/blooms on the
         // keys) every file is touched — the whole-table rewrite.
-        (touchedByKeys(spark, st, u, keys), Fail)
+        (touchedByKeys(spark, st, u, keys)._1, Fail)
       case Some(pc) =>
         // touched partitions: the updates' own partition values — a
         // bounded collect (#distinct partitions a batch touches), the
@@ -2935,16 +3082,27 @@ object TxnLog {
     * and CDC apply needs matched-DELETE. [[upsert]] remains the
     * canonical update-all/insert-all fast path (schema evolution,
     * partition-conflict retry); this generalization keeps its scale
-    * spine: file-level stats/bloom PRUNING on the merge keys (only
-    * files that can hold a matching key are read and rewritten —
-    * disabled only when `notMatchedBySource` clauses exist, since
-    * those touch every unmatched target row, exactly Delta's rule),
-    * one transactional CAS-pinned commit, and row-level CDF journaling
+    * spine: file-level PRUNING on the merge keys' tuples against each
+    * file's stats, bloom and partition ([[touchedByKeys]]; only files
+    * that can hold a matching key are read — disabled only when
+    * `notMatchedBySource` clauses exist, since those touch every
+    * unmatched target row, exactly Delta's rule), one transactional
+    * CAS-pinned commit, and row-level CDF journaling
     * (update_preimage/update_postimage/delete/insert).
-    * The join runs ONCE: the data-file write computes and pins it, and
-    * the change feed is one `explode` over the pinned rows, so
-    * post-images are the staged rows whatever the assignments
-    * evaluate to. The pin is released on return or throw. */
+    *
+    * MERGE-ON-READ per touched file: a file the batch can change only
+    * lightly ([[MergeDvFraction]], decided before the join from the
+    * log's row counts and the pruning's tuple counts) keeps its rows in
+    * place — the positions of its updated and deleted rows go to one
+    * deletion-vector file, and its kept rows keep their row ids. Every
+    * other touched file (all of them over [[MergeBloomProbeCap]] or
+    * with a `notMatchedBySource` clause) is copied on write and removed.
+    * The join runs ONCE: one tagged relation holds the updated,
+    * inserted and deleted rows plus the kept rows of copied files; the
+    * data-file write computes and pins it, and the change feed and the
+    * deletion vector read the pinned rows, so post-images are the
+    * staged rows whatever the assignments evaluate to. The pin is
+    * released on return or throw. */
   def merge(spark: SparkSession, table: String, source: DataFrame,
             keys: Seq[String],
             matched: Seq[MergeClause],
@@ -2984,46 +3142,41 @@ object TxnLog {
     // unmatched target rows (those can live in ANY file); the pruning
     // probe projects the source keys under the TARGET names the
     // committed stats/blooms are keyed by
-    val touchedFiles0 =
-      if (notMatchedBySource.nonEmpty) st.live
+    val (touchedFiles, candidates) =
+      if (notMatchedBySource.nonEmpty) (st.live, None)
       else touchedByKeys(spark, st,
         source.select(keys.zip(sKeys).map { case (tk, sk) =>
           col(sk).as(tk) }: _*), keys)
-    // PARTITION pruning on top, sound ONLY when every partition
-    // column is a join key (equal keys then imply equal partition
-    // values, so a file in an untouched partition provably holds no
-    // match) — the hive twin of upsert's partition-scoped rewrite
-    val keyToSrc = keys.zip(sKeys).toMap
-    val touchedFiles =
-      if (pcols.isEmpty || notMatchedBySource.nonEmpty ||
-        !pcols.forall(keyToSrc.contains)) touchedFiles0
-      else {
-        val pSrc = pcols.map(keyToSrc)
-        val parts: Set[Seq[String]] = source
-          .select(pSrc.map(c => col(c).cast("string")): _*)
-          .where(pSrc.map(c => col(c).isNotNull).reduce(_ && _))
-          .distinct().collect()
-          .map(r => pSrc.indices.map(r.getString)).toSet
-        touchedFiles0.filter(f =>
-          parts.contains(partValuesOf(f).map(_._2)))
-      }
-    val declared = Some(schema)
+    // the write strategy per touched file, decided here from the log
+    // alone: a file whose masked rows would stay a small share gets a
+    // deletion vector, every other one is copied on write
+    val dvFiles = candidates.fold(Seq.empty[String])(n =>
+      touchedFiles.filter(f => st.rowcounts.get(f).exists(rows =>
+        st.dvCounts.getOrElse(f, 0L) + n(f) <= MergeDvFraction * rows)))
+    val cowFiles = touchedFiles.filterNot(dvFiles.toSet)
+    val dvLeaves = dvFiles.map(_.split('/').last)
     // the SOURCE side carries its per-key row count so the plan itself
     // enforces the cardinality rule on matched rows (window over the
     // source only — the small side)
     val sw = org.apache.spark.sql.expressions.Window
       .partitionBy(sKeys.map(col): _*)
+    // the join keys stay top-level columns beside each side's struct, so
+    // the join reuses the window's partitioning of the source
     val srcS = source
       .withColumn("__scnt", count(lit(1)).over(sw))
-      .select(struct(source.columns.toSeq.map(col): _*).as("__s"),
-        col("__scnt"))
+      .select(Seq(struct(source.columns.toSeq.map(col): _*).as("__s"),
+        col("__scnt")) ++ sKeys.zipWithIndex.map { case (sk, i) =>
+          col(sk).as(s"__sk$i") }: _*)
+    // a merge that masks rows carries each target row's position
+    val pos = if (dvFiles.isEmpty) Nil else Seq(col("__dv_f"), col("__dv_r"))
     val joined = (if (touchedFiles.isEmpty) None
       else Some(scan(spark, table, st, Some(touchedFiles)))) match {
       case Some(b) =>
-        b.select(struct(b.columns.toSeq.map(col): _*).as("__t"))
-          .join(srcS, keys.zip(sKeys).map { case (tk, sk) =>
-            col(s"__t.$tk") === col(s"__s.$sk") }
-            .reduce(_ && _), "full_outer")
+        (if (pos.isEmpty) b else withPos(b))
+          .select((struct(b.columns.toSeq.map(col): _*).as("__t") +: pos) ++
+            keys.zipWithIndex.map { case (tk, i) => col(tk).as(s"__tk$i") }: _*)
+          .join(srcS, keys.indices.map(i =>
+            col(s"__tk$i") === col(s"__sk$i")).reduce(_ && _), "full_outer")
       case None => // no file can hold a match: every source row is new
         srcS.withColumn("__t", lit(null).cast(schema))
     }
@@ -3126,13 +3279,18 @@ object TxnLog {
     // column cannot leave the generated (often partition) column stale,
     // and an INSERT clause that omits it cannot land a null partition
     val branch = when(isS, lit("ins")).when(updRow, lit("upd"))
-      .when(delRow, lit("del")).otherwise(lit("keep")).as("__branch")
+      .when(delRow, lit("del")).otherwise(lit("keep"))
     val pre = when(updRow || delRow, struct(tAll: _*)).as("__pre")
+    // a DV'd file's kept rows stay where they are: not in the relation
+    val dvKeep =
+      if (pos.isEmpty) lit(false)
+      else col("__dv_f").isin(dvLeaves: _*) && branch === "keep"
     // pinned LAZILY: the data-file write computes and stores the rows,
-    // the change-feed write reads them back — no second scan, and
-    // identity ids, NOW() or rand() cannot differ between the two
-    val pinned = regenerate(joined.filter(survives || delRow)
-      .select(outCols :+ branch :+ pre: _*), Some(schema))
+    // the change-feed and DV writes read them back — no second scan,
+    // and identity ids, NOW() or rand() cannot differ between them
+    val pinned = regenerate(joined.filter((survives || delRow) && !dvKeep)
+      .select((outCols :+ branch.as("__branch") :+ pre) ++ pos: _*),
+      Some(schema))
       .localCheckpoint(eager = false)
     try {
       val tag = col("__branch")
@@ -3145,14 +3303,19 @@ object TxnLog {
           .otherwise(array(img(post, "insert")))).as("__c"))
         .select(col("__c.r.*"), col("__c.t").as("_change_type"))
       val named = stageChecked(spark, table,
-        pinned.where(tag =!= "del").drop("__branch", "__pre"),
+        pinned.where(tag =!= "del")
+          .drop("__branch", "__pre", "__dv_f", "__dv_r"),
         st.checks, pcols, Some(evolved))
+      val cdcNamed = stageCdc(spark, table, cdc)
+      val masks =
+        if (pos.isEmpty) Nil
+        else stageDv(spark, table, st, pinned.where(tag.isin("upd", "del") &&
+          col("__dv_f").isin(dvLeaves: _*)))
       commit(spark, table, Plan("merge", base, st,
-        meta = dvClearIf(st, touchedFiles),
+        meta = dvClearIf(st, cowFiles) ++ masks,
         schema = if (newFields.nonEmpty) Some(evolved.json) else None,
-        removes = touchedFiles, staged = named,
-        cdc = stageCdc(spark, table, cdc), layout = Some(evolved),
-        idCols = idFieldsM.map(_.name).toSeq))
+        removes = cowFiles, staged = named, cdc = cdcNamed,
+        layout = Some(evolved), idCols = idFieldsM.map(_.name).toSeq))
     } finally unpin(pinned)
   }
 
@@ -3615,9 +3778,10 @@ object TxnLog {
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
     val (base, st) = baseOf(table, expectedVersion)
     // merge-on-read routing: a table that already pays the DV read tax
-    // (live DVs) or opted in (`graft.dvUpdate` = true) takes the
-    // masked-positions path — zero victim files rewritten; explicit
-    // copy-on-write stays the default, same split as delete/deleteDV
+    // (live DVs — a MERGE leaves them on lightly touched files, see
+    // MergeDvFraction) or opted in (`graft.dvUpdate` = true) takes the
+    // masked-positions path — zero victim files rewritten; any other
+    // table is copied on write, the same split as delete/deleteDV
     if ((st.dvCounts.nonEmpty ||
         st.props.get("graft.dvUpdate").contains("true")) &&
         !set.exists { case (c, _) =>
@@ -3727,7 +3891,7 @@ object TxnLog {
   private def maskWhere(spark: SparkSession, table: String, cond: Column,
                         set: Option[Seq[(String, Column)]],
                         expectedVersion: Option[Long]): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit}
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     val op = if (set.isEmpty) "deleteDV" else "updateDV"
     val (base, st) = baseOf(table, expectedVersion)
     val declared = st.declared
@@ -3745,17 +3909,8 @@ object TxnLog {
     val victims = raw.filter(coalesce(cond, lit(false)))
       .localCheckpoint(true)
     try {
-      val perFile = victims.groupBy("__dv_f")
-        .agg(count(lit(1)).as("n"))
-        .collect() // ≤ |live files| rows
-        .map(r => r.getString(0) -> r.getLong(1))
-      if (perFile.isEmpty) return commit(spark, table, Plan(op, base, st))
-      val dvNamed = stage(spark, table,
-        victims.select(col("__dv_f"), col("__dv_r")),
-        subdir = Some("_deletion_vectors"))
-      // leaf name → committed relative path (partitioned files live in
-      // col=val dirs; the DV keys use the leaf, counts key the log path)
-      val byLeaf = st.live.map(f => f.split('/').last -> f).toMap
+      val masks = stageDv(spark, table, st, victims)
+      if (masks.isEmpty) return commit(spark, table, Plan(op, base, st))
       val dataCols = declared.map(_.fieldNames.toSeq)
         .getOrElse(raw.columns.toSeq.filterNot(c =>
           c.startsWith("__dv_") || c == RidCol || c == "_row_id"))
@@ -3773,10 +3928,7 @@ object TxnLog {
               .unionByName((if (tracking) post.drop(RidCol) else post)
                 .withColumn("_change_type", lit("update_postimage"))))
       }
-      commit(spark, table, Plan(op, base, st,
-        meta = dvNamed.map("dv\t" + _) ++
-          perFile.toSeq.sortBy(_._1).map { case (leaf, n) =>
-            s"dvcount\t${byLeaf(leaf)}\t$n" },
+      commit(spark, table, Plan(op, base, st, meta = masks,
         staged = named, cdc = stageCdc(spark, table, cdc), layout = declared))
     } finally unpin(victims)
   }

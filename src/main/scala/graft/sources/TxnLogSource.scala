@@ -583,22 +583,24 @@ object TxnLogFileIndex {
                                     lo: Long, hi: Long): Boolean =
     st.stats.get((f, c)).forall { case (mn, mx) => mx >= lo && mn <= hi }
 
-  /** Whether file `f`'s committed bloom for `c` may contain `probe`; a
-    * file without a bloom is unprunable. */
+  /** Whether file `f`'s committed bloom for `c` may contain the value
+    * whose [[TxnLog.bloomHashes]] are `hashes`; a file without a bloom
+    * (or with more hashes than the probe carries) is unprunable. */
   private[sources] def bloomMayContain(st: TxnLog.State, f: String,
-                                       c: String, probe: String): Boolean =
+                                       c: String,
+                                       hashes: Array[Long]): Boolean =
     st.blooms.get((f, c)).forall { case (m, k, bits) =>
-      (1 to k).forall { i =>
-        val p = TxnLog.bloomPos(i, probe, m)
+      k > hashes.length || (0 until k).forall { i =>
+        val p = (((hashes(i) % m) + m) % m).toInt
         (bits(p >>> 6) & (1L << (p & 63))) != 0L
       }
     }
 
   /** The survival test: every (column, lo, hi) interval overlaps the
-    * file's stats and every (column, probe) may be in its bloom. */
+    * file's stats and every (column, probe hashes) may be in its bloom. */
   private[sources] def survives(st: TxnLog.State, f: String,
                                 iv: Seq[(String, Long, Long)],
-                                eq: Seq[(String, String)]): Boolean =
+                                eq: Seq[(String, Array[Long])]): Boolean =
     iv.forall { case (c, lo, hi) => statsOverlap(st, f, c, lo, hi) } &&
       eq.forall { case (c, probe) => bloomMayContain(st, f, c, probe) }
 }
@@ -722,13 +724,13 @@ final class TxnLogFileIndex private[sources] (
 
   private def tz = spark.sessionState.conf.sessionLocalTimeZone
 
-  /** (column, lo, hi) intervals + (column, probe) equality probes
+  /** (column, lo, hi) intervals + (column, probe hashes) equality probes
     * extracted from the pushed data filters. Conjuncts arrive already
     * split; anything unrecognized is simply not used for pruning. */
   private def pruningHints(dataFilters: Seq[Expression])
-      : (Seq[(String, Long, Long)], Seq[(String, String)]) = {
+      : (Seq[(String, Long, Long)], Seq[(String, Array[Long])]) = {
     val iv = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    val eq = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val eq = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Long])]
     def bound(a: AttributeReference, l: Literal)(f: Long => (Long, Long))
         : Unit =
       canonLong(a.dataType, l.value, tz).foreach { v =>
@@ -736,10 +738,12 @@ final class TxnLogFileIndex private[sources] (
     dataFilters.foreach {
       case EqualTo(a: AttributeReference, l: Literal) if l.value != null =>
         bound(a, l)(v => (v, v))
-        eq += ((a.name, probeString(l.dataType, l.value, tz)))
+        eq += ((a.name,
+          TxnLog.bloomHashes(probeString(l.dataType, l.value, tz))))
       case EqualTo(l: Literal, a: AttributeReference) if l.value != null =>
         bound(a, l)(v => (v, v))
-        eq += ((a.name, probeString(l.dataType, l.value, tz)))
+        eq += ((a.name,
+          TxnLog.bloomHashes(probeString(l.dataType, l.value, tz))))
       case GreaterThan(a: AttributeReference, l: Literal)
           if l.value != null => bound(a, l)(v => (v, Long.MaxValue))
       case GreaterThanOrEqual(a: AttributeReference, l: Literal)
@@ -797,7 +801,7 @@ final class TxnLogFileIndex private[sources] (
     // to the reader through each file's metadata map
     val dvSets =
       if (st.dvFiles.isEmpty) Map.empty[String, Array[Long]]
-      else TxnLog.dvSkipSets(spark, table, st.dvFiles)
+      else TxnLog.dvSkipSets(table, st.dvFiles)
     def withMeta(f: String): FileStatusWithMetadata = {
       val md = dvSets.get(f.split('/').last)
         .map(a => Map[String, Any](TxnLogParquetFileFormat.DvKey -> a))

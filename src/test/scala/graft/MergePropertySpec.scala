@@ -87,11 +87,43 @@ class MergePropertySpec extends SparkSpec {
     out.toMap
   }
 
+  /** The target's rows beyond the drawn keys 0..14 in the LARGE shape:
+    * 300 rows in one file with stats on `k`, so a batch of keys 0..19
+    * touches a few percent of it and the merge masks the rows it changes
+    * with a deletion vector. The SMALL shape is the drawn rows alone, a
+    * file the batch touches heavily, which the merge copies on write.
+    * A NOT MATCHED BY SOURCE clause reads every row, so it copies in
+    * either shape. */
+  private val filler: Map[Int, Int] = (100 until 400).map(k => k -> k % 20).toMap
+
+  /** The commit of a merge took the write strategy its shape implies:
+    * the small shape never masks, and the large one, with no NOT
+    * MATCHED BY SOURCE clause, never copies and masks every row it
+    * changes (`changed`: some target row was updated or deleted). */
+  private def assertStrategy(t: String, v: Long, large: Boolean,
+                             nmbs: Seq[Spec], changed: Boolean,
+                             ctx: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val lines = Files.readAllLines(java.nio.file.Paths.get(t, "_txn_log",
+      f"$v%020d.log")).asScala
+    if (!large) assert(!lines.exists(_.startsWith("dv")), ctx)
+    else if (nmbs.isEmpty) {
+      assert(!lines.exists(_.startsWith("remove\t")), ctx)
+      assert(lines.exists(_.startsWith("dv\t")) == changed, ctx)
+    }
+  }
+
   test("random clause sets: engine snapshot == reference semantics") {
-    val rnd = new scala.util.Random(421551)
-    (1 to 14).foreach { trial =>
+    snapshotTrials(new scala.util.Random(421551), 14, large = false)
+    snapshotTrials(new scala.util.Random(90210), 8, large = true)
+  }
+
+  private def snapshotTrials(rnd: scala.util.Random, trials: Int,
+                             large: Boolean): Unit =
+    (1 to trials).foreach { trial =>
       val tRows = (0 to 14).filter(_ => rnd.nextBoolean())
-        .map(k => k -> rnd.nextInt(20)).toMap
+        .map(k => k -> rnd.nextInt(20)).toMap ++
+        (if (large) filler else Map.empty[Int, Int])
       val sRows = (0 to 19).filter(_ => rnd.nextBoolean())
         .map(k => k -> rnd.nextInt(20)).toMap
       def cond(): Cond = rnd.nextInt(3) match {
@@ -124,12 +156,14 @@ class MergePropertySpec extends SparkSpec {
                 org.apache.spark.sql.types.IntegerType))))
         else spark.createDataFrame(tRows.toSeq).toDF("k", "tv")
       if (tRows.isEmpty) TxnLog.createEmpty(spark, t, tDf.schema)
+      else if (large) TxnLog.create(spark, t, tDf.coalesce(1),
+        statsCols = Seq("k"))
       else TxnLog.create(spark, t, tDf)
       val sDf = spark.createDataFrame(
         (if (sRows.isEmpty) Seq((-99, 0)) else sRows.toSeq))
         .toDF("sk", "sv")
       val sEff = if (sRows.isEmpty) Map(-99 -> 0) else sRows
-      TxnLog.merge(spark, t, sDf, keys = Seq("k"),
+      val v = TxnLog.merge(spark, t, sDf, keys = Seq("k"),
         matched = matched.map(matchedClause),
         notMatched = notMatched.map(insertClause),
         notMatchedBySource = nmbs.map(matchedClause),
@@ -137,13 +171,15 @@ class MergePropertySpec extends SparkSpec {
       val got = TxnLog.snapshot(spark, t).collect()
         .map(r => r.getInt(0) -> r.getInt(1)).toMap
       val want = reference(tRows, sEff, matched, notMatched, nmbs)
-      assert(got == want,
-        s"trial $trial diverged:\n  target=$tRows\n  source=$sEff\n" +
-          s"  matched=$matched\n  notMatched=$notMatched\n" +
-          s"  nmbs=$nmbs\n  engine=$got\n  reference=$want")
+      val ctx = s"trial $trial (large=$large) diverged:\n" +
+        s"  target=$tRows\n  source=$sEff\n" +
+        s"  matched=$matched\n  notMatched=$notMatched\n" +
+        s"  nmbs=$nmbs\n  engine=$got\n  reference=$want"
+      assert(got == want, ctx)
+      assertStrategy(t, v, large, nmbs, referenceChanges(tRows, sEff,
+        matched, notMatched, nmbs).exists(_._1 != "insert"), ctx)
       TempWork.deleteRecursively(dir)
     }
-  }
 
   /** The change rows SQL MERGE implies, as (_change_type, k, tv):
     * pre/post for every fired non-delete matched or NOT MATCHED BY
@@ -175,12 +211,17 @@ class MergePropertySpec extends SparkSpec {
   }
 
   test("random clause sets: change feed == reference change rows") {
+    changeFeedTrials(new scala.util.Random(77031), 12, large = false)
+    changeFeedTrials(new scala.util.Random(60622), 8, large = true)
+  }
+
+  private def changeFeedTrials(rnd: scala.util.Random, trials: Int,
+                               large: Boolean): Unit = {
     import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField,
       StructType}
-    val rnd = new scala.util.Random(77031)
     val schema = StructType(Seq(StructField("k", IntegerType),
       StructField("tv", IntegerType), StructField("d", DoubleType)))
-    (1 to 12).foreach { trial =>
+    (1 to trials).foreach { trial =>
       // a drifting assignment gives another value on every execution;
       // the post-images must still be the rows the snapshot holds
       val drift: Option[Column] = trial % 4 match {
@@ -189,7 +230,8 @@ class MergePropertySpec extends SparkSpec {
         case _ => None
       }
       val tRows = (0 to 14).filter(_ => rnd.nextBoolean())
-        .map(k => k -> rnd.nextInt(20)).toMap
+        .map(k => k -> rnd.nextInt(20)).toMap ++
+        (if (large) filler else Map.empty[Int, Int])
       val sRows = (0 to 19).filter(_ => rnd.nextBoolean())
         .map(k => k -> rnd.nextInt(20)).toMap
       def cond(): Cond = rnd.nextInt(3) match {
@@ -212,10 +254,13 @@ class MergePropertySpec extends SparkSpec {
       val dir = Files.createTempDirectory("graft_mcdf_")
       dir.toFile.deleteOnExit()
       val t = dir.resolve("t").toString
-      if (tRows.isEmpty) TxnLog.createEmpty(spark, t, schema)
-      else TxnLog.create(spark, t, spark.createDataFrame(
+      val tDf = spark.createDataFrame(
         spark.sparkContext.parallelize(tRows.toSeq.map { case (k, tv) =>
-          org.apache.spark.sql.Row(k, tv, k * 0.5) }), schema))
+          org.apache.spark.sql.Row(k, tv, k * 0.5) }), schema)
+      if (tRows.isEmpty) TxnLog.createEmpty(spark, t, schema)
+      else if (large) TxnLog.create(spark, t, tDf.coalesce(1),
+        statsCols = Seq("k"))
+      else TxnLog.create(spark, t, tDf)
       val sEff = if (sRows.isEmpty) Map(-99 -> 0) else sRows
       val v = TxnLog.merge(spark, t,
         spark.createDataFrame(sEff.toSeq).toDF("sk", "sv"), keys = Seq("k"),
@@ -229,9 +274,10 @@ class MergePropertySpec extends SparkSpec {
         .select("_change_type", "k", "tv", "d").collect().toSeq
       val got = changes.map(r => (r.getString(0), r.getInt(1), r.getInt(2)))
       val want = referenceChanges(tRows, sEff, matched, notMatched, nmbs)
-      val ctx = s"trial $trial: target=$tRows source=$sEff " +
+      val ctx = s"trial $trial (large=$large): target=$tRows source=$sEff " +
         s"matched=$matched notMatched=$notMatched nmbs=$nmbs drift=$drift"
       assert(got.sorted == want.sorted, ctx)
+      assertStrategy(t, v, large, nmbs, want.exists(_._1 != "insert"), ctx)
       changes.foreach { r =>
         val k = r.getInt(1)
         r.getString(0) match {

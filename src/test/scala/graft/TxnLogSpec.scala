@@ -2961,6 +2961,127 @@ class TxnLogSpec extends SparkSpec {
     assert(TxnLog.snapshot(spark, t).filter(col("v") === 5).count() == 1)
   }
 
+  /** The action lines of version `v` of table `t`. */
+  private def logLines(t: String, v: Long): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Files.readAllLines(Paths.get(t, "_txn_log", f"$v%020d.log")).asScala.toSeq
+  }
+
+  test("merge key tuples prune jointly: stats on one key, bloom on the other") {
+    val t = freshTable()
+    val day0 = java.time.LocalDate.of(2024, 1, 1)
+    def day(n: Int) = java.sql.Date.valueOf(day0.plusDays(n))
+    // the history ends the day before day0 and holds AA, BB and CC
+    val hist = for (s <- Seq("AA", "BB", "CC"); d <- -100 until 0)
+      yield (s, day(d), d.toDouble)
+    TxnLog.create(spark, t, spark.createDataFrame(hist)
+      .toDF("symbol", "date", "close").coalesce(1),
+      statsCols = Seq("date"), bloomCols = Seq("symbol"))
+    val history = TxnLog.files(t)
+    // old symbols on new dates, a new listing on old dates: the batch's
+    // dates overlap the history's and AA is in its bloom, yet no tuple
+    // passes both tests
+    val batch = spark.createDataFrame(Seq(("AA", day(0), 1.0),
+      ("BB", day(1), 2.0), ("ZZ", day(-50), 3.0), ("ZZ", day(-49), 4.0)))
+      .toDF("symbol", "date", "close")
+    val all = Seq("symbol", "date", "close").map(c => c -> col(s"__s.$c"))
+    val v = TxnLog.merge(spark, t, batch, Seq("symbol", "date"),
+      matched = Seq(TxnLog.MergeClause(None, isDelete = false, all)),
+      notMatched = Seq(TxnLog.MergeClause(None, isDelete = false, all)))
+    assert(history.forall(TxnLog.files(t).contains),
+      "a merge whose tuples miss the history must not touch its file")
+    assert(!logLines(t, v).exists(l =>
+      l.startsWith("remove\t") || l.startsWith("dv")), logLines(t, v))
+    assert(TxnLog.snapshot(spark, t).count() == 304)
+  }
+
+  test("one merge masks a lightly touched file and copies a heavy one") {
+    val t = freshTable()
+    def rows(lo: Int, hi: Int) = spark.range(lo, hi).select(
+      col("id").cast("int").as("k"), (col("id") * 2).cast("int").as("v"))
+      .coalesce(1)
+    TxnLog.create(spark, t, rows(0, 300), statsCols = Seq("k"))
+    TxnLog.append(spark, t, rows(1000, 1010))
+    TxnLog.setProperties(spark, t, Map(TxnLog.RowTrackKey -> "true"))
+    val Seq(big, small) = TxnLog.files(t)
+    val v0 = TxnLog.versions(t).last
+    def table(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "v").collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+    val before = table(TxnLog.snapshot(spark, t))
+    def ids() = TxnLog.snapshotWithRowIds(spark, t).select("k", "_row_id")
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val idsBefore = ids()
+    // one key of the 300-row file (1/300: masked), four of the 10-row
+    // file (4/10: copied), one new key beyond every file
+    val src = spark.createDataFrame(Seq((5, -5), (1000, -1), (1001, -1),
+      (1002, -1), (1003, -1), (5000, 50))).toDF("k", "v")
+    val v = TxnLog.merge(spark, t, src, keys = Seq("k"),
+      matched = Seq(setV), notMatched = Seq(insertKV))
+    val lines = logLines(t, v)
+    assert(lines.contains(s"dvcount\t$big\t1"), lines)
+    assert(lines.count(_.startsWith("dv\t")) == 1, lines)
+    assert(lines.contains(s"remove\t$small") &&
+      !lines.contains(s"remove\t$big"), lines)
+    val want = before ++ Seq(5 -> -5, 5000 -> 50) ++
+      (1000 to 1003).map(_ -> -1)
+    assert(table(TxnLog.snapshot(spark, t)) == want)
+    assert(TxnLog.countRows(t) == Some(want.size.toLong))
+    val cdf = TxnLog.changesBetween(spark, t, v - 1, v)
+      .select("_change_type", "k", "v").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSet
+    assert(cdf == (Seq(5, 1000, 1001, 1002, 1003).flatMap(k =>
+      Seq(("update_preimage", k, before(k)), ("update_postimage", k, want(k))))
+      :+ (("insert", 5000, 50))).toSet)
+    // the masked file's kept rows keep their row ids
+    val idsAfter = ids()
+    (0 until 300).filter(_ != 5).foreach(k =>
+      assert(idsAfter(k) == idsBefore(k), s"row id of kept row $k moved"))
+    assert(idsAfter.values.toSet.size == want.size, "row ids must be unique")
+    assert(table(TxnLog.snapshot(spark, t, Some(v0))) == before)
+    TxnLog.vacuum(t, retainVersions = 1, minAgeMs = 0L)
+    assert(!Files.exists(Paths.get(t, small)), "vacuum must delete the copied file")
+    assert(table(TxnLog.snapshot(spark, t)) == want)
+  }
+
+  test("a file's bloom is sized to the values it holds") {
+    val t = freshTable()
+    TxnLog.create(spark, t, spark.range(300).select(
+      concat(lit("s"), col("id")).as("sym"), col("id").as("k")).coalesce(1),
+      bloomCols = Seq("sym"))
+    val bloom = logLines(t, 1L).filter(_.startsWith("bloom\t"))
+    assert(bloom.size == 1, bloom)
+    val m = bloom.head.split('\t')(3).toInt
+    assert(m <= (1 << 15), s"a 300-value file's bloom has $m bits")
+    (0 until 300).foreach(i => assert(
+      TxnLog.snapshotWhereEq(spark, t, "sym", s"s$i").inputFiles.length == 1,
+      s"committed value s$i must probe positive"))
+  }
+
+  test("planning a snapshot over a fresh deletion vector starts no job") {
+    val t = freshTable()
+    TxnLog.create(spark, t, spark.range(100)
+      .select(col("id").cast("int").as("k")).coalesce(1))
+    TxnLog.deleteWhereDV(spark, t, col("k") < 10)
+    TxnLog.clearStateCaches() // decode the committed DV file from disk
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(l)
+    val got = try TxnLog.snapshot(spark, t).collect()
+    finally {
+      org.apache.spark.ListenerDrain(sc)
+      sc.removeSparkListener(l)
+    }
+    assert(got.length == 90)
+    assert(jobs.get == 1, s"${jobs.get} jobs: planning decoded the DV " +
+      "file with a Spark job")
+  }
+
   test("general MERGE prunes files on the merge keys") {
     val t = freshTable()
     TxnLog.create(spark, t,
